@@ -232,7 +232,7 @@ def merges_df(spark, merges: list[tuple[str, str]]) -> DataFrame:
 
     Built as ONE literal expression string (single parse) rather than
     createDataFrame: the pickled ExistingRDD scan re-serializes every row
-    per action, and the interleaved A/B (tools/literal_seeds_ab.py)
+    per action, and the interleaved A/B (OPTIMIZATION_r11.md)
     measured build+action 0.63 -> 0.25 s at 200 merges. The per-element
     F.lit route (operators.common.literal_df) stays rejected — py4j
     Column construction per cell is the known plan-build tax; and the

@@ -12,10 +12,10 @@ driver state is the centroid matrix itself.
 Oracle parity: every distance is expressed through dot products
 (x.x - 2 x.c + c.c) computed by the order-preserving pure-JVM HOF kernel
 (similarity._dot_hof — left-to-right float64 accumulation), which is
-bit-identical to DuckDB's list_dot_product (and to the _dot_seq pandas
-kernel it replaced); centroid means use exact DECIMAL sums (the repo's
-no-round() policy), so a chained-CTE DuckDB oracle reproduces the full
-iteration history bit-for-bit. Deterministic init: the k lowest-id vectors.
+bit-identical to DuckDB's list_dot_product; centroid means use exact
+DECIMAL sums (the repo's no-round() policy), so a chained-CTE DuckDB oracle
+reproduces the full iteration history bit-for-bit. Deterministic init:
+the k lowest-id vectors.
 """
 
 from __future__ import annotations
@@ -39,12 +39,12 @@ def _assign(emb: DataFrame, centroids: list[tuple[int, list[float]]], id_col: st
     cdf = spark.createDataFrame(
         [(cid, vec) for cid, vec in centroids], "cluster_id int, cvec array<double>"
     )
-    # pure-JVM HOF dots (similarity._dot_hof), not the _dot_seq pandas UDF:
-    # bit-identical left-to-right float64 accumulation on already-double
-    # arrays (pinned by test_cosine_topk_catalyst_matches_kernel), and the
-    # per-iteration assignment plan loses both ArrowEvalPython stages
-    # (tools/hof_ab.py A/B). Operands are real columns from prior
-    # projections (the _dot_hof interpreted-inlining caveat).
+    # pure-JVM HOF dots (similarity._dot_hof): left-to-right float64
+    # accumulation on already-double arrays (pinned by
+    # test_cosine_topk_catalyst_matches_kernel), and the per-iteration
+    # assignment plan has no ArrowEvalPython stage (HOF_AB_r11.json A/B).
+    # Operands are real columns from prior projections (the _dot_hof
+    # interpreted-inlining caveat).
     cdf = cdf.withColumn("cc", F.expr(_dot_hof("cvec", "cvec")))
     scored = (
         emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("v"))
@@ -169,7 +169,7 @@ def kmeans_centroids_fast(
                     # n_batch x k doubles — 524 MB transient per worker at
                     # k=1000 and 65536-row batches, which thrashes the
                     # allocator across 32 workers (same fix as
-                    # _cell_assignments_fast; tools/assign_ab.py measured
+                    # _cell_assignments_fast; OPTIMIZATION_r10.md measured
                     # 63 -> 3.4 s there). Same argmin per row.
                     a = np.empty(V.shape[0], dtype=np.int64)
                     # ~8M score doubles per chunk; chunk_rows overrides

@@ -8,14 +8,15 @@ Two tiers, matching how a 100 TB pipeline actually runs ANN:
     from md5 so runs are reproducible) bucket the corpus; queries probe only
     their bucket. Trades recall for touching ~1/2^bits of the data.
 
-Dot products run in an Arrow-batched pandas UDF over numpy. The kernel is
-vectorized ACROSS rows but accumulates sequentially ACROSS dimensions
-(left-to-right), so every sum is bit-identical to both the previous
-zip_with/aggregate formulation and DuckDB's list_dot_product — float32
-inputs cast to double make each product exact (24+24 < 53 mantissa bits),
-leaving summation order as the only parity risk, which the sequential loop
-removes. (The pure-Catalyst higher-order-function version this replaces
-evaluated INTERPRETED and was ~100x slower — ARCHITECTURE §3.)
+Dot products and norms run JVM-side as higher-order-function folds
+(_dot_hof) over float64 twins of the vector columns, so scoring adds no
+Python stage. Every sum is bit-identical to DuckDB's list_dot_product:
+float32 inputs cast to double make each product exact (24+24 < 53
+mantissa bits), and the fold accumulates left to right from 0.0, which
+removes the only remaining parity risk, summation order. Python kernels
+remain only where they measured faster: the map-side top-k of cosine_topk
+and the batch argmin of _cell_assignments_fast (HOF_AB_r11.json and
+OPTIMIZATION_r10/r11.md hold the A/B measurements behind these choices).
 """
 
 from __future__ import annotations
@@ -24,65 +25,21 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, IntegerType
-
-
-# DoubleType() instance (not the DDL string "double"): the string form is
-# parsed via the active session at import time, and this module must be
-# importable before any SparkSession exists.
-@pandas_udf(DoubleType())
-def _dot_seq(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Row-wise dot product with left-to-right accumulation over dims.
-
-    np.dot / BLAS is NOT used on purpose: its pairwise/SIMD partial sums can
-    differ from sequential summation in the last ulp, which would break
-    hash-parity with the DuckDB oracle."""
-    if len(a) == 0:
-        return pd.Series([], dtype="float64")
-    va = np.vstack(a.to_numpy()).astype(np.float64, copy=False)
-    vb = np.vstack(b.to_numpy()).astype(np.float64, copy=False)
-    acc = np.zeros(va.shape[0], dtype=np.float64)
-    for j in range(va.shape[1]):
-        acc += va[:, j] * vb[:, j]
-    return pd.Series(acc)
-
-
-def norm_col(vec_col) -> F.Column:
-    """L2 norm of an array column (sqrt applied JVM-side)."""
-    return F.sqrt(_dot_seq(vec_col, vec_col))
-
-
-def cosine(a, b):
-    """Cosine similarity expression (kept for API compatibility; the top-k
-    paths precompute per-row norms instead of re-deriving them per pair)."""
-    return _dot_seq(a, b) / (norm_col(a) * norm_col(b))
-
-
-def _dot_unrolled(a: str, b: str, dim: int) -> str:
-    """Dot product UNROLLED to a codegen-friendly SQL expression string:
-    a[0]*b[0] + a[1]*b[1] + ... — SQL `+` is left-associative, so this
-    accumulates left-to-right over dimensions, the identical operation
-    order to _dot_seq and DuckDB's list_dot_product; values stay
-    hash-exact. Requires a uniform, known dim (ragged arrays would
-    silently truncate) — callers probe it from the dataset footer
-    driver-side (common.probe_array_dim). Note the analyzer+codegen cost
-    of the ~3*dim-term tree is paid PER ACTION (~0.4-0.7 s at dim=64);
-    _dot_hof below is the constant-size-tree form that avoids it."""
-    return " + ".join(f"{a}[{i}] * {b}[{i}]" for i in range(dim))
 
 
 def _dot_hof(a: str, b: str) -> str:
     """Dot product as higher-order functions — a CONSTANT-size expression
     tree whatever the dim: aggregate folds (0 + p0) + p1 + ... strictly
-    left-to-right, so values are bit-identical to _dot_unrolled/_dot_seq
-    (pinned by test_cosine_topk_catalyst_matches_kernel). Needs no known
-    dim and re-analyzes in milliseconds where the unrolled tree costs
-    0.4-0.7 s per action. CAVEAT that sank an earlier HOF attempt: `a`/`b`
-    must name REAL columns from a PRIOR projection — referencing a
-    same-projection transform() alias makes the analyzer inline that
-    transform into every element access, and the resulting tree evaluates
-    interpreted (~2 s for 6k pairs x 64 dims). With materialized operand
+    left-to-right, so values are bit-identical to an unrolled
+    a[0]*b[0] + a[1]*b[1] + ... chain and to the numpy kernel of
+    cosine_topk (pinned by test_cosine_topk_catalyst_matches_kernel).
+    Needs no known dim and re-analyzes in milliseconds where an unrolled
+    tree costs 0.4-0.7 s per action. CAVEAT that sank an earlier HOF
+    attempt: `a`/`b` must name REAL columns from a PRIOR projection —
+    referencing a same-projection transform() alias makes the analyzer
+    inline that transform into every element access, and the resulting
+    tree evaluates interpreted (~2 s for 6k pairs x 64 dims). With materialized operand
     columns this form times identically to the unrolled codegen chain at
     bench scale (measured 0.33 s scored-count either way, sf0.1)."""
     return (
@@ -92,11 +49,11 @@ def _dot_hof(a: str, b: str) -> str:
 
 
 def _hof_norm(col: str) -> str:
-    """L2 norm as the HOF self-dot + sqrt — the pure-JVM twin of norm_col
-    (identical value: per-element float64 squares are exact, accumulation
-    is left-to-right, sqrt is correctly rounded). `col` must be a float64
-    twin materialized in a PRIOR projection (the _dot_hof caveat; use
-    _with_double_vec), or products round in the array's element type."""
+    """L2 norm as the HOF self-dot + sqrt (per-element float64 squares are
+    exact, accumulation is left-to-right, sqrt is correctly rounded).
+    `col` must be a float64 twin materialized in a PRIOR projection (the
+    _dot_hof caveat; use _with_double_vec), or products round in the
+    array's element type."""
     return f"sqrt({_dot_hof(col, col)})"
 
 
@@ -211,6 +168,10 @@ def _score_block(pdf, qarrays, exclude_label_col, k):
     )
 
 
+# query-set size up to which cosine_topk re-ranks in one partition
+_SMALL_NQ = 64
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -218,7 +179,6 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     exclude_label_col: str | None = None,
-    small_nq_threshold: int = 64,
     single_task: bool = False,
 ) -> DataFrame:
     """Exact top-k neighbors per query: (query_id, vec_id, cosine, rank).
@@ -234,7 +194,7 @@ def cosine_topk(
 
     Bit-parity with the oracle: products and norms accumulate left-to-right
     over dims in float64 (dim-major loop — identical operation order to
-    _dot_seq and DuckDB's list_dot_product), and cosine divides by
+    _dot_hof and DuckDB's list_dot_product), and cosine divides by
     (qnorm * cnorm) in that order. Rank ties break by vec_id, so the result
     is total-ordered and hash-stable; a per-batch top-k by the same order is
     always a superset of the batch's contribution to the global top-k.
@@ -344,7 +304,7 @@ def cosine_topk(
         score_batches, f"query_id {q_id_t}, vec_id {c_id_t}, cosine double"
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    if nq <= small_nq_threshold:
+    if nq <= _SMALL_NQ:
         # small query set: the candidate pool is ≤ n_batches x nq x k rows —
         # shuffle it to ONE partition and finish JVM-side (window + in-
         # partition sort) instead of `orderBy`, whose range exchange runs a
@@ -386,24 +346,10 @@ def cosine_near_dup_pairs(
     equi-join on the hyperplane signature), so the pair space scales with
     bucket occupancy, not n^2; recall follows the hyperplane collision
     bound P(same bucket) = (1 - theta/pi)^n_planes."""
-    # scoring via the pure-JVM HOF dot on per-side float64 twins, not the
-    # _dot_seq pandas UDF — bit-identical values (exact per-element casts +
-    # the same left-to-right accumulation; pinned by
-    # test_cosine_topk_catalyst_matches_kernel) with ZERO ArrowEvalPython
-    # stages: the UDF form paid SIX (norm per side, both duplicated by
-    # filter pushdown, plus the pair dot evaluated under the threshold
-    # filter AND again in the projection — the guide §4.4 double-eval).
-    # At corpus scale the pair stream no longer crosses the Python boundary
-    # at all (tools/hof_ab.py: interleaved A/B at this site's own volume).
-    sig = _with_double_vec(
-        corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("vec"),
-            lsh_signature(F.col(vec_col), dim, n_planes).alias("bucket"),
-        ),
-        "vec",
-        "vd",
-    ).selectExpr("vec_id", "bucket", "vd", f"{_hof_norm('vd')} AS nrm")
+    # signature, norms and pair dots all fold JVM-side: no Python stage,
+    # and the pair stream never crosses the Python boundary
+    # (HOF_AB_r11.json: interleaved A/B at this site's own volume)
+    sig = _bucketed(corpus, id_col, vec_col, "vec_id", "vd", "nrm", dim, n_planes)
     a = sig.select(
         F.col("vec_id").alias("id_a"), F.col("vd").alias("va"), F.col("nrm").alias("na"), "bucket"
     )
@@ -453,13 +399,13 @@ def _cell_assignments(
     vector to its cell; >1 gives a query its probe list. Preserves the
     input columns and adds `cell`."""
     keep = [c for c in vecs.columns]
-    # scoring via the pure-JVM HOF dot (_dot_hof), not the _dot_seq pandas
-    # UDF: bit-identical left-to-right float64 accumulation (pinned by
-    # test_cosine_topk_catalyst_matches_kernel) with no ArrowEvalPython
-    # stage — interleaved A/B at 1M vectors x 1000 cells measured the UDF
-    # form 4.2x slower on the probe's scored join (tools/probe_profile.py).
-    # The float64 twins are projected on each SIDE before the join, so the
-    # per-element cast runs once per input row, not once per pair
+    # scoring via the pure-JVM HOF dot (_dot_hof): left-to-right float64
+    # accumulation (pinned by test_cosine_topk_catalyst_matches_kernel) with
+    # no ArrowEvalPython stage — interleaved A/B at 1M vectors x 1000 cells
+    # measured a pandas-UDF dot 4.2x slower on the probe's scored join
+    # (OPTIMIZATION_r10.md, persisted IVF store). The float64 twins are
+    # projected on each SIDE before the join, so the per-element cast runs
+    # once per input row, not once per pair
     scored = (
         _with_double_vec(vecs, vec_alias, "__vd")
         .crossJoin(F.broadcast(_with_double_vec(seeds, "svec", "__sd")))
@@ -475,8 +421,8 @@ def _cell_assignments(
     # NULLS LAST: HOF scoring null-pads dimension-mismatched arrays
     # (zip_with) and propagates null elements, so a malformed vector scores
     # NULL — under the default ASC (nulls first) it would silently win
-    # rank 1 where the old _dot_seq UDF raised loudly. Ordering of non-null
-    # scores is unchanged, so values/oracle hashes are identical.
+    # rank 1. Ordering of non-null scores is unchanged, so values/oracle
+    # hashes are identical.
     w = Window.partitionBy(id_alias).orderBy(F.asc_nulls_last("score"), F.asc("cell"))
     return (
         scored.withColumn("crank", F.row_number().over(w))
@@ -510,9 +456,9 @@ def ivf_topk(
             .limit(n_cells)
             .select(F.col(id_col).alias("cell"), F.col(vec_col).alias("svec"))
         )
-    # norms via the HOF self-dot on a float64 twin (bit-identical to
-    # norm_col's _dot_seq; see _hof_norm) — no ArrowEvalPython on either
-    # scan; the twin is projected away so downstream shapes are unchanged
+    # norms via the HOF self-dot on a float64 twin (_hof_norm) — no
+    # ArrowEvalPython on either scan; the twin is projected away so
+    # downstream shapes are unchanged
     c = _with_double_vec(
         corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cvec")),
         "cvec", "__nt",
@@ -532,9 +478,9 @@ def ivf_topk(
         .select(
             "query_id",
             "vec_id",
-            # HOF dot, not the _dot_seq pandas UDF — bit-identical, no
-            # Python stage (4.2x on the probe join; tools/probe_profile.py);
-            # per-side float64 twins keep products exact on float32 input
+            # HOF dot, no Python stage (a pandas-UDF dot measured 4.2x
+            # slower on the probe join, OPTIMIZATION_r10.md); per-side
+            # float64 twins keep products exact on float32 input
             (F.expr(_dot_hof("__qd", "__cd")) / (F.col("qnorm") * F.col("cnorm"))).alias("cosine"),
         )
     )
@@ -582,7 +528,7 @@ def _cell_assignments_fast(
             # under the resulting allocator/THP thrash). Chunking bounds
             # the transient to ~64 MB; same argmin per row. Interleaved
             # A/B at 1M x 1000 cells: 63.4 s -> 3.4 s median and the
-            # variance collapses (tools/assign_ab.py).
+            # variance collapses (OPTIMIZATION_r10.md).
             out = np.empty(V.shape[0], dtype=np.int64)
             # ~8M score doubles per chunk; chunk_rows overrides for tests
             # (prod batches never split below n_cells ~8k). Caveat: BLAS
@@ -647,9 +593,8 @@ def build_ann_index(
     seeds.write.mode("overwrite").parquet(
         live_table_dir(_os.path.join(index_dir, "seeds"), index_fs)
     )
-    # cnorm via the HOF self-dot on a float64 twin — bit-identical to the
-    # former norm_col (_hof_norm), and the BUILD no longer pays an
-    # ArrowEvalPython pass over the whole corpus just to compute norms
+    # cnorm via the HOF self-dot on a float64 twin (_hof_norm), so the
+    # build pays no ArrowEvalPython pass over the whole corpus for norms
     c = _with_double_vec(
         corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cvec"),
                       *[F.col(m) for m in (meta_cols or [])]),
@@ -910,8 +855,8 @@ def ann_query_index(
     from duckdb_routing_spark.operators.fs import live_table_dir
 
     seeds = spark.read.parquet(live_table_dir(_os.path.join(index_dir, "seeds"), index_fs))
-    # qnorm via the HOF self-dot on a float64 twin (bit-identical to the
-    # former norm_col) — the probe plan has no Python stage left at all
+    # qnorm via the HOF self-dot on a float64 twin (_hof_norm) — the probe
+    # plan has no Python stage
     q = _with_double_vec(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")),
         "qvec", "__nt",
@@ -938,9 +883,9 @@ def ann_query_index(
         .select(
             "query_id",
             "vec_id",
-            # HOF dot, not the _dot_seq pandas UDF — bit-identical, no
-            # Python stage (4.2x on the probe join; tools/probe_profile.py);
-            # per-side float64 twins keep products exact on float32 input
+            # HOF dot, no Python stage (a pandas-UDF dot measured 4.2x
+            # slower on the probe join, OPTIMIZATION_r10.md); per-side
+            # float64 twins keep products exact on float32 input
             (F.expr(_dot_hof("__qd", "__cd")) / (F.col("qnorm") * F.col("cnorm"))).alias("cosine"),
         )
     )
@@ -984,10 +929,9 @@ def semantic_dedup(
             .select(F.col(id_col).alias("cell"), F.col(vec_col).alias("svec"))
         )
     # HOF dot + norm on a per-side float64 twin (the _with_double_vec
-    # idiom), not the _dot_seq pandas UDF: bit-identical values, no
-    # ArrowEvalPython stage on the corpus scan or the cell-local pair
-    # stream (tools/hof_ab.py A/B at volume). The twin `vd` doubles as the
-    # assignment input, so the cast runs once per corpus row.
+    # idiom): no ArrowEvalPython stage on the corpus scan or the cell-local
+    # pair stream (HOF_AB_r11.json A/B at volume). The twin `vd` doubles as
+    # the assignment input, so the cast runs once per corpus row.
     c = _with_double_vec(
         corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")), "v", "vd"
     ).selectExpr("vec_id", "vd", f"{_hof_norm('vd')} AS nrm")
@@ -1010,34 +954,11 @@ def semantic_dedup(
 # LSH-bucketed ANN (random hyperplanes, md5-derived => deterministic)
 # ---------------------------------------------------------------------------
 
-def _plane_component(p: int, j: int):
-    """Pseudo-random hyperplane component in [-7.5, 7.5]: nibble of a hash,
-    centered. Deterministic across engines/runs."""
-    nib = F.conv(F.substring(F.md5(F.lit(f"plane:{p}:{j}")), 1, 1), 16, 10).cast("double")
-    return nib - 7.5
-
-
-def lsh_signature(vec_col, dim: int, n_planes: int = 8):
-    """Bit signature: bit p = (v . plane_p) > 0.
-
-    Pure-Catalyst form: unrolls dim x n_planes expression nodes. Ideal for
-    the oracle (DuckDB can evaluate the same SQL) at toy dims, pathological
-    past ~32 dims (dim 768 -> ~6k expression nodes in one projection);
-    lsh_signature_batch_udf is the scale form with identical output."""
-    sig = F.lit(0)
-    v = vec_col
-    for p in range(n_planes):
-        dot = F.lit(0.0)
-        for j in range(dim):
-            dot = dot + F.element_at(v, j + 1).cast("double") * _plane_component(p, j)
-        sig = sig + F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return sig
-
-
 def plane_matrix(dim: int, n_planes: int = 8) -> np.ndarray:
-    """The md5-derived hyperplane matrix (n_planes x dim) as numpy — the
-    exact values _plane_component produces in SQL (first md5 hex nibble,
-    centered to [-7.5, 7.5])."""
+    """The md5-derived hyperplane matrix (n_planes x dim): component j of
+    plane p is the first hex nibble of md5('plane:{p}:{j}') centered to
+    [-7.5, 7.5] — deterministic across engines and runs, and the same
+    values the DuckDB oracle derives in SQL."""
     import hashlib
 
     return np.array(
@@ -1049,38 +970,46 @@ def plane_matrix(dim: int, n_planes: int = 8) -> np.ndarray:
     )
 
 
-def lsh_signature_batch_udf(dim: int, n_planes: int = 8):
-    """Arrow-batched signature kernel for real embedding dims: one plan node
-    regardless of dim (vs dim x n_planes Catalyst nodes in lsh_signature).
+def lsh_signature(vec_col: str, dim: int, n_planes: int = 8) -> F.Column:
+    """Bit signature over the first `dim` components: bit p = (v . plane_p) > 0.
 
-    BIT-IDENTICAL to the Catalyst form: the dot accumulates left-to-right
-    over dimensions (acc += v[j] * plane[:, j], vectorized across rows and
-    planes but sequential across dims — the same IEEE operation order as the
-    unrolled expression), so a near-zero dot can never flip a bucket bit
-    between the two forms."""
-    planes = plane_matrix(dim, n_planes)  # captured; ships with the closure
-    weights = (1 << np.arange(n_planes, dtype=np.int64))
+    One _dot_hof fold per plane against a literal plane array from
+    plane_matrix, so the expression has n_planes folds whatever the dim and
+    runs JVM-side. `vec_col` must name a float64 twin materialized by a
+    PRIOR projection (_with_double_vec; the _dot_hof caveat). Bit-identical
+    to the oracle's explicit addition chain: a float32 value cast to double
+    times a half-integer plane component is exact, and the fold adds left
+    to right from 0.0. A vector shorter than `dim` raises, where a bare
+    fold would null-pad it into bucket 0; a NULL vector lands in bucket 0."""
+    v = (
+        f"IF({vec_col} IS NOT NULL AND size({vec_col}) < {dim}, "
+        f"raise_error(format_string('lsh_signature: vector of %d elements, dim is {dim}', "
+        f"size({vec_col}))), slice({vec_col}, 1, {dim}))"
+    )
+    # IF(.., bit, 0) stays non-nullable even when a fold is NULL, so the
+    # bucket equi-join infers no isnotnull(bucket) filter that would
+    # evaluate every fold a second time below the projection
+    bits = []
+    for p, plane in enumerate(plane_matrix(dim, n_planes)):
+        arr = "array(" + ", ".join(f"{x}D" for x in plane) + ")"
+        bits.append(f"IF({_dot_hof(v, arr)} > 0, {1 << p}, 0)")
+    return F.expr(" + ".join(bits))
 
-    @pandas_udf("int")
-    def sig(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        # use exactly the first `dim` components, like the Catalyst form
-        # (vectors may be wider than the signature dimensionality)
-        mat = np.vstack(v.to_numpy()).astype(np.float64, copy=False)[:, : planes.shape[1]]
-        acc = np.zeros((mat.shape[0], planes.shape[0]), dtype=np.float64)
-        for j in range(planes.shape[1]):
-            acc += mat[:, j : j + 1] * planes[:, j]
-        return pd.Series(((acc > 0) @ weights).astype(np.int32))
 
-    # asNondeterministic (guide §4.4): the downstream equi-join on the
-    # signature pushes isnotnull(bucket) below this projection, and the
-    # optimizer then evaluates the UDF TWICE per input row (once under the
-    # pushed filter, once in the projection — plan-verified, two
-    # ArrowEvalPython nodes per side). The function is in fact
-    # deterministic, so values are unchanged; the flag only stops the
-    # optimizer duplicating the expensive expression.
-    return sig.asNondeterministic()
+def _bucketed(
+    df: DataFrame, id_col: str, vec_col: str, id_alias: str, twin: str, norm: str,
+    dim: int, n_planes: int,
+) -> DataFrame:
+    """(id_alias, bucket, twin, norm): the LSH bucket and L2 norm of each
+    vector, both folded over a float64 twin from a prior projection."""
+    return _with_double_vec(
+        df.select(F.col(id_col).alias(id_alias), F.col(vec_col).alias("__v")), "__v", twin
+    ).select(
+        id_alias,
+        lsh_signature(twin, dim, n_planes).alias("bucket"),
+        twin,
+        F.expr(_hof_norm(twin)).alias(norm),
+    )
 
 
 def ann_lsh_topk(
@@ -1091,43 +1020,14 @@ def ann_lsh_topk(
     n_planes: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    catalyst_signature: bool | None = None,
 ) -> DataFrame:
     """Approximate top-k: bucket by hyperplane signature, rank within the
     query's bucket only. At scale the corpus is written bucket-partitioned
-    once and probed many times.
-
-    Signature form: Catalyst expressions at toy dims (SQL-oracle-able),
-    the Arrow-batched kernel past 32 dims (identical output, one plan node);
-    catalyst_signature forces a form."""
-    use_catalyst = catalyst_signature if catalyst_signature is not None else dim <= 32
-    if use_catalyst:
-        def sig_col(c):
-            return lsh_signature(c, dim, n_planes)
-    else:
-        sig_col = lsh_signature_batch_udf(dim, n_planes)
-    # HOF dot + norm on per-side float64 twins (bit-identical to the
-    # _dot_seq pandas UDF; tools/hof_ab.py A/B) — the signature kernel is
-    # then the ONLY Python stage left (none at all in the Catalyst-
-    # signature dims), and the bucket-local pair stream stays JVM-side.
-    sig_corpus = _with_double_vec(
-        corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("cvec"),
-            sig_col(F.col(vec_col)).alias("bucket"),
-        ),
-        "cvec",
-        "cd",
-    ).selectExpr("vec_id", "bucket", "cd", f"{_hof_norm('cd')} AS cnorm")
-    sig_q = _with_double_vec(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            sig_col(F.col(vec_col)).alias("bucket"),
-        ),
-        "qvec",
-        "qd",
-    ).selectExpr("query_id", "bucket", "qd", f"{_hof_norm('qd')} AS qnorm")
+    once and probed many times."""
+    # signature, norm and dot all fold JVM-side over per-side float64 twins
+    # (HOF_AB_r11.json A/B), so the plan has no Python stage
+    sig_corpus = _bucketed(corpus, id_col, vec_col, "vec_id", "cd", "cnorm", dim, n_planes)
+    sig_q = _bucketed(queries, id_col, vec_col, "query_id", "qd", "qnorm", dim, n_planes)
     scored = (
         sig_corpus.join(F.broadcast(sig_q), "bucket")
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -1197,10 +1097,10 @@ def pq_encode(corpus: DataFrame, codebook: DataFrame, dim: int = 64, m: int = 8,
         "sub",
         "subd",
     )
-    # HOF dots on float64 twins, not the _dot_seq pandas UDF — bit-identical
-    # (tools/hof_ab.py A/B at encode volume); dot(c,c) is constant per
-    # codebook entry, so it is computed ONCE per m*k broadcast row instead
-    # of per (vector, subspace, code) pair (same value attached by the join)
+    # HOF dots on float64 twins (HOF_AB_r11.json A/B at encode volume);
+    # dot(c,c) is constant per codebook entry, so it is computed ONCE per
+    # m*k broadcast row instead of per (vector, subspace, code) pair (same
+    # value attached by the join)
     cb = _with_double_vec(codebook, "cvec", "cvecd").selectExpr(
         "s", "code", "cvecd", f"{_dot_hof('cvecd', 'cvecd')} AS cc"
     )

@@ -465,21 +465,20 @@ def sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = table(spark, sf_dir, "embeddings")
     # bounded-corpus dispatch by SOURCE size (the small-call pattern,
-    # ARCHITECTURE.md §2): a corpus this small scores fastest fully
-    # JVM-side in ONE action (no query-side collect job, no Arrow worker);
+    # ARCHITECTURE.md §2): a corpus this small scores fastest in ONE
+    # mapInPandas task of ONE job (no query-side collect job);
     # past the threshold the distributed map-side top-k kernel takes over.
     # dataset_bytes, not getsize: a directory dataset must measure its
     # part files, not the directory inode (~4 KB).
-    # dataset_bytes, not getsize: a directory dataset must measure its part
-    # files, not the directory inode (~4 KB).
     path = os.path.join(sf_dir, "embeddings.parquet")
     small = common.dataset_bytes(path) < 256 * 1024 * 1024
     queries = emb.filter(F.col("vec_id") < 3)
-    # A pure-JVM single-action form exists (cosine_topk_catalyst) and was
-    # A/B'd here: per-action re-analysis + codegen of its 192-term unrolled
-    # dot-product tree costs 0.40-0.70 s at every count() (bench re-derives
-    # a QueryExecution per action), losing to the fused Arrow kernel. The
-    # single-task path now rides ONE job (queries tagged into the same
+    # A pure-JVM single-action form exists (cosine_topk_catalyst). It was
+    # A/B'd here when its dots were a 192-term unrolled tree, whose
+    # per-action re-analysis + codegen cost 0.40-0.70 s at every count()
+    # (ARCHITECTURE.md §3 item 4), and lost to the fused Arrow kernel; its
+    # HOF-dot form has not been re-measured at this site. The
+    # single-task path rides ONE job (queries tagged into the same
     # scan); its measured ~0.25 s floor is the Python-worker Arrow stage
     # itself (a passthrough mapInPandas over this corpus costs the same),
     # i.e. the irreducible small-scale cost of any Python kernel — the
@@ -557,7 +556,7 @@ def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _plane_comp_sql(p: int, j: int) -> str:
-    """DuckDB mirror of similarity._plane_component: md5-nibble - 7.5
+    """DuckDB mirror of similarity.plane_matrix[p, j]: md5-nibble - 7.5
     (strpos is 1-based, so nibble-7.5 == strpos-8.5)."""
     return f"(strpos('0123456789abcdef', substring(md5('plane:{p}:{j}'), 1, 1)) - 8.5)"
 
@@ -565,8 +564,8 @@ def _plane_comp_sql(p: int, j: int) -> str:
 def _bucket_sql(vcol: str, dim: int = 64, n_planes: int = 4) -> str:
     """Hyperplane bucket id: bit p = (v . plane_p) > 0. The dot product is an
     EXPLICIT left-associated addition chain starting at 0.0 — the exact
-    accumulation order of the Spark expression — so the sign test agrees
-    bit-for-bit."""
+    accumulation order of the fold in similarity.lsh_signature — so the
+    sign test agrees bit-for-bit."""
     plane_bits = []
     for p in range(n_planes):
         terms = " + ".join(f"{vcol}[{j + 1}] * {_plane_comp_sql(p, j)}" for j in range(dim))

@@ -362,28 +362,13 @@ def test_frame_sample(spark, docs):
         assert sorted(r.frame_no for r in rows) == list(range(expect))
 
 
-def test_batch_lsh_signature_bit_identical_to_catalyst(spark, emb):
-    """The Arrow-batched signature kernel must produce the SAME bucket for
-    every vector as the unrolled Catalyst expression (same md5 planes, same
-    left-to-right IEEE accumulation order), so the two forms are
-    interchangeable — the Catalyst form stays only because DuckDB can oracle
-    it at toy dims."""
-    dim = 8  # fixture embedding dim
-    cat = emb.select(
-        "vec_id", similarity.lsh_signature(F.col("embedding"), dim, 8).alias("sig")
-    )
-    batch = emb.select(
-        "vec_id", similarity.lsh_signature_batch_udf(dim, 8)(F.col("embedding")).alias("sig")
-    )
-    diff = cat.join(batch, "vec_id").filter(cat.sig != batch.sig).count()
-    assert diff == 0
-
-
 def test_ann_high_dim_plan_stays_bounded(spark):
-    """At dim 256 the Catalyst signature would unroll 256 x 8 x 2 expression
-    nodes into one projection; the batch kernel must keep the analyzed plan
-    small and carry no element_at unrolling."""
+    """At dim 256 an unrolled signature would put 256 x 8 x 2 expression
+    nodes into one projection; the HOF signature must keep the analyzed
+    plan small, carry no element_at unrolling and add no Python stage."""
     import numpy as np
+
+    from duckdb_routing_spark.plans import audit
 
     rng = np.random.default_rng(7)
     dim, n = 256, 200
@@ -393,12 +378,12 @@ def test_ann_high_dim_plan_stays_bounded(spark):
     df = spark.createDataFrame(pdf)
     out = similarity.ann_lsh_topk(df, df.filter(F.col("vec_id") < 3), dim=dim, k=5)
     plan = out._jdf.queryExecution().analyzed().toString()
-    assert "element_at" not in plan, "high-dim ANN fell back to the unrolled Catalyst signature"
+    assert "element_at" not in plan, "high-dim ANN fell back to an unrolled signature"
     assert len(plan) < 200_000
+    assert audit.python_eval_stages(out) == 0
     rows = out.collect()
     assert len(rows) > 0
-    # sanity: buckets were computed by the batch kernel — recompute one
-    # signature driver-side from the same plane matrix and compare
+    # recompute one signature driver-side from the same plane matrix
     planes = similarity.plane_matrix(dim, 8)
     v = np.array(pdf.embedding.iloc[0])
     acc = np.zeros(8)
@@ -406,12 +391,34 @@ def test_ann_high_dim_plan_stays_bounded(spark):
         acc += v[j] * planes[:, j]
     want = int(((acc > 0) @ (1 << np.arange(8))).item())
     got = (
-        df.filter(F.col("vec_id") == 0)
-        .select(similarity.lsh_signature_batch_udf(dim, 8)(F.col("embedding")).alias("s"))
+        similarity._with_double_vec(df.filter(F.col("vec_id") == 0), "embedding", "vd")
+        .select(similarity.lsh_signature("vd", dim, 8).alias("s"))
         .collect()[0]
         .s
     )
     assert got == want
+
+
+@pytest.mark.parametrize(
+    "run",
+    [
+        lambda df: similarity.ann_lsh_topk(df, df.filter("vec_id = 0"), dim=4, k=5, n_planes=4),
+        lambda df: similarity.cosine_near_dup_pairs(df, threshold=0.0, dim=4, n_planes=4),
+    ],
+    ids=["ann_lsh_topk", "cosine_near_dup_pairs"],
+)
+def test_lsh_signature_rejects_vector_shorter_than_dim(spark, run):
+    """A vector shorter than `dim` must raise, not be null-padded by the
+    fold into bucket 0; the same frame without it runs."""
+    df = spark.createDataFrame(
+        [(0, [1.0, 2.0, 3.0, 4.0]), (1, [1.0, 2.0]), (2, [0.5, -0.5, 0.5, 0.5])],
+        "vec_id long, embedding array<float>",
+    )
+    # the class varies with how many AQE stages fail (SparkRuntimeException
+    # or a Py4JJavaError listing each); the message is the contract
+    with pytest.raises(Exception, match="lsh_signature: vector of 2 elements, dim is 4"):
+        run(df).collect()
+    run(df.filter("vec_id != 1")).collect()
 
 
 def test_dedup_clusters_merges_transitive_components(spark):
@@ -1174,19 +1181,13 @@ def test_fast_assign_chunked_argmin_crosses_boundaries(spark, emb):
     sizes never split a test-sized batch, so force a tiny chunk and pin
     that assignments are identical across chunk boundaries (argmin is
     per-row; chunking must not change any cell)."""
-    from duckdb_routing_spark.operators.similarity import (
-        _cell_assignments_fast,
-        norm_col,
-    )
+    from duckdb_routing_spark.operators.similarity import _cell_assignments_fast
 
     seeds = (
         emb.orderBy("vec_id").limit(8)
         .select(F.col("vec_id").alias("cell"), F.col("embedding").alias("svec"))
     )
-    c = emb.select(
-        F.col("vec_id"), F.col("embedding").alias("cvec"),
-        norm_col(F.col("embedding")).alias("cnorm"),
-    )
+    c = emb.select(F.col("vec_id"), F.col("embedding").alias("cvec"))
     whole = _cell_assignments_fast(c, seeds, "cvec").select("vec_id", "cell")
     chunked = _cell_assignments_fast(c, seeds, "cvec", chunk_rows=7).select("vec_id", "cell")
     assert sorted(map(tuple, whole.collect())) == sorted(map(tuple, chunked.collect()))
