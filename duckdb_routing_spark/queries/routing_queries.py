@@ -294,24 +294,22 @@ def route_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # 100 distinct origins x 200 targets each = 20k pairs spread grid-wide.
     # ORIGIN-MAJOR generation, partition-aligned: the kernel runs ONE SSSP
-    # per distinct source per partition, so the layout goal is exactly one
-    # optimal multi-SSSP chunk of origins per task. The former
-    # repartition(n_parts, "s_node") HASH-placed 100 origins into 13
-    # partitions — measured Murmur3 skew [13,13,11,10,8,...,3], so the
-    # critical-path task ran TWO kernel chunks while others ran one (the
-    # driver-measured 32-core inversion: 0.301 s at 32 cores vs 0.222 at
-    # 8). Generating origins as a contiguous range over n_parts partitions
-    # and exploding the 200 targets row-locally (guide §2.4/§2.5) gives
-    # every task <= ceil(origins/n_parts) origins deterministically AND
-    # removes the exchange outright — the kernel stage fuses with the
-    # generator. Row values are IDENTICAL: t = o + 100*j is a bijection on
-    # [0, 20k), so the same (s_node, d_node) multiset feeds the same
-    # exact-decimal aggregate. At cluster scale origins vastly outnumber
-    # cores * chunk, so the parallelism cap binds and every core stays
-    # filled; nothing here is a local constant.
+    # per distinct source, so the layout goal is an even share of origins
+    # per task, one task per core. The former repartition(n_parts,
+    # "s_node") HASH-placed 100 origins into 13 partitions — measured
+    # Murmur3 skew [13,13,11,10,8,...,3], so the critical-path task ran
+    # 13 SSSPs against a mean of 7.7 (the driver-measured 32-core
+    # inversion: 0.301 s at 32 cores vs 0.222 at 8). Generating origins as
+    # a contiguous range over n_parts partitions and exploding the 200
+    # targets row-locally (guide §2.4/§2.5) gives every task <=
+    # ceil(origins/n_parts) origins deterministically AND removes the
+    # exchange outright — the kernel stage fuses with the generator. Row
+    # values are IDENTICAL: t = o + 100*j is a bijection on [0, 20k), so
+    # the same (s_node, d_node) multiset feeds the same exact-decimal
+    # aggregate. At cluster scale origins vastly outnumber cores, so the
+    # parallelism cap binds; nothing here is a local constant.
     n_origins = 100  # distinct s_node values by construction
-    chunk = kernels.sssp_chunk_size(n_grid)
-    n_parts = min(-(-n_origins // chunk), spark.sparkContext.defaultParallelism)
+    n_parts = min(n_origins, spark.sparkContext.defaultParallelism)
     pairs = (
         spark.range(0, n_origins, 1, n_parts)
         .selectExpr("id AS o", "explode(sequence(0, 199)) AS j")

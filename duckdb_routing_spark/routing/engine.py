@@ -70,19 +70,22 @@ P2P_CONF_KEY = "spark.routing.p2p"
 # read spark.conf).
 MATRIX_CONF_KEY = "spark.routing.matrix"
 
-# Executor-process cache: payload uuid -> RoutingGraph (rebuilt once per
-# worker process, shared across Arrow batches).
-_GRAPH_CACHE: dict[str, RoutingGraph] = {}
+
+class _EngineBroadcasts(dict):
+    """mode -> Broadcast[payload] of one engine. The engine id pickles with
+    the dict into every UDF closure, so executors can tell engines apart."""
+
+    def __init__(self):
+        super().__init__()
+        self.engine_id = uuid.uuid4().hex
 
 
-def _graph_from_bc(bc) -> RoutingGraph:
-    payload = bc.value
-    key = payload["_uuid"]
-    g = _GRAPH_CACHE.get(key)
-    if g is None:
-        g = RoutingGraph.from_payload({k: v for k, v in payload.items() if k != "_uuid"})
-        _GRAPH_CACHE[key] = g
-    return g
+# Executor-process cache: (engine id, mode) -> (payload uuid, RoutingGraph),
+# built once per Python worker process and shared across Arrow batches and
+# reused tasks. It holds at most one graph per engine and mode: a graph
+# whose broadcast load_graph() replaced or free() destroyed is dropped on
+# the engine's next resolve, and engines never evict each other's graphs.
+_GRAPH_CACHE: dict[tuple[str, str], tuple[str, RoutingGraph]] = {}
 
 
 def _matrix_rows_local(g: RoutingGraph, src_lats, src_lons, dst, algo: str = "frontier") -> list[tuple]:
@@ -113,17 +116,27 @@ def _matrix_rows_local(g: RoutingGraph, src_lats, src_lons, dst, algo: str = "fr
     return rows
 
 
-def _resolve(broadcasts: dict, mode: str) -> RoutingGraph:
+def _resolve(broadcasts: _EngineBroadcasts, mode: str) -> RoutingGraph:
     # unknown modes fall back to 'auto', like get_router_for_mode
     # (rust/src/lib.rs:290-296)
     mode = mode if mode in broadcasts else "auto"
+    engine_id = broadcasts.engine_id
+    for key in [k for k in _GRAPH_CACHE if k[0] == engine_id and k[1] not in broadcasts]:
+        del _GRAPH_CACHE[key]  # freed since it was cached
     bc = broadcasts.get(mode)
     if bc is None:
         raise RuntimeError(
             "Travel time extension not loaded. Load routing tiles first "
             "(engine.load_config(path) or SET spark.routing.tiles)"
         )
-    return _graph_from_bc(bc)
+    payload = bc.value
+    key = (engine_id, mode)
+    cached = _GRAPH_CACHE.get(key)
+    if cached is None or cached[0] != payload["_uuid"]:
+        _GRAPH_CACHE.pop(key, None)  # load_graph() replaced it: drop before rebuilding
+        g = RoutingGraph.from_payload({k: v for k, v in payload.items() if k != "_uuid"})
+        cached = _GRAPH_CACHE[key] = (payload["_uuid"], g)
+    return cached[1]
 
 
 ROUTE_STRUCT = T.StructType(
@@ -179,7 +192,7 @@ SINGLE_TASK_MATRIX_WORK = SERVICE_LIMITS["max_matrix_location_pairs"] * 8_000
 class RoutingEngine:
     def __init__(self, spark: SparkSession, unlimited_matrix: bool = False):
         self.spark = spark
-        self._broadcasts: dict = {}  # mode -> Broadcast[payload]
+        self._broadcasts = _EngineBroadcasts()  # mode -> Broadcast[payload]
         self._local: dict[str, RoutingGraph] = {}  # driver-side copies
         self._tiles_path: str | None = None
         self._registered = False

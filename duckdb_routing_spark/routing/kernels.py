@@ -9,8 +9,14 @@ where predecessors/paths are needed; weights are integer milliseconds,
 durations are ms/1000.0 (lib.rs:421-427).
 
 These kernels run inside Arrow-batched pandas UDF / mapInPandas workers with
-the graph arrays coming from a Spark broadcast: one graph per executor
-process, shared across batches, no locks (read-only).
+the graph arrays coming from a Spark broadcast: one graph per engine and mode
+in each Python worker process (engine._GRAPH_CACHE), shared across batches
+and reused tasks, no locks (read-only). Each Python task also pays a fixed
+worker cost before any kernel runs; on Python <= 3.12 most of it was the
+worker re-reading every zip archive on its sys.path, which the package now
+skips for unchanged archives (session._lazy_zip_invalidate). Read that
+cost from Spark's pythonTotalTime, not pythonInitTime: on a reused worker
+the init figure includes idle wait between tasks.
 """
 
 from __future__ import annotations
@@ -508,65 +514,6 @@ def sssp_frontier_ms(g: RoutingGraph, src: int) -> np.ndarray:
     return dist
 
 
-def sssp_frontier_multi_ms(g: RoutingGraph, srcs) -> np.ndarray:
-    """Multi-source twin of :func:`sssp_frontier_ms`: k independent SSSP
-    waves advanced through ONE shared frontier loop.
-
-    Why: on a large graph the frontier loop runs ~hop-diameter iterations
-    (398 on the 200x200 batch grid) and each iteration costs ~50 us of
-    fixed numpy dispatch regardless of frontier size — so k single-source
-    calls pay k * iterations of overhead for work that is mostly tiny
-    arrays. Folding the k waves into one label space (gid = i * n + node,
-    i.e. k disjoint copies of the graph) amortizes the per-iteration
-    dispatch across sources: measured 2.0-2.6x for k = 3-7 on the 40k-node
-    grid (the route_batch_throughput shape), identical distances (the
-    label-correcting fixed point per copy is unchanged — copies never
-    interact).
-
-    Memory is k * n int64 labels; callers chunk k so that stays bounded
-    (batch_travel_time_s caps at ~64M labels = 512 MB per task).
-    Returns int64[k, n] distances in ms with _INF for unreachable."""
-    indptr, indices, weights = g.indptr, g.indices, g.weights_ms
-    n = g.num_nodes
-    srcs = np.asarray(srcs, dtype=np.int64)
-    k = len(srcs)
-    dist = np.full(k * n, _INF, dtype=np.int64)
-    start_gids = np.arange(k, dtype=np.int64) * n + srcs
-    dist[start_gids] = 0
-    frontier = start_gids
-    while frontier.size:
-        fnode = frontier % n
-        starts = indptr[fnode]
-        counts = indptr[fnode + 1] - starts
-        total = int(counts.sum())
-        if total == 0:
-            break
-        cum = np.cumsum(counts)
-        eidx = np.repeat(starts - (cum - counts), counts) + np.arange(total, dtype=np.int64)
-        nd = np.repeat(dist[frontier], counts) + weights[eidx]
-        tgt = indices[eidx] + np.repeat(frontier - fnode, counts)  # + i*n
-        better = nd < dist[tgt]
-        tgt, nd = tgt[better], nd[better]
-        if tgt.size == 0:
-            break
-        # per-target min via lexsort + first-occurrence instead of
-        # np.minimum.at: ufunc.at's per-element constant dominates on the
-        # k-fold frontiers this function exists for; the sorted unique
-        # targets also serve directly as the next (deduplicated) frontier
-        order = np.lexsort((nd, tgt))
-        tgt_s, nd_s = tgt[order], nd[order]
-        first = np.ones(len(tgt_s), dtype=bool)
-        first[1:] = tgt_s[1:] != tgt_s[:-1]
-        utgt, und = tgt_s[first], nd_s[first]
-        improved = und < dist[utgt]
-        utgt, und = utgt[improved], und[improved]
-        if utgt.size == 0:
-            break
-        dist[utgt] = und
-        frontier = utgt
-    return dist.reshape(k, n)
-
-
 def shortest_path_tree(g: RoutingGraph, dist: np.ndarray, src: int) -> np.ndarray:
     """Derive a deterministic predecessor array from converged SSSP labels.
 
@@ -642,27 +589,19 @@ def sssp_multi_target(g: RoutingGraph, src: int, targets: np.ndarray):
 # ---------------------------------------------------------------------------
 
 
-def sssp_chunk_size(num_nodes: int) -> int:
-    """Origins per multi-source SSSP call (sssp_frontier_multi_ms).
-    Measured on the 40k-node batch grid: k=4-8 wins ~1.3-2x over k=1 (the
-    per-iteration numpy dispatch amortizes across origins) but large k
-    loses it again — the k*n label array outgrows cache and the random
-    gather/scatter on it dominates (k=32 measured slower than k=1). The
-    64M-label (512 MB) cap only binds on huge graphs. Shared with the
-    query-side fan-out: a partition holding fewer origins than one chunk
-    wastes the amortization (routing_queries.route_batch)."""
-    return max(1, min(8, int(64e6 // max(num_nodes, 1))))
-
-
 def batch_travel_time_s(g: RoutingGraph, lat1, lon1, lat2, lon2) -> np.ndarray:
     """Vectorized travel_time: snap both endpoints, shortest-path seconds.
     NaN marks no-route / invalid input (the SQL layer maps NaN -> NULL,
     matching src/travel_time_extension.cpp:512-514).
 
     Batch shape: rows are grouped by snapped SOURCE node and each group runs
-    ONE multi-target Dijkstra — an OD table with n_src distinct origins per
-    Arrow batch costs n_src searches, not n_rows (measured 6x on a 40k-node
-    graph with 5k pairs / 715 origins)."""
+    ONE frontier SSSP (sssp_frontier_ms) — an OD table with n_src distinct
+    origins per Arrow batch costs n_src searches, not n_rows (measured 6x
+    on a 40k-node graph with 5k pairs / 715 origins). Folding k origins
+    into one shared frontier loop was measured 1.6-2.1x slower than k
+    single-source calls on a 96k-node road-like grid (k = 1-8) and no
+    faster on the 40k-node batch grid (1.5x slower at k = 1, within 3% at
+    k = 8), so it was removed."""
     lat1 = np.asarray(lat1, dtype=np.float64)
     lon1 = np.asarray(lon1, dtype=np.float64)
     lat2 = np.asarray(lat2, dtype=np.float64)
@@ -677,18 +616,12 @@ def batch_travel_time_s(g: RoutingGraph, lat1, lon1, lat2, lon2) -> np.ndarray:
     src[valid] = g.nearest_main_nodes(lon1[valid], lat1[valid])
     dst[valid] = g.nearest_main_nodes(lon2[valid], lat2[valid])
     ok = valid & (src >= 0) & (dst >= 0)
-    uniq = np.unique(src[ok])
-    # one multi-source frontier call per chunk instead of one single-source
-    # call per origin (sizing rationale: sssp_chunk_size)
-    chunk = sssp_chunk_size(g.num_nodes)
-    for c0 in range(0, len(uniq), chunk):
-        cs = uniq[c0 : c0 + chunk]
-        dmat = sssp_frontier_multi_ms(g, cs)
-        for i, s in enumerate(cs):
-            m = ok & (src == s)
-            w = dmat[i, dst[m]].astype(np.float64)
-            w[w == float(_INF)] = np.nan
-            out[m] = w / 1000.0
+    for s in np.unique(src[ok]):
+        dist = sssp_frontier_ms(g, int(s))
+        m = ok & (src == s)
+        w = dist[dst[m]].astype(np.float64)
+        w[w == float(_INF)] = np.nan
+        out[m] = w / 1000.0
     return out
 
 

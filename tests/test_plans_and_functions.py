@@ -1,5 +1,8 @@
 """Plan audits (pushdown / broadcast / codegen posture) + the ST_* kit."""
 
+import sys
+
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -57,6 +60,31 @@ def test_geo_function_kit(spark):
     assert row.ep == "POINT(13.002 52.001)"
     assert '"LineString"' in row.gj
     assert row.pt == "POINT(7.42 43.73)"
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13), reason="stdlib zipimport is already lazy")
+def test_package_udf_installs_lazy_zip_invalidation_in_workers(spark):
+    # unpickling a package UDF imports the package, which installs the lazy
+    # zipimporter.invalidate_caches (session._lazy_zip_invalidate)
+    register_geo_functions(spark)
+
+    @F.pandas_udf("boolean")
+    def lazy_zip_installed(s: pd.Series) -> pd.Series:
+        import zipimport  # must not import the package itself
+
+        fn = zipimport.zipimporter.invalidate_caches
+        return pd.Series([fn.__module__ == "duckdb_routing_spark.session"] * len(s))
+
+    rows = (
+        spark.range(0, 8, 1, 4)
+        .select(
+            F.spark_partition_id().alias("p"),
+            lazy_zip_installed(F.expr("st_point(CAST(id AS DOUBLE), 0.0)")).alias("ok"),
+        )
+        .collect()
+    )
+    assert {r.p for r in rows} == {0, 1, 2, 3}
+    assert all(r.ok for r in rows)
 
 
 def test_st_length_and_wkb_identities(spark):
