@@ -100,11 +100,3 @@ def pack_sequences(
         )
     )
 
-
-def pack_stats(packed: DataFrame, capacity: int = 256) -> DataFrame:
-    """Per-bin fill statistics: (bin, n_docs, n_tokens, fill_ratio)."""
-    return packed.groupBy("bin").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("n_tokens"),
-        (F.sum("n_tokens") / capacity).alias("fill_ratio"),
-    )

@@ -40,8 +40,8 @@ def _assign(emb: DataFrame, centroids: list[tuple[int, list[float]]], id_col: st
         [(cid, vec) for cid, vec in centroids], "cluster_id int, cvec array<double>"
     )
     # pure-JVM HOF dots (similarity._dot_hof): left-to-right float64
-    # accumulation on already-double arrays (pinned by
-    # test_cosine_topk_catalyst_matches_kernel), and the per-iteration
+    # accumulation on already-double arrays (pinned bit-exact by the
+    # sim_ivf_topk and sim_ann_lsh oracles), and the per-iteration
     # assignment plan has no ArrowEvalPython stage (HOF_AB_r11.json A/B).
     # Operands are real columns from prior projections (the _dot_hof
     # interpreted-inlining caveat).

@@ -12,8 +12,9 @@ Scale design (the reason each variant exists):
 
 Everything below is pure Catalyst expressions (split / transform / explode /
 groupBy / join) — no Python UDFs, no driver-side loops. MinHash permutations
-use md5(seed || ':' || shingle) and take the lexicographic min — stable
-across engines, which makes the whole pipeline DuckDB-oracle-checkable.
+are Carter-Wegman integer hashes over one md5 per shingle (bands_from_hashes)
+— stable across engines, which makes the whole pipeline
+DuckDB-oracle-checkable.
 """
 
 from __future__ import annotations
@@ -86,7 +87,9 @@ def minhash_band_rows(
     Uses NON-distinct shingles: min(h) over a multiset equals min over the
     set, so MinHash semantics are unchanged and the dedup shuffle is saved
     (Jaccard, which needs set semantics, uses the distinct table)."""
-    return bands_from_shingles(shingles(docs, id_col, text_col, k, distinct=False), n_hashes, band_size)
+    return bands_from_hashes(
+        shingle_hash_base(docs, id_col, text_col, k, distinct=False), n_hashes, band_size
+    )
 
 
 # Carter-Wegman universal-hash prime. 30-bit modulus keeps every
@@ -95,44 +98,6 @@ def minhash_band_rows(
 # fatal to parity). Within-doc collision odds at ~1k shingles/doc are
 # ~5e-4 — noise for MinHash estimation.
 MH_PRIME = 1_000_000_007
-
-
-def bands_from_shingles(sh: DataFrame, n_hashes: int = 12, band_size: int = 3) -> DataFrame:
-    """MinHash signatures via Carter-Wegman derived hashes: ONE md5 per
-    shingle row, split into two 60-bit halves (h1, h2), and the i-th
-    permutation is (h1 + i*h2) mod p — engine-portable integer arithmetic,
-    so the DuckDB oracle can reproduce it bit-for-bit.
-
-    Plan shape: the n_hashes mins are n_hashes AGG COLUMNS of a single
-    groupBy (map-side combine; shuffle = n_docs rows x n_hashes longs).
-    The previous formulation exploded a seed dimension (n_hashes x the
-    shingle rows) and paid one md5 PER (shingle, seed) — ~12x the hashing
-    and ~12x the pre-combine rows for identical LSH behavior."""
-    p = MH_PRIME
-    h = F.md5(F.col("shingle"))
-    base = sh.select(
-        "doc_id",
-        (F.conv(F.substring(h, 1, 15), 16, 10).cast("long") % p).alias("h1"),
-        (F.conv(F.substring(h, 17, 15), 16, 10).cast("long") % p).alias("h2"),
-    )
-    aggs = [
-        F.min((F.col("h1") + F.lit(i) * F.col("h2")) % p).alias(f"mh{i}") for i in range(n_hashes)
-    ]
-    sig = base.groupBy("doc_id").agg(*aggs)
-    n_bands = (n_hashes + band_size - 1) // band_size
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "|",
-                *[F.col(f"mh{i}") for i in range(b * band_size, min((b + 1) * band_size, n_hashes))],
-            ).alias("band_sig"),
-        )
-        for b in range(n_bands)
-    ]
-    return sig.select("doc_id", F.explode(F.array(*band_structs)).alias("bb")).select(
-        "doc_id", F.col("bb.band").alias("band"), F.col("bb.band_sig").alias("band_sig")
-    )
 
 
 def shingle_hash_base(
@@ -158,9 +123,15 @@ def shingle_hash_base(
 
 
 def bands_from_hashes(base: DataFrame, n_hashes: int = 12, band_size: int = 3) -> DataFrame:
-    """bands_from_shingles over a pre-hashed (doc_id, h1, h2) base — same
-    Carter-Wegman values ((h1%p + i*(h2%p)) % p == the string formulation),
-    zero additional hashing."""
+    """MinHash band rows (doc_id, band, band_sig) from a pre-hashed
+    (doc_id, h1, h2) shingle base via Carter-Wegman derived hashes: the i-th
+    permutation is (h1 + i*h2) mod p over the two md5 halves reduced mod p —
+    engine-portable integer arithmetic, so the DuckDB oracle reproduces it
+    bit-for-bit.
+
+    Plan shape: the n_hashes mins are n_hashes AGG COLUMNS of a single
+    groupBy (map-side combine; shuffle = n_docs rows x n_hashes longs), one
+    md5 per shingle row rather than one per (shingle, seed)."""
     p = MH_PRIME
     aggs = [
         F.min((F.col("h1") % p + F.lit(i) * (F.col("h2") % p)) % p).alias(f"mh{i}")
@@ -223,8 +194,8 @@ def pair_intersection_sizes(
     — and drops the hints past ~256 MB, letting the identical plan run as
     shuffle joins keyed on doc id. Values are the same either way. One
     residual bound: collect_list makes one array row per doc, so a single
-    document with hundreds of millions of shingles would need the
-    jaccard_for_pairs row-stream shape instead."""
+    document with hundreds of millions of shingles would need a row-stream
+    shingle join instead."""
     # NO .distinct() on the candidate-doc ids: the only consumer is the
     # left-semi join below, whose build side dedups inside the hash
     # relation — the distinct was one whole exchange+stage that changed
@@ -274,25 +245,23 @@ def lsh_candidate_pairs(
     k: int = 3,
     n_hashes: int = 12,
     band_size: int = 3,
-    sh: DataFrame | None = None,
     max_bucket: int | None = 1024,
 ) -> DataFrame:
     """Near-duplicate candidate pairs (doc_a < doc_b) via banded MinHash.
 
-    The self-join keys on (band, band_sig) — bucket-local, so the pair space
+    Pairs come from inside (band, band_sig) buckets, so the pair space
     never materializes globally. P(candidate) = 1-(1-J^band_size)^n_bands.
-    Pass a (persisted) `sh` shingle table to share the scan with other
-    stages; standalone, the NON-distinct shingle stream feeds the signature
-    directly (min over a multiset == min over the set), skipping a full
-    dedup shuffle of the shingle table. Buckets beyond `max_bucket` members
+    The NON-distinct shingle-hash stream feeds the signature directly (min
+    over a multiset == min over the set), skipping a full dedup shuffle of
+    the shingle table. Buckets beyond `max_bucket` members
     degrade to star pairing (see :func:`_pairs_in_buckets`); pass
     max_bucket=None for uncapped all-pairs (what an all-pairs SQL oracle
     computes — the oracled registry queries pass None so parity holds even
     on corpora with mega-buckets)."""
-    if sh is None:
-        sh = shingles(docs, id_col, text_col, k, distinct=False)
-    bands = bands_from_shingles(sh, n_hashes, band_size)
-    return _pairs_in_buckets(bands, max_bucket=max_bucket)
+    return lsh_candidates_from_hashes(
+        shingle_hash_base(docs, id_col, text_col, k, distinct=False),
+        n_hashes, band_size, max_bucket=max_bucket,
+    )
 
 
 def _pairs_in_buckets(
@@ -370,30 +339,6 @@ def _pairs_in_buckets(
         buckets.select(F.explode(pair_structs).alias("p"))
         .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .distinct()
-    )
-
-
-def jaccard_for_pairs(sh: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Exact shingle-Jaccard for given (doc_a, doc_b) pairs:
-    |A∩B| via a shingle join, |A∪B| = |A|+|B|-|A∩B|."""
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    inter = (
-        pairs.join(sh.select(F.col("doc_id").alias("doc_a"), "shingle"), "doc_a")
-        .join(sh.select(F.col("doc_id").alias("doc_b"), "shingle"), ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    return (
-        inter.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b")), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("n_inter").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double")
-            ).alias("jaccard"),
-        )
     )
 
 

@@ -56,17 +56,6 @@ def zorder_key(
     return df.withColumn(out_col, morton_interleave(buckets, bits))
 
 
-def zorder_write_layout(
-    df: DataFrame, specs: list[tuple[str, float, float]], bits: int = 8, n_files: int = 32
-) -> DataFrame:
-    """The write-side layout: range-partition by the Morton key and sort
-    within partitions, so each output file covers a contiguous z-range —
-    bounded min/max on every interleaved column. repartitionByRange samples
-    the key (one extra job) but produces balanced files even on skew."""
-    keyed = zorder_key(df, specs, bits)
-    return keyed.repartitionByRange(n_files, "zkey").sortWithinPartitions("zkey")
-
-
 def zorder_key_oracle_sql(
     table: str, specs: list[tuple[str, float, float]], bits: int = 8, extra_cols: str = ""
 ) -> str:

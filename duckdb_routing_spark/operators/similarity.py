@@ -33,7 +33,9 @@ def _dot_hof(a: str, b: str) -> str:
     tree whatever the dim: aggregate folds (0 + p0) + p1 + ... strictly
     left-to-right, so values are bit-identical to an unrolled
     a[0]*b[0] + a[1]*b[1] + ... chain and to the numpy kernel of
-    cosine_topk (pinned by test_cosine_topk_catalyst_matches_kernel).
+    cosine_topk (both pinned bit-exact against DuckDB's left-to-right sums:
+    the kernel by the sim_topk_cosine and emb_hard_negatives oracles, this
+    form by sim_ivf_topk and sim_ann_lsh).
     Needs no known dim and re-analyzes in milliseconds where an unrolled
     tree costs 0.4-0.7 s per action. CAVEAT that sank an earlier HOF
     attempt: `a`/`b` must name REAL columns from a PRIOR projection —
@@ -55,69 +57,6 @@ def _hof_norm(col: str) -> str:
     _dot_hof caveat; use _with_double_vec), or products round in the
     array's element type."""
     return f"sqrt({_dot_hof(col, col)})"
-
-
-def cosine_topk_catalyst(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int | None = None,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_label_col: str | None = None,
-) -> DataFrame:
-    """Exact cosine top-k as ONE pure-JVM action — zero Python stages.
-
-    The bounded-corpus twin of cosine_topk (same columns, same total order,
-    hash-identical values): the query side broadcasts into a nested-loop
-    join against the corpus scan, dot products run as constant-size
-    higher-order-function expressions (_dot_hof — same left-to-right
-    accumulation, no per-action re-analysis of an unrolled tree, no known
-    dim needed; `dim` is kept for signature compatibility and unused), and
-    a single hash exchange on query_id finishes the rank window.
-    Collecting the result is one action with no separate query-side
-    toPandas job and no Arrow worker startup — the fixed ~0.3-0.5 s the
-    mapInPandas form pays at small scale.
-
-    Scale posture: the scored set is |corpus| x |queries| rows through one
-    exchange, so this is ONLY for size-dispatched bounded calls; the
-    map-side top-k kernel (cosine_topk) is the 100 TB path."""
-    del dim  # HOF dots fold any length; ragged inputs zip to the shorter
-    dbl = f"transform({vec_col}, x -> cast(x as double))"
-    qcols = [f"{id_col} AS query_id", f"{dbl} AS qv"]
-    ccols = [f"{id_col} AS vec_id", f"{dbl} AS cv"]
-    if exclude_label_col:
-        qcols.append(f"{exclude_label_col} AS qlabel")
-        ccols.append(f"{exclude_label_col} AS clabel")
-    # two-step select: a lateral-alias reference to qv/cv inside the same
-    # projection would make the analyzer INLINE the transform() expression
-    # into every element access of the dot — with HOF dots that inlining is
-    # what made an earlier attempt evaluate interpreted (see _dot_hof)
-    q = queries.selectExpr(*qcols).selectExpr(
-        "*", f"sqrt({_dot_hof('qv', 'qv')}) AS qnorm"
-    )
-    c = corpus.selectExpr(*ccols).selectExpr(
-        "*", f"sqrt({_dot_hof('cv', 'cv')}) AS cnorm"
-    )
-    cond = F.expr("vec_id != query_id")
-    if exclude_label_col:
-        # SQL NULL semantics match the kernel: NULL on either side drops the row
-        cond = cond & F.expr("clabel != qlabel")
-    scored = c.join(F.broadcast(q), cond).selectExpr(
-        "query_id",
-        "vec_id",
-        f"({_dot_hof('qv', 'cv')}) / (qnorm * cnorm) AS cosine",
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    # key-hashed single partition (not coalesce) — satisfies the window's
-    # clustering requirement with exactly one exchange, and the upstream
-    # scan stays parallel; see the small-nq note in cosine_topk below.
-    return (
-        scored.repartition(1, F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .sortWithinPartitions("query_id", "rank")
-    )
 
 
 def _score_block(pdf, qarrays, exclude_label_col, k):
@@ -379,10 +318,9 @@ def _with_double_vec(df: DataFrame, name: str, out: str) -> DataFrame:
     each product rounds to float32 BEFORE the double accumulation, which
     broke oracle hash-parity at ~1e-8 (measured on sim_ann_index_probe).
     Casting per element FIRST makes every product exact (24+24 < 53
-    mantissa bits) — the same prior-projection idiom as
-    cosine_topk_catalyst, which also keeps the analyzer from inlining the
-    transform into the dot (the _dot_hof interpreted-eval caveat). Already-
-    double columns alias for free."""
+    mantissa bits). The prior projection also keeps the analyzer from
+    inlining the transform into the dot (the _dot_hof interpreted-eval
+    caveat). Already-double columns alias for free."""
     from pyspark.sql.types import ArrayType
 
     t = df.schema[name].dataType
@@ -400,7 +338,7 @@ def _cell_assignments(
     input columns and adds `cell`."""
     keep = [c for c in vecs.columns]
     # scoring via the pure-JVM HOF dot (_dot_hof): left-to-right float64
-    # accumulation (pinned by test_cosine_topk_catalyst_matches_kernel) with
+    # accumulation (pinned by the sim_ivf_topk / sim_ann_lsh oracles) with
     # no ArrowEvalPython stage — interleaved A/B at 1M vectors x 1000 cells
     # measured a pandas-UDF dot 4.2x slower on the probe's scored join
     # (OPTIMIZATION_r10.md, persisted IVF store). The float64 twins are

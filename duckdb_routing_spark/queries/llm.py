@@ -27,7 +27,7 @@ sh AS (
 )
 """
 
-# Carter-Wegman MinHash mirror of dedup.bands_from_shingles: one md5 per
+# Carter-Wegman MinHash mirror of dedup.bands_from_hashes: one md5 per
 # shingle, two 60-bit halves, permutation i = (h1 + i*h2) mod p. 30-bit p
 # keeps all integer arithmetic overflow-free in both engines.
 _MH_P = 1_000_000_007
@@ -473,12 +473,11 @@ def sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(sf_dir, "embeddings.parquet")
     small = common.dataset_bytes(path) < 256 * 1024 * 1024
     queries = emb.filter(F.col("vec_id") < 3)
-    # A pure-JVM single-action form exists (cosine_topk_catalyst). It was
-    # A/B'd here when its dots were a 192-term unrolled tree, whose
-    # per-action re-analysis + codegen cost 0.40-0.70 s at every count()
-    # (ARCHITECTURE.md §3 item 4), and lost to the fused Arrow kernel; its
-    # HOF-dot form has not been re-measured at this site. The
-    # single-task path rides ONE job (queries tagged into the same
+    # A pure-JVM single-action form (broadcast nested-loop join with
+    # unrolled 192-term dots) was A/B'd here and lost to the fused Arrow
+    # kernel: re-analysis + codegen cost 0.40-0.70 s at every count()
+    # (ARCHITECTURE.md §3 item 4). The kernel's values are pinned by this
+    # query's DuckDB oracle. The single-task path rides ONE job (queries tagged into the same
     # scan); its measured ~0.25 s floor is the Python-worker Arrow stage
     # itself (a passthrough mapInPandas over this corpus costs the same),
     # i.e. the irreducible small-scale cost of any Python kernel — the

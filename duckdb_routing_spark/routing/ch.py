@@ -5,21 +5,23 @@ implementation of the published algorithm (Geisberger et al. 2008,
 "Contraction Hierarchies: Faster and Simpler Hierarchical Routing in Road
 Networks"); no reference code was consulted beyond its observable API.
 
-Role in this engine: `kernels.p2p_path` dispatches single-pair queries to
-ALT A* by default; `SET spark.routing.p2p = ch` (or
-``graph.p2p_accelerator = "ch"``) switches to this index. CH trades a
-heavy one-time node-ordering/shortcut build for the fastest warm queries
-on road-network topologies (low highway dimension) — the reference's
-deployment shape (ITALY.md: warm query <100 ms on 9.7M nodes). The
-prepared index is a BUILD-TIME artifact: `RoutingGraph.save` persists it
-as a `ch_<mode>.npz` sidecar (the analog of the prepared fast_paths index
+Role in this engine: when a loaded graph carries this index (``g._ch``),
+`kernels.p2p_path` and `kernels.matrix_rows` route through it; a graph
+without one routes by ALT A* and frontier SSSP. No setting selects it.
+CH trades a heavy one-time node-ordering/shortcut build for the fastest
+warm queries on road-network topologies (low highway dimension) — the
+reference's deployment shape (ITALY.md: warm query <100 ms on 9.7M
+nodes). The prepared index is a BUILD-TIME artifact (`ensure_ch`, never
+called from a query kernel): `RoutingGraph.save` persists it as a
+`ch_<mode>.npz` sidecar (the analog of the prepared fast_paths index
 inside the reference's `.routing` file) and `to_payload` ships it with the
 graph broadcast, so executors never re-run the ordering.
 
 Measured (round-8 batched independent-set build + cheap 2-hop priority;
 queries warm):
   UNIFORM grids — CH's known worst topology (shortcut growth wants a
-  nested-dissection order; ALT A* stays the engine default there):
+  nested-dissection order; the grid fixtures ship no index and route by
+  ALT A*):
     100x100 (10k):   build ~11 s (was ~140 s), query ~19 ms
     200x200 (40k):   build ~72 s (was ~149 s), query ~27 ms
   ROAD-LIKE networks (testing.build_roadlike_csr — local/arterial/highway
@@ -524,9 +526,12 @@ def _edge_distance_m(ch: CHIndex, g: RoutingGraph, u: int, v: int, mid: int) -> 
 
 
 def ch_p2p_path(g: RoutingGraph, src: int, dst: int):
-    """kernels-compatible (weight_ms, path_node_list) using the CH index
-    cached on the graph (built on first use per process)."""
-    ch = ensure_ch(g)
+    """kernels-compatible (weight_ms, path_node_list) using the graph's
+    prepared CH index (``g._ch``). Never builds one: prepare it with
+    ensure_ch before the graph is loaded or shipped."""
+    ch = getattr(g, "_ch", None)
+    if ch is None:
+        raise ValueError("graph carries no prepared CH index; call ch.ensure_ch(g) first")
     w, fwd_chain, bwd_chain, meet = ch_p2p(ch, int(src), int(dst))
     if w < 0:
         return -1.0, None
@@ -536,8 +541,10 @@ def ch_p2p_path(g: RoutingGraph, src: int, dst: int):
 
 
 def ensure_ch(g: RoutingGraph) -> CHIndex:
-    """The per-process CH handle: restored from the artifact/broadcast
-    payload when it shipped with the graph, built once otherwise."""
+    """Prepare the graph's CH index once, before the graph is loaded (or at
+    artifact build time): returns the index already on the graph, else
+    builds and attaches it. Kernels never call this — a graph without an index routes by ALT
+    and frontier SSSP (kernels.p2p_path, kernels.matrix_rows)."""
     ch = getattr(g, "_ch", None)
     if ch is None:
         ch = build_ch(g)

@@ -57,18 +57,6 @@ from duckdb_routing_spark.routing.graph import RoutingGraph
 
 TILES_CONF_KEY = "spark.routing.tiles"
 BBOX_CONF_KEY = "spark.routing.bbox"
-# `SET spark.routing.p2p = alt|ch|bidij|dijkstra` picks the single-pair
-# accelerator (kernels.p2p_path); the choice ships inside the graph
-# broadcast so executors honor it without a separate conf read
-P2P_CONF_KEY = "spark.routing.p2p"
-# `SET spark.routing.matrix = frontier|ch` picks the matrix kernel:
-# 'frontier' (default) runs one full-graph vectorized SSSP per origin —
-# right when origins are few or the graph is small; 'ch' runs the bucket
-# many-to-many over the contraction hierarchy (N+M upward-cone searches,
-# kernels.matrix_rows_ch) — the asymptotic win on country-scale graphs.
-# Read at matrix() call time and captured in the closure (executors cannot
-# read spark.conf).
-MATRIX_CONF_KEY = "spark.routing.matrix"
 
 
 class _EngineBroadcasts(dict):
@@ -86,34 +74,6 @@ class _EngineBroadcasts(dict):
 # whose broadcast load_graph() replaced or free() destroyed is dropped on
 # the engine's next resolve, and engines never evict each other's graphs.
 _GRAPH_CACHE: dict[tuple[str, str], tuple[str, RoutingGraph]] = {}
-
-
-def _matrix_rows_local(g: RoutingGraph, src_lats, src_lons, dst, algo: str = "frontier") -> list[tuple]:
-    """The matrix kernel loop on a local graph object — the same
-    sssp_multi_target + path-distance semantics the distributed mapInPandas
-    path runs; values are identical because the kernels are shared.
-    ``algo='ch'`` swaps in the bucket many-to-many (kernels.matrix_rows_ch),
-    exact by the CH cover property."""
-    tgt_nodes = g.nearest_main_nodes(
-        np.asarray([lo for _, lo in dst]), np.asarray([la for la, _ in dst])
-    )
-    src_nodes = g.nearest_main_nodes(np.asarray(src_lons), np.asarray(src_lats))
-    if algo == "ch":
-        return kernels.matrix_rows_ch(g, src_nodes, tgt_nodes)
-    rows: list[tuple] = []
-    for i, s in enumerate(src_nodes):
-        s = int(s)
-        if s < 0:
-            rows.extend((i, j, None, None) for j in range(len(dst)))
-            continue
-        w_ms, pred = kernels.sssp_multi_target(g, s, tgt_nodes)
-        for j, t in enumerate(tgt_nodes):
-            if t < 0 or w_ms[j] < 0:
-                rows.append((i, j, None, None))
-                continue
-            path = kernels.path_from_pred(pred, s, int(t))
-            rows.append((i, j, float(kernels.path_distance_m(g, path)), float(w_ms[j]) / 1000.0))
-    return rows
 
 
 def _resolve(broadcasts: _EngineBroadcasts, mode: str) -> RoutingGraph:
@@ -272,7 +232,6 @@ class RoutingEngine:
 
     def load_graph(self, graph: RoutingGraph, mode: str = "auto") -> bool:
         old = self._broadcasts.pop(mode, None)
-        graph.p2p_accelerator = self.spark.conf.get(P2P_CONF_KEY, "alt")
         payload = graph.to_payload()
         payload["_uuid"] = str(uuid.uuid4())
         self._broadcasts[mode] = self.spark.sparkContext.broadcast(payload)
@@ -433,12 +392,6 @@ class RoutingEngine:
             raw = self.spark.conf.get(BBOX_CONF_KEY, None)
             bbox = tuple(float(x) for x in raw.split(",")) if raw else None
             self.load_config(path, bbox=bbox)
-        # hot-swap the p2p accelerator when the conf changed (re-broadcasts
-        # the graph with the new choice baked into the payload)
-        p2p = self.spark.conf.get(P2P_CONF_KEY, "alt")
-        for mode, g in list(self._local.items()):
-            if getattr(g, "p2p_accelerator", "alt") != p2p:
-                self.load_graph(g, mode)
 
     @property
     def tiles_path(self) -> str | None:
@@ -665,9 +618,10 @@ class RoutingEngine:
         distance_m, duration_s), row order (from, to) like MatrixFunction
         (src/travel_time_extension.cpp:849-877).
 
-        Scale shape: origins are distributed via mapInPandas; each origin runs
-        ONE multi-target Dijkstra serving all destinations (amortized), with
-        the graph coming from the executor-cached broadcast."""
+        Scale shape: origins are distributed via mapInPandas and run through
+        kernels.matrix_rows against the executor-cached broadcast graph —
+        the CH bucket many-to-many when the graph carries a prepared index,
+        otherwise one frontier SSSP per origin serving all destinations."""
         if len(src_lats) != len(src_lons) or len(dst_lats) != len(dst_lons):
             raise ValueError("source/target lat and lon lists must have equal lengths")
         self._check_matrix_limit(len(src_lats) * len(dst_lats))
@@ -677,16 +631,6 @@ class RoutingEngine:
             # empty matrix: return an empty frame instead of repartition(0)
             return self.spark.createDataFrame([], MATRIX_SCHEMA)
 
-        # repartition (real shuffle), NOT coalesce: a Python kernel fed
-        # directly from a LocalTableScan spawns a fresh Python worker per
-        # action (~5s); the exchange routes it through the reused worker
-        # pool, and one task per origin is the right granularity anyway
-        origins = literal_df(
-            self.spark,
-            [(i, float(la), float(lo)) for i, (la, lo) in enumerate(zip(src_lats, src_lons))],
-            "from_idx int, lat double, lon double",
-        ).repartition(min(len(src_lats), 32))
-
         # snap all targets ONCE, driver-side on the local graph copy, and
         # ship the node ids in the closure — the previous form re-snapped
         # every target inside every mapInPandas batch (N_batches x M scalar
@@ -695,8 +639,9 @@ class RoutingEngine:
         g0 = self._local.get(mode)
         if g0 is None:
             _resolve(broadcasts, costing)  # raises the canonical not-loaded error
-        # kernel choice captured here — executors cannot read spark.conf
-        matrix_algo = self.spark.conf.get(MATRIX_CONF_KEY, "frontier")
+        tgt_nodes = g0.nearest_main_nodes(
+            np.asarray([lo for _, lo in dst]), np.asarray([la for la, _ in dst])
+        )
 
         # Small-matrix fast path: the service limit caps a matrix CALL at
         # 2500 pairs (like the reference's generated valhalla.json), so the
@@ -709,15 +654,12 @@ class RoutingEngine:
         # country graph) still distribute below; unbounded OD workloads
         # belong to batch_travel_time_s, not matrix().
         if len(src_lats) * max(g0.num_nodes, 1) <= SINGLE_TASK_MATRIX_WORK:
-            src = [(float(la), float(lo)) for la, lo in zip(src_lats, src_lons)]
+            src_nodes = g0.nearest_main_nodes(np.asarray(src_lons), np.asarray(src_lats))
 
             def one_task(_batches):
                 for _ in _batches:  # drain -> worker returns to the reuse pool
                     pass
-                g = _resolve(broadcasts, costing)
-                rows = _matrix_rows_local(
-                    g, [la for la, _ in src], [lo for _, lo in src], dst, algo=matrix_algo
-                )
+                rows = kernels.matrix_rows(_resolve(broadcasts, costing), src_nodes, tgt_nodes)
                 yield pd.DataFrame(
                     rows, columns=["from_idx", "to_idx", "distance_m", "duration_s"]
                 )
@@ -729,9 +671,15 @@ class RoutingEngine:
             # is one buffer hand-off through the reused worker pool
             return self.spark.range(1, numPartitions=1).mapInPandas(one_task, MATRIX_SCHEMA)
 
-        tgt_nodes = g0.nearest_main_nodes(
-            np.asarray([lo for _, lo in dst]), np.asarray([la for la, _ in dst])
-        )
+        # repartition (real shuffle), NOT coalesce: a Python kernel fed
+        # directly from a LocalTableScan spawns a fresh Python worker per
+        # action (~5s); the exchange routes it through the reused worker
+        # pool, and one task per origin is the right granularity anyway
+        origins = literal_df(
+            self.spark,
+            [(i, float(la), float(lo)) for i, (la, lo) in enumerate(zip(src_lats, src_lons))],
+            "from_idx int, lat double, lon double",
+        ).repartition(min(len(src_lats), 32))
 
         def run(batches):
             for pdf in batches:
@@ -739,35 +687,10 @@ class RoutingEngine:
                 src_nodes = g.nearest_main_nodes(
                     pdf.lon.to_numpy(np.float64), pdf.lat.to_numpy(np.float64)
                 )
-                if matrix_algo == "ch":
-                    # bucket many-to-many per origin batch: the target-side
-                    # upward cones are recomputed per batch (cheap — cone,
-                    # not graph), the origin SSSPs are what the buckets
-                    # eliminate
-                    rows = kernels.matrix_rows_ch(
-                        g, src_nodes, tgt_nodes, from_idx=pdf.from_idx.astype(int)
-                    )
-                    yield pd.DataFrame(
-                        rows, columns=["from_idx", "to_idx", "distance_m", "duration_s"]
-                    )
-                    continue
-                out = []
-                for s, (_, r) in zip(src_nodes, pdf.iterrows()):
-                    s = int(s)
-                    if s < 0:
-                        for j in range(len(dst)):
-                            out.append((int(r.from_idx), j, None, None))
-                        continue
-                    w_ms, pred = kernels.sssp_multi_target(g, s, tgt_nodes)
-                    for j, t in enumerate(tgt_nodes):
-                        if t < 0 or w_ms[j] < 0:
-                            out.append((int(r.from_idx), j, None, None))
-                            continue
-                        # reconstruct path for the native distance semantics
-                        path = kernels.path_from_pred(pred, s, int(t))
-                        d_m = kernels.path_distance_m(g, path)
-                        out.append((int(r.from_idx), j, d_m, w_ms[j] / 1000.0))
-                yield pd.DataFrame(out, columns=["from_idx", "to_idx", "distance_m", "duration_s"])
+                # with a CH index the target-side upward cones are
+                # recomputed per origin batch (cheap — cone, not graph)
+                rows = kernels.matrix_rows(g, src_nodes, tgt_nodes, from_idx=pdf.from_idx)
+                yield pd.DataFrame(rows, columns=["from_idx", "to_idx", "distance_m", "duration_s"])
 
         # single-partition sort, not orderBy: the output is bounded by the
         # matrix service limit, and a range-exchange would sample-execute the

@@ -441,7 +441,6 @@ class RoutingGraph:
 
     def _base_payload(self) -> dict:
         return {
-            "_p2p": getattr(self, "p2p_accelerator", "alt"),
             "node_lon": self.node_lon,
             "node_lat": self.node_lat,
             "indptr": self.indptr,
@@ -462,10 +461,8 @@ class RoutingGraph:
     def from_payload(cls, payload: dict) -> "RoutingGraph":
         alt_f = payload.pop("_alt_from_i32", None)
         alt_t = payload.pop("_alt_to_i32", None)
-        p2p = payload.pop("_p2p", "alt")
         ch_arrays = payload.pop("_ch_arrays", None)
         g = cls(**payload)
-        g.p2p_accelerator = p2p
         if alt_f is not None:
             from duckdb_routing_spark.routing.kernels import unpack_alt
 

@@ -2,11 +2,16 @@
 
 The reference uses contraction hierarchies (`fast_paths`, rust/src/lib.rs:260)
 for point-to-point queries and a plain binary-heap Dijkstra for isochrones
-(lib.rs:638-720). CH is a pure accelerator — weights and results are identical
-to Dijkstra — so this rebuild's accelerator is a numpy-vectorized frontier
-SSSP (sssp_frontier_ms) for the batch path, with heap Dijkstra retained
-where predecessors/paths are needed; weights are integer milliseconds,
-durations are ms/1000.0 (lib.rs:421-427).
+(lib.rs:638-720). Every accelerator here is exact — weights are identical to
+Dijkstra. The batch path runs a numpy-vectorized frontier SSSP
+(sssp_frontier_ms), with heap Dijkstra retained where predecessors/paths are
+needed; weights are integer milliseconds, durations are ms/1000.0
+(lib.rs:421-427).
+
+Single-pair routes (p2p_path) and matrices (matrix_rows) follow one rule:
+a graph carrying a prepared CH index (``g._ch``, routing/ch.py) routes
+through it; any other graph uses ALT A* (astar_p2p_path) and one frontier
+SSSP per matrix origin. No kernel builds a CH index.
 
 These kernels run inside Arrow-batched pandas UDF / mapInPandas workers with
 the graph arrays coming from a Spark broadcast: one graph per engine and mode
@@ -88,9 +93,9 @@ def dijkstra_p2p_path(g: RoutingGraph, src: int, dst: int):
 
 def _reverse_csr(g: RoutingGraph):
     """Reverse-edge CSR (indptr, indices, weights), built once and cached on
-    the graph object — the backward half of bidirectional Dijkstra searches
-    incoming edges. Cache lives with the broadcast graph, so every Arrow
-    batch on an executor reuses it."""
+    the graph object — _alt_data's to-landmark SSSPs search incoming edges.
+    Cache lives with the broadcast graph, so every Arrow batch on an
+    executor reuses it."""
     cached = getattr(g, "_rev_csr", None)
     if cached is not None:
         return cached
@@ -104,91 +109,6 @@ def _reverse_csr(g: RoutingGraph):
     rev = (rindptr, src[order], g.weights_ms[order])
     g._rev_csr = rev
     return rev
-
-
-def bidij_p2p_path(g: RoutingGraph, src: int, dst: int):
-    """(weight_ms, path_node_list) or (NO_ROUTE, None) via bidirectional
-    Dijkstra — the p2p accelerator standing in for the reference's
-    contraction hierarchies (rust/src/lib.rs:260, fast_paths::prepare).
-
-    Both searches settle ~half the radius, so in open geometry the explored
-    ball is ~2*(r/2)^2 instead of r^2. MEASURED caveat on the 40k test
-    grid: corner-to-corner routes clip both half-balls against the square
-    boundary (each covers a half-triangle of the grid), so node savings
-    vanish and Python constant factors make this SLOWER than plain
-    Dijkstra there — which is why the engine's default p2p accelerator is
-    astar_p2p_path (ALT), whose landmark bounds don't degrade under
-    boundary clipping. Kept as the zero-preprocessing alternative. Weight
-    is EXACTLY dijkstra_p2p's (property-tested); among equal-weight paths
-    the meeting node ties break toward the lowest node id, making the
-    returned path deterministic. Termination: stop once top_f + top_b >=
-    best known mu (classic Nicholson condition; weights non-negative)."""
-    if src == dst:
-        return 0.0, [int(src)]
-    indptr_f, indices_f, weights_f = g.indptr, g.indices, g.weights_ms
-    indptr_b, indices_b, weights_b = _reverse_csr(g)
-    inf = np.inf
-    dist_f = {src: 0}
-    dist_b = {dst: 0}
-    prev_f: dict[int, int] = {}
-    prev_b: dict[int, int] = {}
-    heap_f = [(0, src)]
-    heap_b = [(0, dst)]
-    settled_f: set[int] = set()
-    settled_b: set[int] = set()
-    mu = inf
-    meet = -1
-    while heap_f and heap_b:
-        if heap_f[0][0] + heap_b[0][0] >= mu:
-            break
-        # expand the side with the smaller frontier radius
-        if heap_f[0][0] <= heap_b[0][0]:
-            d, u = heapq.heappop(heap_f)
-            if u in settled_f or d > dist_f.get(u, inf):
-                continue
-            settled_f.add(u)
-            for ei in range(indptr_f[u], indptr_f[u + 1]):
-                v = indices_f[ei]
-                nd = d + weights_f[ei]
-                if nd < dist_f.get(v, inf):
-                    dist_f[v] = nd
-                    prev_f[v] = u
-                    heapq.heappush(heap_f, (nd, v))
-                db = dist_b.get(v)
-                if db is not None:
-                    cand = dist_f[v] + db
-                    if cand < mu or (cand == mu and v < meet):
-                        mu = cand
-                        meet = v
-        else:
-            d, u = heapq.heappop(heap_b)
-            if u in settled_b or d > dist_b.get(u, inf):
-                continue
-            settled_b.add(u)
-            for ei in range(indptr_b[u], indptr_b[u + 1]):
-                v = indices_b[ei]
-                nd = d + weights_b[ei]
-                if nd < dist_b.get(v, inf):
-                    dist_b[v] = nd
-                    prev_b[v] = u
-                    heapq.heappush(heap_b, (nd, v))
-                df = dist_f.get(v)
-                if df is not None:
-                    cand = df + dist_b[v]
-                    if cand < mu or (cand == mu and v < meet):
-                        mu = cand
-                        meet = v
-    if meet < 0 or mu == inf:
-        return NO_ROUTE, None
-    fwd = [meet]
-    while fwd[-1] != src:
-        fwd.append(prev_f[fwd[-1]])
-    fwd.reverse()
-    node = meet
-    while node != dst:
-        node = prev_b[node]
-        fwd.append(node)
-    return float(mu), fwd
 
 
 _ALT_I32_INF = np.iinfo(np.int32).max
@@ -291,8 +211,8 @@ def _alt_scratch(g: RoutingGraph, shape):
 
 def astar_p2p_path(g: RoutingGraph, src: int, dst: int):
     """(weight_ms, path_node_list) or (NO_ROUTE, None) via A* over ALT
-    landmark lower bounds — the single-pair accelerator standing in for the
-    reference's contraction hierarchies.
+    landmark lower bounds — p2p_path's accelerator for graphs without a
+    prepared CH index.
 
     h(u) = max over landmarks L of max(d(L,t)-d(L,u), d(u,L)-d(t,L), 0) is
     a CONSISTENT lower bound on d(u,t) (triangle inequality on exact SSSP
@@ -625,48 +545,69 @@ def batch_travel_time_s(g: RoutingGraph, lat1, lon1, lat2, lon2) -> np.ndarray:
     return out
 
 
+def _prepared_ch(g: RoutingGraph):
+    """The graph's prepared CH index (``g._ch``), or None. It comes from the
+    artifact's ``ch_<mode>.npz`` sidecar, from the graph broadcast, or from
+    ``ch.ensure_ch(g)`` before ``load_graph``. Kernels only read it: a CH
+    build is hours of executor CPU at country scale, so it is never started
+    from a query."""
+    return getattr(g, "_ch", None)
+
+
 def p2p_path(g: RoutingGraph, src: int, dst: int):
-    """Single-pair (weight_ms, path) through the graph's selected
-    accelerator. Default is ALT A* (astar_p2p_path — light preprocessing,
-    strong at test scale); ``g.p2p_accelerator`` picks an alternative:
-    'ch' (contraction hierarchies, the reference's own accelerator — heavy
-    one-time build, fastest warm queries on long-lived services), 'bidij'
-    (zero preprocessing), or 'dijkstra' (the plain baseline). All four are
-    exact — identical weights, property-tested."""
-    acc = getattr(g, "p2p_accelerator", "alt")
-    if acc == "ch":
+    """Single-pair (weight_ms, path): contraction hierarchies when the graph
+    carries a prepared index (the reference's own accelerator, fastest warm
+    queries), ALT A* otherwise (astar_p2p_path — light preprocessing, built
+    once per process on first use). Both are exact — identical weights to
+    dijkstra_p2p, property-tested."""
+    if _prepared_ch(g) is not None:
         from duckdb_routing_spark.routing import ch
 
         return ch.ch_p2p_path(g, src, dst)
-    if acc == "bidij":
-        return bidij_p2p_path(g, src, dst)
-    if acc == "dijkstra":
-        return dijkstra_p2p_path(g, src, dst)
     return astar_p2p_path(g, src, dst)
 
 
-def matrix_rows_ch(g: RoutingGraph, src_nodes, tgt_nodes, from_idx=None) -> list[tuple]:
-    """Matrix rows [(from_idx, to_idx, distance_m, duration_s), ...] via the
-    CH bucket many-to-many (ch.ch_many_to_many) — N+M upward-cone searches
-    instead of N full-graph SSSPs, the right kernel when the graph is large
-    relative to the origin count. Row semantics identical to the frontier
-    path (None cells for unsnapped/unreachable; distance is hop-haversine
-    over the unpacked time-optimal path, lib.rs:779-795)."""
-    from duckdb_routing_spark.routing import ch as _chmod
+def matrix_rows(g: RoutingGraph, src_nodes, tgt_nodes, from_idx=None) -> list[tuple]:
+    """Matrix rows [(from_idx, to_idx, distance_m, duration_s), ...] for
+    snapped node ids; `from_idx` labels the origins (default 0..N-1).
 
-    chx = _chmod.ensure_ch(g)
-    time_ms, meets, sstates, dstates = _chmod.ch_many_to_many(chx, src_nodes, tgt_nodes)
-    idxs = list(from_idx) if from_idx is not None else list(range(len(src_nodes)))
-    rows: list[tuple] = []
-    for si, i in enumerate(idxs):
-        for j in range(len(tgt_nodes)):
-            w = time_ms[si, j]
-            if w < 0:
-                rows.append((int(i), j, None, None))
+    With a prepared CH index this is the bucket many-to-many
+    (ch.ch_many_to_many: N+M upward-cone searches); otherwise one frontier
+    SSSP per origin serves every target (sssp_multi_target). Unsnapped
+    (negative) ids and unreachable cells give None cells; distance is
+    hop-haversine over the time-optimal path (lib.rs:779-795). Durations
+    are exact on both paths; distances may differ by meters between them on
+    duration-tied paths, which the two break differently."""
+    idxs = [int(i) for i in from_idx] if from_idx is not None else list(range(len(src_nodes)))
+    chx = _prepared_ch(g)
+    if chx is not None:
+        from duckdb_routing_spark.routing import ch
+
+        time_ms, meets, sstates, dstates = ch.ch_many_to_many(chx, src_nodes, tgt_nodes)
+        rows: list[tuple] = []
+        for si, i in enumerate(idxs):
+            for j in range(len(tgt_nodes)):
+                w = time_ms[si, j]
+                if w < 0:
+                    rows.append((i, j, None, None))
+                    continue
+                d_m = ch.ch_m2m_distance_m(
+                    chx, g, int(src_nodes[si]), int(tgt_nodes[j]), int(meets[si, j]),
+                    sstates[si], dstates[j],
+                )
+                rows.append((i, j, float(d_m), float(w) / 1000.0))
+        return rows
+    rows = []
+    for i, s in zip(idxs, src_nodes):
+        s = int(s)
+        if s < 0:
+            rows.extend((i, j, None, None) for j in range(len(tgt_nodes)))
+            continue
+        w_ms, pred = sssp_multi_target(g, s, tgt_nodes)
+        for j, t in enumerate(tgt_nodes):
+            if t < 0 or w_ms[j] < 0:
+                rows.append((i, j, None, None))
                 continue
-            d_m = _chmod.ch_m2m_distance_m(
-                chx, g, int(src_nodes[si]), int(tgt_nodes[j]), int(meets[si, j]),
-                sstates[si], dstates[j],
-            )
-            rows.append((int(i), j, float(d_m), float(w) / 1000.0))
+            path = path_from_pred(pred, s, int(t))
+            rows.append((i, j, path_distance_m(g, path), float(w_ms[j]) / 1000.0))
     return rows

@@ -1,5 +1,6 @@
 """Contraction-hierarchy index: artifact/broadcast persistence and the
-engine's p2p-accelerator conf switch (`SET spark.routing.p2p = ch`)."""
+accelerator rule — p2p and matrix use CH exactly when the loaded graph
+carries a prepared index, and ALT / frontier SSSP otherwise."""
 
 import numpy as np
 import pytest
@@ -40,45 +41,55 @@ def test_ch_artifact_roundtrip(grid_with_ch, tmp_path):
 
 def test_ch_payload_roundtrip(grid_with_ch):
     g = grid_with_ch
-    g.p2p_accelerator = "ch"
     payload = g.to_payload()
     assert "_ch_arrays" in payload
     g2 = RoutingGraph.from_payload(payload)
-    assert g2.p2p_accelerator == "ch"
     assert getattr(g2, "_ch", None) is not None
     for s, t in _query_pairs(g):
         # the dispatcher must route through the SHIPPED index (no rebuild)
         assert kernels.p2p_path(g2, s, t)[0] == kernels.dijkstra_p2p(g, s, t)
 
 
-def test_engine_p2p_conf_switch(spark):
-    """`SET spark.routing.p2p = ch` + ensure_conf() re-broadcasts the graph
-    with the CH accelerator baked in; SQL results are identical to the ALT
-    default (all accelerators are exact)."""
+def _engines_with_and_without_ch(spark):
+    """Two engines over the same 10x10 grid: one loaded the graph with a
+    prepared CH index, the other without. Returns (plain, with_ch)."""
     from duckdb_routing_spark.routing.engine import RoutingEngine
 
-    eng = RoutingEngine(spark)
+    plain = RoutingEngine(spark)
+    plain.load_graph(build_grid_graph("auto", 10, 10, island=False), "auto")
     g = build_grid_graph("auto", 10, 10, island=False)
-    g._ch = ch.build_ch(g)
-    eng.load_graph(g, "auto")
-    eng.register()
-    q = "SELECT travel_time(52.0, 13.0, 52.018, 13.018, 'auto') AS s"
-    base = spark.sql(q).collect()[0]["s"]
-    assert base is not None and base > 0
-    try:
-        spark.conf.set("spark.routing.p2p", "ch")
-        eng.ensure_conf()
-        assert eng._local["auto"].p2p_accelerator == "ch"
-        got = spark.sql(q).collect()[0]["s"]
-        assert got == base
-    finally:
-        spark.conf.unset("spark.routing.p2p")
-        eng.ensure_conf()
-    assert eng._local["auto"].p2p_accelerator == "alt"
+    ch.ensure_ch(g)
+    with_ch = RoutingEngine(spark)
+    with_ch.load_graph(g, "auto")
+    # the index ships inside the broadcast: executors route by CH without
+    # building one
+    assert "_ch_arrays" in with_ch._broadcasts["auto"].value
+    assert "_ch_arrays" not in plain._broadcasts["auto"].value
+    return plain, with_ch
+
+
+def test_engine_sql_routes_equal_with_and_without_ch(spark):
+    """SQL travel_time and route durations are identical whether the loaded
+    graph carries a CH index (routes take CH) or not (routes take ALT):
+    both accelerators are exact."""
+    plain, with_ch = _engines_with_and_without_ch(spark)
+    q = (
+        "SELECT travel_time(52.0, 13.0, 52.018, 13.018, 'auto') AS s, "
+        "travel_time_route_wkb('POINT(13.0 52.0)', 'POINT(13.018 52.018)', 'auto')"
+        ".duration_minutes AS m"
+    )
+    plain.register()
+    base = spark.sql(q).collect()[0]
+    assert base["s"] is not None and base["s"] > 0
+    assert base["m"] is not None and base["m"] > 0
+    with_ch.register()
+    got = spark.sql(q).collect()[0]
+    assert got["s"] == base["s"]
+    assert got["m"] == base["m"]
 
 
 def test_ch_many_to_many_matches_dijkstra(grid_with_ch):
-    """Bucket many-to-many (ch_many_to_many / kernels.matrix_rows_ch) is
+    """Bucket many-to-many (ch_many_to_many via kernels.matrix_rows) is
     exact: every cell's duration equals per-pair Dijkstra, every cell's
     distance equals the CH p2p path distance (same pred trees -> same
     paths), negative snaps and unreachable targets yield None cells."""
@@ -86,7 +97,7 @@ def test_ch_many_to_many_matches_dijkstra(grid_with_ch):
     rng = np.random.default_rng(11)
     srcs = rng.integers(0, g.num_nodes, 7).tolist() + [-1]
     dsts = rng.integers(0, g.num_nodes, 5).tolist() + [-1]
-    rows = kernels.matrix_rows_ch(g, srcs, dsts)
+    rows = kernels.matrix_rows(g, srcs, dsts)
     assert len(rows) == len(srcs) * len(dsts)
     for i, j, dm, ds in rows:
         s, t = srcs[i], dsts[j]
@@ -98,30 +109,23 @@ def test_ch_many_to_many_matches_dijkstra(grid_with_ch):
         _, p2p_path = ch.ch_p2p_path(g, s, t)
         assert abs(dm - kernels.path_distance_m(g, p2p_path)) < 1e-9
     # src == dst cell: zero duration, zero distance
-    [(_, _, dm0, ds0)] = kernels.matrix_rows_ch(g, [4], [4])
+    [(_, _, dm0, ds0)] = kernels.matrix_rows(g, [4], [4])
     assert ds0 == 0.0 and dm0 == 0.0
 
 
-def test_engine_matrix_conf_switch(spark):
-    """`SET spark.routing.matrix = ch` swaps the matrix kernel for the
+def test_engine_matrix_equal_with_and_without_ch(spark):
+    """An engine whose graph carries a CH index runs the matrix as the
     bucket many-to-many; durations and distances are identical to the
-    frontier default on both the single-task and distributed paths."""
-    from duckdb_routing_spark.routing.engine import RoutingEngine
+    frontier matrix of an engine without one, on both the single-task and
+    distributed paths."""
+    from duckdb_routing_spark.routing import engine as eng_mod
 
-    eng = RoutingEngine(spark)
-    g = build_grid_graph("auto", 10, 10, island=False)
-    g._ch = ch.build_ch(g)
-    eng.load_graph(g, "auto")
-    eng.register()
+    plain, with_ch = _engines_with_and_without_ch(spark)
     lats = [52.0, 52.005, 52.018]
     lons = [13.0, 13.012, 13.018]
-    base = eng.matrix(lats, lons, lats[::-1], lons[::-1]).collect()
+    base = plain.matrix(lats, lons, lats[::-1], lons[::-1]).collect()
     assert len(base) == 9
-    try:
-        spark.conf.set("spark.routing.matrix", "ch")
-        got = eng.matrix(lats, lons, lats[::-1], lons[::-1]).collect()
-    finally:
-        spark.conf.unset("spark.routing.matrix")
+    got = with_ch.matrix(lats, lons, lats[::-1], lons[::-1]).collect()
     # durations are exact across kernels; distances may differ by meters on
     # DURATION-TIED paths (the grid has many equal-time geometries, and the
     # frontier tight-tree and CH pred-tree break ties differently — both
@@ -136,21 +140,53 @@ def test_engine_matrix_conf_switch(spark):
             assert rg.distance_m == pytest.approx(rb.distance_m, rel=0.05)
 
     # force the DISTRIBUTED mapInPandas path (threshold to 0) and re-check
-    from duckdb_routing_spark.routing import engine as eng_mod
-
     saved = eng_mod.SINGLE_TASK_MATRIX_WORK
     try:
         eng_mod.SINGLE_TASK_MATRIX_WORK = 0
-        spark.conf.set("spark.routing.matrix", "ch")
-        dist_rows = eng_mod.RoutingEngine.matrix(
-            eng, lats, lons, lats[::-1], lons[::-1]
-        ).collect()
+        dist_rows = with_ch.matrix(lats, lons, lats[::-1], lons[::-1]).collect()
     finally:
         eng_mod.SINGLE_TASK_MATRIX_WORK = saved
-        spark.conf.unset("spark.routing.matrix")
     assert [(r.from_idx, r.to_idx, r.duration_s) for r in dist_rows] == [
         (r.from_idx, r.to_idx, r.duration_s) for r in base
     ]
+
+
+def test_kernels_pick_accelerator_from_prepared_ch(monkeypatch):
+    """p2p_path and matrix_rows call the CH kernels exactly when the graph
+    carries a prepared index; without one they take ALT A* and frontier
+    SSSP, and never build an index."""
+    calls = []
+
+    def spy(mod, name):
+        real = getattr(mod, name)
+
+        def wrapped(*a, **kw):
+            calls.append(name)
+            return real(*a, **kw)
+
+        monkeypatch.setattr(mod, name, wrapped)
+
+    for mod, name in [
+        (ch, "ch_p2p_path"), (ch, "ch_many_to_many"), (ch, "build_ch"),
+        (kernels, "astar_p2p_path"), (kernels, "sssp_multi_target"),
+    ]:
+        spy(mod, name)
+
+    plain = build_grid_graph("auto", 10, 10, island=False)
+    s, t = 0, plain.num_nodes - 1
+    w = kernels.dijkstra_p2p(plain, s, t)
+    assert kernels.p2p_path(plain, s, t)[0] == w
+    rows_plain = kernels.matrix_rows(plain, [s, 5], [t, 3])
+    assert calls == ["astar_p2p_path", "sssp_multi_target", "sssp_multi_target"]
+    assert getattr(plain, "_ch", None) is None
+
+    prepared = build_grid_graph("auto", 10, 10, island=False)
+    prepared._ch = ch.build_ch(prepared)
+    calls.clear()
+    assert kernels.p2p_path(prepared, s, t)[0] == w
+    rows_ch = kernels.matrix_rows(prepared, [s, 5], [t, 3])
+    assert calls == ["ch_p2p_path", "ch_many_to_many"]
+    assert [r[:2] + r[3:] for r in rows_ch] == [r[:2] + r[3:] for r in rows_plain]
 
 
 def test_roadlike_ch_exact_and_linear_shape():

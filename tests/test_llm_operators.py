@@ -237,17 +237,6 @@ def test_cosine_topk_shape(spark, emb):
         assert coss == sorted(coss, reverse=True)
 
 
-def test_cosine_topk_catalyst_matches_kernel(spark, emb):
-    """The pure-JVM plan-reuse variant must be value-identical (cosine bits
-    included) to the Arrow kernel — same unrolled left-to-right accumulation
-    order. Covers the label-exclusion twin too."""
-    q = emb.filter(F.col("vec_id") < 3)
-    for kwargs in ({}, {"exclude_label_col": "label"}):
-        kernel = similarity.cosine_topk(emb, q, k=10, **kwargs).collect()
-        jvm = similarity.cosine_topk_catalyst(emb, q, dim=64, k=10, **kwargs).collect()
-        assert sorted(map(tuple, kernel)) == sorted(map(tuple, jvm))
-
-
 def test_dataset_bytes_and_dim_probe(spark, tmp_path):
     """dataset_bytes must measure a DIRECTORY dataset's part files (the
     os.path.getsize inode bug chose the bounded single-task path for

@@ -217,14 +217,15 @@ def test_concave_hull_contains_all_points(pts):
 
 
 # ---------------------------------------------------------------------------
-# round-4 kernels: p2p accelerators (bidirectional Dijkstra, ALT A*)
+# p2p accelerators (ALT A*, contraction hierarchies)
 # ---------------------------------------------------------------------------
 
 
-def _p2p_accel_case(n, seed, accel):
+def _p2p_accel_case(n, seed, accel, prepare=None):
     """Shared harness: `accel` must return dijkstra_p2p's exact weight on
     every pair of a random graph, and its path must be a REAL path whose
-    edge-weight sum equals the weight."""
+    edge-weight sum equals the weight. `prepare(g)` runs on the graph
+    first (e.g. attaching a CH index)."""
     rng = np.random.default_rng(seed)
     m = int(rng.integers(1, n * 3))
     src = rng.integers(0, n, m).astype(np.int64)
@@ -238,6 +239,8 @@ def _p2p_accel_case(n, seed, accel):
         rng.uniform(-1, 1, n), rng.uniform(-1, 1, n), src, dst, w,
         np.ones(len(src)), np.arange(n, dtype=np.int64),
     )
+    if prepare is not None:
+        prepare(g)
     edge_w = {}
     for u, v, ww in zip(src, dst, w):
         key = (int(u), int(v))
@@ -257,19 +260,13 @@ def _p2p_accel_case(n, seed, accel):
 
 @given(st.integers(min_value=2, max_value=40), st.integers(min_value=0, max_value=10_000))
 @settings(max_examples=40, deadline=None)
-def test_bidirectional_dijkstra_equals_dijkstra(n, seed):
-    _p2p_accel_case(n, seed, kernels.bidij_p2p_path)
-
-
-@given(st.integers(min_value=2, max_value=40), st.integers(min_value=0, max_value=10_000))
-@settings(max_examples=40, deadline=None)
 def test_alt_astar_equals_dijkstra(n, seed):
     _p2p_accel_case(n, seed, kernels.astar_p2p_path)
 
 
 def test_alt_astar_faster_on_long_grid_routes():
-    """Long p2p routes on the 40k-node grid: ALT A* (the engine's p2p
-    accelerator, the CH stand-in per rust/src/lib.rs:260) must beat plain
+    """Long p2p routes on the 40k-node grid: ALT A* (the p2p
+    accelerator of graphs without a CH index) must beat plain
     Dijkstra wall-clock while returning the identical weight — including
     corner-to-corner diagonals, where bidirectional search degenerates
     (boundary clipping) and great-circle A* degenerates (Manhattan
@@ -301,7 +298,7 @@ def test_alt_astar_faster_on_long_grid_routes():
 def test_contraction_hierarchy_equals_dijkstra(n, seed):
     from duckdb_routing_spark.routing import ch
 
-    _p2p_accel_case(n, seed, ch.ch_p2p_path)
+    _p2p_accel_case(n, seed, ch.ch_p2p_path, prepare=ch.ensure_ch)
 
 
 def test_ch_warm_queries_fast_on_grid():

@@ -1,8 +1,12 @@
-"""Static check that the scripts outside the package still import: every
-`from duckdb_routing_spark... import name` in tools/, perfbench/, bench.py
-and __spark_entry__.py must name a submodule or a top-level binding of the
-module. Pure AST, no Spark session, so deleting a package name that a
-script still uses fails here instead of at the script's next run."""
+"""Static checks on the package's names, pure AST and no Spark session:
+
+- the scripts outside the package still import: every
+  `from duckdb_routing_spark... import name` in tools/, perfbench/,
+  bench.py and __spark_entry__.py must name a submodule or a top-level
+  binding of the module, so deleting a package name that a script still
+  uses fails here instead of at the script's next run;
+- nothing in the package is dead: every undecorated top-level function or
+  class is referenced somewhere in the package, the tests or the scripts."""
 
 import ast
 import glob
@@ -75,3 +79,43 @@ def test_script_imports_of_the_package_resolve():
                     missing.append(f"{rel}:{node.lineno}: {module} has no {name}")
     assert checked > 0, "no package imports found; the script list is stale"
     assert not missing, "\n".join(missing)
+
+
+PKG_FILES = sorted(glob.glob(os.path.join(ROOT, PKG, "**", "*.py"), recursive=True))
+TEST_FILES = sorted(glob.glob(os.path.join(ROOT, "tests", "*.py")))
+
+
+def _referenced_names(tree: ast.AST) -> set[str]:
+    """Every name a module mentions as a Name, an attribute or an import."""
+    names: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            names.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            names.add(node.attr)
+        elif isinstance(node, ast.alias):
+            names.add(node.name.split(".")[-1])
+    return names
+
+
+def test_every_package_definition_is_referenced():
+    """Every undecorated top-level function or class of the package must be
+    used somewhere: in the package, tests/, tools/, perfbench/, bench.py or
+    __spark_entry__.py. A definition nothing names is dead code."""
+    referenced: set[str] = set()
+    defined: list[tuple[str, ast.stmt]] = []
+    for path in PKG_FILES + TEST_FILES + SCRIPTS:
+        with open(path) as f:
+            tree = ast.parse(f.read(), filename=path)
+        referenced |= _referenced_names(tree)
+        if path in PKG_FILES:
+            defined += [
+                (os.path.relpath(path, ROOT), node)
+                for node in tree.body
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                and not node.decorator_list
+                and not node.name.startswith("__")
+            ]
+    assert len(defined) > 100, "no package definitions found; the file list is stale"
+    dead = [f"{rel}:{node.lineno}: {node.name}" for rel, node in defined if node.name not in referenced]
+    assert not dead, "\n".join(dead)

@@ -118,7 +118,7 @@ def main() -> None:
         "| 1-task JVM-only scan count of embeddings.parquet | 0.084 |",
         "| 1-task Arrow NO-OP `mapInPandas` over the same scan | 0.219 |",
         "| full fused sim_topk kernel (scan+score+rank, one task) | 0.218 |",
-        "| pure-JVM `cosine_topk_catalyst` (zero Python stages) | 0.302 |",
+        "| pure-JVM `cosine_topk_catalyst` (zero Python stages; since deleted) | 0.302 |",
         "",
         "The full kernel is indistinguishable from a no-op Arrow pass: the",
         "numpy scoring + rank cost ~5 ms; ~0.12 s is the Python-worker Arrow",
