@@ -9,21 +9,36 @@ posexplode + exact-decimal centroid mean (one shuffle on (cluster, dim)).
 Iterations are a driver loop over collect()s of k*dim values — the only
 driver state is the centroid matrix itself.
 
-Oracle parity: every distance is expressed through dot products
-(x.x - 2 x.c + c.c) computed by the order-preserving pure-JVM HOF kernel
-(similarity._dot_hof — left-to-right float64 accumulation), which is
-bit-identical to DuckDB's list_dot_product; centroid means use exact
+Oracle parity: assignment is similarity._nearest_seeds, the seed argmin
+IVF cells and PQ codes share: every distance is dot(c,c) - 2 x.c over
+order-preserving pure-JVM HOF folds (left-to-right float64 accumulation,
+bit-identical to DuckDB's list_dot_product); centroid means use exact
 DECIMAL sums (the repo's no-round() policy), so a chained-CTE DuckDB oracle
 reproduces the full iteration history bit-for-bit. Deterministic init:
 the k lowest-id vectors.
+
+Above _EXACT_ARGMIN_MAX_SEEDS clusters (the sqrt(n) IVF quantizer's
+sizes) the trainer switches to a batched Lloyd pass: one mapInPandas
+argmin (similarity._argmin_rows) per iteration emitting per-partition
+partial sums, combined driver-side in numpy. BLAS summation can differ
+from the sequential fold in the last ulp, so only k at or below the
+threshold is oracle-exact.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pandas as pd
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from duckdb_routing_spark.operators.similarity import _dot_hof
+from duckdb_routing_spark.operators.similarity import (
+    _EXACT_ARGMIN_MAX_SEEDS,
+    _argmin_rows,
+    _nearest_seeds,
+    _stack_vectors,
+)
 
 # exact-mean formula copied from emb_label_centroids (proven oracle parity):
 # cast(sum(decimal(18,9)) as double) / count
@@ -31,35 +46,14 @@ _DEC = "decimal(18,9)"
 
 
 def _assign(emb: DataFrame, centroids: list[tuple[int, list[float]]], id_col: str, vec_col: str) -> DataFrame:
-    """(vec_id, cluster_id): argmin_c ||x-c||^2 via x.x - 2 x.c + c.c with
-    ties broken by cluster id. x.x is constant per row -> dropped from the
-    argmin; c.c is a literal computed by the SAME sequential kernel (on a
-    one-row frame) so its value matches the oracle's list_dot_product."""
-    spark = emb.sparkSession
-    cdf = spark.createDataFrame(
-        [(cid, vec) for cid, vec in centroids], "cluster_id int, cvec array<double>"
+    """(vec_id, cluster_id): the nearest centroid of every vector, ties to
+    the lowest cluster id (_nearest_seeds over the centroids as a
+    broadcast seed table)."""
+    cdf = emb.sparkSession.createDataFrame(
+        [(cid, vec) for cid, vec in centroids], "cluster_id int, svec array<double>"
     )
-    # pure-JVM HOF dots (similarity._dot_hof): left-to-right float64
-    # accumulation on already-double arrays (pinned bit-exact by the
-    # sim_ivf_topk and sim_ann_lsh oracles), and the per-iteration
-    # assignment plan has no ArrowEvalPython stage (HOF_AB_r11.json A/B).
-    # Operands are real columns from prior projections (the _dot_hof
-    # interpreted-inlining caveat).
-    cdf = cdf.withColumn("cc", F.expr(_dot_hof("cvec", "cvec")))
-    scored = (
-        emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("v"))
-        .crossJoin(F.broadcast(cdf))
-        .select(
-            "vec_id",
-            "cluster_id",
-            (F.lit(-2.0) * F.expr(_dot_hof("v", "cvec")) + F.col("cc")).alias("score"),
-        )
-    )
-    # NULLS LAST: HOF scoring nulls out malformed vectors (zip_with
-    # null-padding) — keep them from silently winning rank 1; non-null
-    # ordering unchanged
-    w = Window.partitionBy("vec_id").orderBy(F.asc_nulls_last("score"), "cluster_id")
-    return scored.withColumn("_rk", F.row_number().over(w)).filter("_rk = 1").select(
+    v = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
+    return _nearest_seeds(v, cdf, ["vec_id"], "v", "cluster_id", 1).select(
         "vec_id", "cluster_id"
     )
 
@@ -91,6 +85,39 @@ def _update(
     ]
 
 
+def _lloyd_batched(src: DataFrame, C: np.ndarray, iterations: int) -> np.ndarray:
+    """`iterations` Lloyd update steps from centroid matrix C over the
+    vectors in `src`'s column `v`: each step is one mapInPandas argmin pass
+    emitting per-partition partial sums (O(k*dim) rows per partition),
+    combined driver-side — no k-way crossJoin, no (cluster, dim) shuffle.
+    Same tie-break (lowest cluster id), empty-cluster rule (keep the
+    previous centroid) and malformed-vector errors as the exact trainer."""
+    kk, dim = C.shape
+    for _ in range(iterations):
+        c2 = (C * C).sum(axis=1)
+
+        def partials(iterator):
+            sums = np.zeros_like(C)
+            counts = np.zeros(kk, dtype=np.int64)
+            for pdf in iterator:
+                if len(pdf) == 0:
+                    continue
+                V = _stack_vectors(pdf["v"], dim)
+                a = _argmin_rows(V, C, c2)
+                np.add.at(sums, a, V)
+                counts += np.bincount(a, minlength=kk)
+            yield pd.DataFrame({"cell": np.arange(kk), "cnt": counts, "vsum": list(sums)})
+
+        agg = src.mapInPandas(partials, "cell int, cnt long, vsum array<double>").toPandas()
+        counts = np.zeros(kk, dtype=np.int64)
+        sums = np.zeros_like(C)
+        for _, row in agg.iterrows():
+            counts[row["cell"]] += row["cnt"]
+            sums[row["cell"]] += np.asarray(row["vsum"])
+        C = np.where((counts > 0)[:, None], sums / np.maximum(counts, 1)[:, None], C)
+    return C
+
+
 def kmeans_centroids(
     emb: DataFrame,
     k: int = 4,
@@ -98,13 +125,16 @@ def kmeans_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> list[tuple[int, list[float]]]:
-    """The trained quantizer itself: run the same Lloyd loop as
-    `kmeans_lloyd` and return the centroids its FINAL assignment uses
-    (iterations-1 update steps — so `_assign(emb, kmeans_centroids(...))`
-    reproduces `kmeans_lloyd(...)` exactly, pytest-pinned). This is the
-    k x dim artifact a production run persists and every consumer
-    broadcasts: IVF cell seeds, SemDeDup cells, assignment jobs."""
-    dim = len(emb.select(vec_col).first()[0])
+    """The trained quantizer: the centroids after iterations-1 Lloyd update
+    steps from the k lowest-id vectors, i.e. the centroids the FINAL
+    assignment of `kmeans_lloyd` uses. This is the k x dim artifact a
+    production run persists and every consumer broadcasts: IVF cell seeds,
+    SemDeDup cells, assignment jobs.
+
+    k <= _EXACT_ARGMIN_MAX_SEEDS runs the exact Lloyd (JVM assignment +
+    exact-decimal means, oracle-reproducible); larger k runs the batched
+    pass (_lloyd_batched), which moves O(n) rows per iteration where the
+    exact one ranks n * k pairs."""
     seeds = (
         emb.select(id_col, F.col(vec_col).cast("array<double>").alias("v"))
         .orderBy(id_col)
@@ -112,98 +142,26 @@ def kmeans_centroids(
         .collect()
     )
     centroids = [(i, list(r.v)) for i, r in enumerate(seeds)]
+    if len(centroids) > _EXACT_ARGMIN_MAX_SEEDS:
+        C = np.array([v for _, v in centroids], dtype=np.float64)
+        src = emb.select(F.col(vec_col).cast("array<double>").alias("v")).persist()
+        try:
+            C = _lloyd_batched(src, C, iterations - 1)
+        finally:
+            src.unpersist()
+        return [(i, [float(x) for x in C[i]]) for i in range(len(C))]
+    dim = len(centroids[0][1])
+    # a caller's own cache of `emb` is left in place
+    owned = emb.storageLevel == StorageLevel.NONE
     emb = emb.persist()
     try:
         for _ in range(iterations - 1):
             assigned = _assign(emb, centroids, id_col, vec_col)
             centroids = _update(emb, assigned, centroids, id_col, vec_col, dim)
     finally:
-        emb.unpersist()
+        if owned:
+            emb.unpersist()
     return centroids
-
-
-def kmeans_centroids_fast(
-    emb: DataFrame,
-    k: int = 4,
-    iterations: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    chunk_rows: int | None = None,
-) -> list[tuple[int, list[float]]]:
-    """Batch-vectorized Lloyd training for LARGE k — the sqrt(n) IVF
-    quantizer's trainer. Same seeding convention (the k lowest-id
-    vectors), same argmin tie-break (lowest cluster id wins — np.argmin
-    returns the first minimum), same empty-cluster rule (keep the previous
-    centroid) as :func:`kmeans_centroids`, but each iteration is one
-    mapInPandas pass emitting per-partition partial sums (O(k*dim) rows
-    per partition) combined driver-side in numpy — no k-way crossJoin, no
-    (cluster, dim) shuffle. BLAS pairwise summation differs from the
-    sequential kernel in the last ulp, so this is the opt-in scale path
-    (like build_ann_index(fast_assign=True)); the exact path remains the
-    DuckDB-oracle twin."""
-    import numpy as np
-    import pandas as pd
-
-    seeds = (
-        emb.select(id_col, F.col(vec_col).cast("array<double>").alias("v"))
-        .orderBy(id_col)
-        .limit(k)
-        .collect()
-    )
-    C = np.array([list(r.v) for r in seeds], dtype=np.float64)
-    kk, dim = C.shape
-    src = emb.select(F.col(vec_col).cast("array<double>").alias("v")).persist()
-    try:
-        for _ in range(iterations - 1):
-            C_b = C
-            c2 = (C_b * C_b).sum(axis=1)
-
-            def partials(iterator):
-                sums = np.zeros_like(C_b)
-                counts = np.zeros(kk, dtype=np.int64)
-                for pdf in iterator:
-                    if len(pdf) == 0:
-                        continue
-                    V = np.vstack(pdf["v"].to_numpy()).astype(np.float64, copy=False)
-                    # row-chunked argmin: a whole-batch score matrix is
-                    # n_batch x k doubles — 524 MB transient per worker at
-                    # k=1000 and 65536-row batches, which thrashes the
-                    # allocator across 32 workers (same fix as
-                    # _cell_assignments_fast; OPTIMIZATION_r10.md measured
-                    # 63 -> 3.4 s there). Same argmin per row.
-                    a = np.empty(V.shape[0], dtype=np.int64)
-                    # ~8M score doubles per chunk; chunk_rows overrides
-                    # for tests (prod batches never split at test k).
-                    # Same last-ulp chunk-shape caveat as
-                    # _cell_assignments_fast (BLAS kernel choice can vary
-                    # with chunk shape); opt-in non-oracle path.
-                    step = chunk_rows if chunk_rows is not None else max(1, (1 << 23) // max(1, kk))
-                    if step <= 0:
-                        raise ValueError(f"chunk_rows must be positive, got {chunk_rows}")
-                    for i in range(0, V.shape[0], step):
-                        a[i:i + step] = np.argmin(
-                            c2[None, :] - 2.0 * (V[i:i + step] @ C_b.T), axis=1
-                        )
-                    np.add.at(sums, a, V)
-                    counts += np.bincount(a, minlength=kk)
-                yield pd.DataFrame(
-                    {"cell": np.arange(kk), "cnt": counts, "vsum": list(sums)}
-                )
-
-            agg = src.mapInPandas(
-                partials, "cell int, cnt long, vsum array<double>"
-            ).toPandas()
-            counts = np.zeros(kk, dtype=np.int64)
-            sums = np.zeros_like(C)
-            for _, row in agg.iterrows():
-                counts[row["cell"]] += row["cnt"]
-                sums[row["cell"]] += np.asarray(row["vsum"])
-            nonempty = counts > 0
-            C = C.copy()
-            C[nonempty] = sums[nonempty] / counts[nonempty, None]
-    finally:
-        src.unpersist()
-    return [(i, [float(x) for x in C[i]]) for i in range(kk)]
 
 
 def centroids_df(spark, centroids: list[tuple[int, list[float]]]) -> DataFrame:
@@ -223,16 +181,6 @@ def kmeans_lloyd(
 ) -> DataFrame:
     """Run `iterations` Lloyd steps from the k lowest-id seed vectors;
     returns the final (vec_id, cluster_id) assignment."""
-    dim = len(emb.select(vec_col).first()[0])
-    seeds = (
-        emb.select(id_col, F.col(vec_col).cast("array<double>").alias("v"))
-        .orderBy(id_col)
-        .limit(k)
-        .collect()
+    return _assign(emb, kmeans_centroids(emb, k, iterations, id_col, vec_col), id_col, vec_col).orderBy(
+        "vec_id"
     )
-    centroids = [(i, list(r.v)) for i, r in enumerate(seeds)]
-    emb = emb.persist()
-    for _ in range(iterations - 1):
-        assigned = _assign(emb, centroids, id_col, vec_col)
-        centroids = _update(emb, assigned, centroids, id_col, vec_col, dim)
-    return _assign(emb, centroids, id_col, vec_col).orderBy("vec_id")

@@ -19,6 +19,9 @@ DuckDB-oracle-checkable.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -744,37 +747,37 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     return sums.select("doc_id", half[1].alias("sim_hi"), half[0].alias("sim_lo"))
 
 
-def simhash64_hamming_pairs(sig: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """(doc_a < doc_b, hamming) pairs within `max_hamming` (<= 3) of the
-    64-bit signature via a 4x16-bit banded equi-join — pigeonhole: a pair
-    differing in <= 3 bits differs in at most 3 of the 4 bands, so at
-    least one band matches exactly. No crossJoin; the pair space only
-    materializes inside shared-band buckets, exactly like
-    :func:`simhash_hamming_pairs` but with 2^64 signature space."""
-    if max_hamming > 3:
-        raise ValueError("4-band layout guarantees recall only for max_hamming <= 3")
-    lo, hi = F.col("sim_lo"), F.col("sim_hi")
-    mask = F.lit((1 << 16) - 1)
-    bands = F.array(
-        F.struct(F.lit(0).alias("band"), lo.bitwiseAND(mask).alias("bits")),
-        F.struct(F.lit(1).alias("band"), F.shiftright(lo, 16).bitwiseAND(mask).alias("bits")),
-        F.struct(F.lit(2).alias("band"), hi.bitwiseAND(mask).alias("bits")),
-        F.struct(F.lit(3).alias("band"), F.shiftright(hi, 16).bitwiseAND(mask).alias("bits")),
+def _banded_hamming_pairs(
+    sig: DataFrame, bands: list[tuple[str, int, int]], max_hamming: int
+) -> DataFrame:
+    """(doc_a < doc_b, hamming) pairs of `sig` rows whose signature bits
+    differ in at most `max_hamming` places, via a banded equi-join.
+    `bands` lists (column, shift, width) slices of the signature columns;
+    pigeonhole: a pair differing in <= len(bands) - 1 bits leaves at least
+    one band bit-exact, so the join on (band, bits) recovers every such
+    pair without an all-pairs crossJoin, and the pair space only
+    materializes inside shared-band buckets."""
+    if max_hamming > len(bands) - 1:
+        raise ValueError(
+            f"{len(bands)}-band layout guarantees recall only for max_hamming <= {len(bands) - 1}"
+        )
+    cols = list(dict.fromkeys(c for c, _, _ in bands))
+    parts = F.array(
+        *[
+            F.struct(
+                F.lit(i).alias("band"),
+                F.shiftright(F.col(c), shift).bitwiseAND(F.lit((1 << width) - 1)).alias("bits"),
+            )
+            for i, (c, shift, width) in enumerate(bands)
+        ]
     )
-    e = sig.select("doc_id", "sim_hi", "sim_lo", F.explode(bands).alias("b")).select(
-        "doc_id", "sim_hi", "sim_lo", F.col("b.band").alias("band"), F.col("b.bits").alias("bits")
+    e = sig.select("doc_id", *cols, F.explode(parts).alias("b")).select(
+        "doc_id", *cols, F.col("b.band").alias("band"), F.col("b.bits").alias("bits")
     )
-    a = e.select(
-        F.col("doc_id").alias("doc_a"), F.col("sim_hi").alias("ha"), F.col("sim_lo").alias("la"),
-        "band", "bits",
-    )
-    b = e.select(
-        F.col("doc_id").alias("doc_b"), F.col("sim_hi").alias("hb"), F.col("sim_lo").alias("lb"),
-        "band", "bits",
-    )
-    ham = (
-        F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-        + F.bit_count(F.col("la").bitwiseXOR(F.col("lb")))
+    a = e.select(F.col("doc_id").alias("doc_a"), *[F.col(c).alias(f"{c}_a") for c in cols], "band", "bits")
+    b = e.select(F.col("doc_id").alias("doc_b"), *[F.col(c).alias(f"{c}_b") for c in cols], "band", "bits")
+    ham = reduce(
+        operator.add, [F.bit_count(F.col(f"{c}_a").bitwiseXOR(F.col(f"{c}_b"))) for c in cols]
     ).cast("int")
     return (
         a.join(b, ["band", "bits"])
@@ -785,49 +788,35 @@ def simhash64_hamming_pairs(sig: DataFrame, max_hamming: int = 3) -> DataFrame:
     )
 
 
-# band layout for the 16-bit signature: (shift, width) for 3 bands of 6/5/5.
-# Pigeonhole: a pair with hamming distance <= 2 differs in at most 2 bands,
-# so at least one band matches bit-exactly -> an equi-join on (band, bits)
-# recovers every such pair without materializing the O(n^2) pair space.
-_SIMHASH16_BANDS = [(0, 6), (6, 5), (11, 5)]
+# 4x16-bit bands over the two 32-bit halves of simhash64's signature
+_SIMHASH64_BANDS = [("sim_lo", 0, 16), ("sim_lo", 16, 16), ("sim_hi", 0, 16), ("sim_hi", 16, 16)]
+
+
+def simhash64_hamming_pairs(sig: DataFrame, max_hamming: int = 3) -> DataFrame:
+    """(doc_a < doc_b, hamming) pairs within `max_hamming` (<= 3) of the
+    64-bit signature (doc_id, sim_hi, sim_lo) via a 4x16-bit banded
+    equi-join (_banded_hamming_pairs): a pair differing in <= 3 bits
+    differs in at most 3 of the 4 bands, so at least one band matches
+    exactly — :func:`simhash_hamming_pairs` with 2^64 signature space."""
+    return _banded_hamming_pairs(sig, _SIMHASH64_BANDS, max_hamming)
+
+
+# band layout for the 16-bit signature: 3 bands of 6/5/5 bits. Pigeonhole:
+# a pair with hamming distance <= 2 differs in at most 2 bands, so at least
+# one band matches bit-exactly
+_SIMHASH16_BANDS = [("simhash", 0, 6), ("simhash", 6, 5), ("simhash", 11, 5)]
 
 
 def simhash_hamming_pairs(sig: DataFrame, max_hamming: int = 2) -> DataFrame:
     """All (doc_a < doc_b) pairs within `max_hamming` (<= 2) of each other,
-    via banded equi-join — NOT an all-pairs crossJoin, so the pair space
-    only materializes inside shared-band buckets (bucket sizes stay bounded
-    when signatures are spread; at planet scale add bits/bands).
+    via banded equi-join (_banded_hamming_pairs) — NOT an all-pairs
+    crossJoin, so the pair space only materializes inside shared-band
+    buckets (bucket sizes stay bounded when signatures are spread; at
+    planet scale add bits/bands).
 
     Input: (doc_id, simhash) from :func:`simhash16`. Output columns
     (doc_a, doc_b, hamming)."""
-    if max_hamming > len(_SIMHASH16_BANDS) - 1:
-        raise ValueError("3-band layout guarantees recall only for max_hamming <= 2")
-    h = F.col("simhash")
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.shiftright(h, shift).bitwiseAND(F.lit((1 << width) - 1)).alias("bits"),
-            )
-            for i, (shift, width) in enumerate(_SIMHASH16_BANDS)
-        ]
-    )
-    e = sig.select("doc_id", "simhash", F.explode(bands).alias("b")).select(
-        "doc_id", "simhash", F.col("b.band").alias("band"), F.col("b.bits").alias("bits")
-    )
-    a = e.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("h1"), "band", "bits")
-    b = e.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("h2"), "band", "bits")
-    return (
-        a.join(b, ["band", "bits"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.bit_count(F.col("h1").bitwiseXOR(F.col("h2"))).cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    return _banded_hamming_pairs(sig, _SIMHASH16_BANDS, max_hamming)
 
 
 # ---------------------------------------------------------------------------

@@ -14,9 +14,12 @@ Python stage. Every sum is bit-identical to DuckDB's list_dot_product:
 float32 inputs cast to double make each product exact (24+24 < 53
 mantissa bits), and the fold accumulates left to right from 0.0, which
 removes the only remaining parity risk, summation order. Python kernels
-remain only where they measured faster: the map-side top-k of cosine_topk
-and the batch argmin of _cell_assignments_fast (HOF_AB_r11.json and
-OPTIMIZATION_r10/r11.md hold the A/B measurements behind these choices).
+remain only where they measured faster: the map-side top-k of cosine_topk,
+and the chunked batch argmin (_argmin_rows) that index builds and k-means
+training switch to above _EXACT_ARGMIN_MAX_SEEDS seeds (HOF_AB_r11.json,
+OPTIMIZATION_r10/r11.md and CHANGES.md hold the measurements behind these
+choices). IVF cells, probe lists, k-means assignment and PQ codes all rank
+seeds through one JVM primitive, _nearest_seeds.
 """
 
 from __future__ import annotations
@@ -329,43 +332,131 @@ def _with_double_vec(df: DataFrame, name: str, out: str) -> DataFrame:
     return df.selectExpr("*", f"transform({name}, x -> cast(x as double)) AS {out}")
 
 
-def _cell_assignments(
-    vecs: DataFrame, seeds: DataFrame, id_alias: str, vec_alias: str, rank_limit: int
+def _quoted(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier, so names with
+    dots or spaces (`src.lang`) resolve as one column."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _normed(
+    df: DataFrame, id_col: str, vec_col: str, names: tuple[str, str, str],
+    meta_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Distance-to-seed ranking: score = dot(s,s) - 2*dot(v,s) (== ||v-s||^2
-    minus the constant dot(v,v)), ties by seed id. rank_limit=1 assigns a
-    vector to its cell; >1 gives a query its probe list. Preserves the
-    input columns and adds `cell`."""
-    keep = [c for c in vecs.columns]
-    # scoring via the pure-JVM HOF dot (_dot_hof): left-to-right float64
-    # accumulation (pinned by the sim_ivf_topk / sim_ann_lsh oracles) with
-    # no ArrowEvalPython stage — interleaved A/B at 1M vectors x 1000 cells
-    # measured a pandas-UDF dot 4.2x slower on the probe's scored join
-    # (OPTIMIZATION_r10.md, persisted IVF store). The float64 twins are
-    # projected on each SIDE before the join, so the per-element cast runs
-    # once per input row, not once per pair
-    scored = (
-        _with_double_vec(vecs, vec_alias, "__vd")
-        .crossJoin(F.broadcast(_with_double_vec(seeds, "svec", "__sd")))
-        .select(
-            *keep,
-            "cell",
-            (
-                F.expr(_dot_hof("__sd", "__sd"))
-                - F.lit(2.0) * F.expr(_dot_hof("__vd", "__sd"))
-            ).alias("score"),
-        )
-    )
-    # NULLS LAST: HOF scoring null-pads dimension-mismatched arrays
-    # (zip_with) and propagates null elements, so a malformed vector scores
-    # NULL — under the default ASC (nulls first) it would silently win
-    # rank 1. Ordering of non-null scores is unchanged, so values/oracle
-    # hashes are identical.
-    w = Window.partitionBy(id_alias).orderBy(F.asc_nulls_last("score"), F.asc("cell"))
+    """(id, vec, norm, *meta_cols) under the three `names`: each vector
+    with its L2 norm as the HOF self-dot over a float64 twin (_hof_norm),
+    so no ArrowEvalPython pass over the scan computes norms; the twin is
+    projected away. The row shape of IVF corpora, queries and stores."""
+    i, v, n = names
+    meta = [_quoted(m) for m in (meta_cols or [])]
+    return _with_double_vec(
+        df.select(F.col(_quoted(id_col)).alias(i), F.col(_quoted(vec_col)).alias(v),
+                  *[F.col(m) for m in meta]),
+        v, "__nt",
+    ).selectExpr(i, v, f"{_hof_norm('__nt')} AS {n}", *meta)
+
+
+# seed count up to which index builds and k-means training run the exact
+# JVM ranking; above it they switch to the chunked numpy argmin
+# (_argmin_rows). Interleaved timing of cell assignment on a 4-core host
+# (CHANGES.md) found no crossover: the batched pass won every pair from 4
+# to 256 seeds and 2k to 200k vectors, and the JVM path's pair work grows
+# with the seed count (17.7 s vs 1.0 s at 200k x 64). What bounds it from
+# below is oracle parity: the largest seed count an oracle-checked build
+# or trainer uses is 8 (sim_ann_index_probe), and only the JVM path is
+# bit-identical to DuckDB.
+_EXACT_ARGMIN_MAX_SEEDS = 8
+
+
+def _first_seeds(corpus: DataFrame, n: int, id_col: str, vec_col: str) -> DataFrame:
+    """The default codebook: the first `n` corpus vectors by id as a
+    (cell, svec) seed table."""
     return (
-        scored.withColumn("crank", F.row_number().over(w))
-        .filter(F.col("crank") <= rank_limit)
-        .drop("score", "crank")
+        corpus.orderBy(id_col)
+        .limit(n)
+        .select(F.col(id_col).alias("cell"), F.col(vec_col).alias("svec"))
+    )
+
+
+def _seed_twins(seeds: DataFrame) -> DataFrame:
+    """Seed table plus `__sd`, the float64 twin of its vector `svec`, and
+    `__ss`, the twin's self-dot. Projected once per seed on the broadcast
+    side, so a scored pair pays one HOF fold, dot(v, s)."""
+    return _with_double_vec(seeds, "svec", "__sd").selectExpr(
+        "*", f"{_dot_hof('__sd', '__sd')} AS __ss"
+    )
+
+
+def _nearest_seeds(
+    vecs: DataFrame,
+    seeds: DataFrame,
+    keys: list[str],
+    vec_col: str,
+    seed_id: str,
+    rank_limit: int,
+    on: str | None = None,
+) -> DataFrame:
+    """The `rank_limit` nearest seeds of every vector: `vecs` columns plus
+    `seed_id`, one row per kept (vector, seed). `seeds` carries `seed_id`,
+    the seed vector `svec` and, when `on` is set, the equi-join column
+    (PQ's subspace `s`); otherwise every vector meets every seed.
+
+    The score is ||v-s||^2 minus the per-vector constant dot(v,v):
+    dot(s,s) - 2*dot(v,s) with dot(s,s) precomputed per seed (_seed_twins),
+    both as _dot_hof folds over float64 twins, so values are bit-identical
+    to DuckDB's list_dot_product. Ranks number `keys` by (score NULLS LAST,
+    seed_id); rank_limit=1 assigns a vector to its cell, cluster or code,
+    >1 gives a query its probe list.
+
+    A NULL vector, a NULL (or NaN) element or a size other than the seed
+    dim scores NULL (NaN) against every seed and would silently take the
+    lowest seed id; the check on the kept rows raises instead, once per
+    vector, with the offending size."""
+    s = _seed_twins(seeds).select(
+        *([on] if on else []), seed_id, "__sd", "__ss", F.size("__sd").alias("__sdim")
+    )
+    v = _with_double_vec(vecs, vec_col, "__vd")
+    pairs = v.join(F.broadcast(s), on) if on else v.crossJoin(F.broadcast(s))
+    scored = pairs.select(
+        *[_quoted(c) for c in vecs.columns],
+        seed_id,
+        "__sdim",
+        (F.col("__ss") - F.lit(2.0) * F.expr(_dot_hof("__vd", "__sd"))).alias("__score"),
+    )
+    w = Window.partitionBy(*keys).orderBy(F.asc_nulls_last("__score"), F.asc(seed_id))
+    vq = _quoted(vec_col)
+    malformed = (
+        f"IF(__score IS NULL OR isnan(__score), CASE "
+        f"WHEN {vq} IS NULL THEN raise_error('nearest_seeds: NULL vector') "
+        f"WHEN size({vq}) != __sdim THEN raise_error(format_string("
+        f"'nearest_seeds: vector of %d elements, dim is %d', size({vq}), __sdim)) "
+        f"ELSE raise_error('nearest_seeds: NULL or NaN element in a vector or seed') END, "
+        f"TRUE)"
+    )
+    return (
+        scored.withColumn("__rank", F.row_number().over(w))
+        .filter(F.col("__rank") <= rank_limit)
+        .filter(F.expr(malformed))
+        .drop("__score", "__rank", "__sdim")
+    )
+
+
+def _rank_by_cosine(pairs: DataFrame, qd: str, cd: str, k: int) -> DataFrame:
+    """Top-k per query over joined (query, vector) candidate pairs carrying
+    float64 twins `qd`/`cd` and norms qnorm/cnorm: self-matches dropped,
+    cosine as the HOF dot over the norm product, ranks ordered by
+    (cosine DESC, vec_id). The shared tail of ivf_topk, ann_query_index
+    and ann_lsh_topk; no Python stage (a pandas-UDF dot measured 4.2x
+    slower on the probe join, OPTIMIZATION_r10.md)."""
+    scored = pairs.filter(F.col("vec_id") != F.col("query_id")).select(
+        "query_id",
+        "vec_id",
+        (F.expr(_dot_hof(qd, cd)) / (F.col("qnorm") * F.col("cnorm"))).alias("cosine"),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .orderBy("query_id", "rank")
     )
 
 
@@ -389,61 +480,67 @@ def ivf_topk(
     once; a probe reads n_probe/n_cells of the data. Complements
     ann_lsh_topk: IVF adapts to the data's density; LSH needs no training."""
     if seeds is None:
-        seeds = (
-            corpus.orderBy(id_col)
-            .limit(n_cells)
-            .select(F.col(id_col).alias("cell"), F.col(vec_col).alias("svec"))
-        )
-    # norms via the HOF self-dot on a float64 twin (_hof_norm) — no
-    # ArrowEvalPython on either scan; the twin is projected away so
-    # downstream shapes are unchanged
-    c = _with_double_vec(
-        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cvec")),
-        "cvec", "__nt",
-    ).selectExpr("vec_id", "cvec", f"{_hof_norm('__nt')} AS cnorm")
-    q = _with_double_vec(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")),
-        "qvec", "__nt",
-    ).selectExpr("query_id", "qvec", f"{_hof_norm('__nt')} AS qnorm")
-    c_cells = _cell_assignments(c, seeds, "vec_id", "cvec", 1)
-    q_cells = _cell_assignments(q, seeds, "query_id", "qvec", n_probe)
+        seeds = _first_seeds(corpus, n_cells, id_col, vec_col)
+    c = _normed(corpus, id_col, vec_col, ("vec_id", "cvec", "cnorm"))
+    q = _normed(queries, id_col, vec_col, ("query_id", "qvec", "qnorm"))
+    c_cells = _nearest_seeds(c, seeds, ["vec_id"], "cvec", "cell", 1)
+    q_cells = _nearest_seeds(q, seeds, ["query_id"], "qvec", "cell", n_probe)
     # a vector lives in exactly one cell, so a (query, vector) pair meets at
-    # most once even with multi-probe — no dedup needed
-    scored = (
-        _with_double_vec(c_cells, "cvec", "__cd")
-        .join(F.broadcast(_with_double_vec(q_cells, "qvec", "__qd")), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            # HOF dot, no Python stage (a pandas-UDF dot measured 4.2x
-            # slower on the probe join, OPTIMIZATION_r10.md); per-side
-            # float64 twins keep products exact on float32 input
-            (F.expr(_dot_hof("__qd", "__cd")) / (F.col("qnorm") * F.col("cnorm"))).alias("cosine"),
-        )
+    # most once even with multi-probe — no dedup needed; per-side float64
+    # twins keep products exact on float32 input
+    pairs = _with_double_vec(c_cells, "cvec", "__cd").join(
+        F.broadcast(_with_double_vec(q_cells, "qvec", "__qd")), "cell"
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return _rank_by_cosine(pairs, "__qd", "__cd", k)
 
 
-def _cell_assignments_fast(
-    vecs: DataFrame, seeds: DataFrame, vec_alias: str, chunk_rows: int | None = None
-) -> DataFrame:
-    """Vectorized build-time cell assignment: broadcast the seed MATRIX
-    into a mapInPandas batch argmin (one BLAS matmul per Arrow batch), so
-    the Arrow traffic is O(n) instead of the exact path's O(n * n_cells)
-    crossJoin pairs — the difference between 1 GB and 100+ GB of transfer
-    at 1M vectors x 64+ cells (measured by tools/ann_curve.py; at 100 TB
-    the crossJoin form is not buildable). Same argument order and
-    tie-break (lowest cell id wins: argmin returns the first minimum and
-    seeds are scanned in cell order) as `_cell_assignments(rank_limit=1)`;
-    BLAS pairwise summation can differ from sequential accumulation in the
-    last ulp, so this is OPT-IN for stores whose oracles replay the exact
-    sequential math (`build_ann_index(fast_assign=True)`)."""
+def _stack_vectors(col: pd.Series, dim: int) -> np.ndarray:
+    """A non-empty Arrow batch's vector column as an (n, dim) float64
+    matrix. Raises on the inputs _nearest_seeds rejects: a NULL vector, a
+    size other than `dim`, and a NULL element (Arrow hands it over as NaN,
+    so NaN raises too)."""
+    try:
+        V = np.vstack(col.to_numpy()).astype(np.float64, copy=False)
+    except (ValueError, TypeError):  # ragged, or a None among the arrays
+        V = None
+    if V is None or V.shape[1] != dim:
+        for v in col:
+            if v is None:
+                raise ValueError("nearest_seeds: NULL vector")
+            if len(v) != dim:
+                raise ValueError(f"nearest_seeds: vector of {len(v)} elements, dim is {dim}")
+    if np.isnan(V).any():
+        raise ValueError("nearest_seeds: NULL or NaN element in a vector or seed")
+    return V
+
+
+def _argmin_rows(V: np.ndarray, S: np.ndarray, s2: np.ndarray, *, step: int | None = None) -> np.ndarray:
+    """Index of the nearest seed row of S for every row of V: argmin of
+    s2 - 2 V.S^T, where s2 holds the seeds' self-dots. np.argmin takes the
+    first minimum, so an exact tie goes to the lowest seed index. The
+    batched twin of _nearest_seeds for large seed counts.
+
+    Scores are computed in row chunks of `step` (default ~8M doubles per
+    chunk): a whole-batch matrix is n_batch x n_seeds doubles (65536 x 1000
+    = 524 MB transient per worker) and thrashed the allocator across
+    workers (interleaved A/B at 1M x 1000 cells: 63.4 s -> 3.4 s median,
+    OPTIMIZATION_r10.md). BLAS summation order differs from the sequential
+    fold, and BLAS may pick a different kernel for a short trailing chunk,
+    so near-ties can flip against the JVM path in the last ulp."""
+    if step is None:
+        step = max(1, (1 << 23) // max(1, S.shape[0]))
+    out = np.empty(V.shape[0], dtype=np.int64)
+    for i in range(0, V.shape[0], step):
+        out[i:i + step] = np.argmin(s2[None, :] - 2.0 * (V[i:i + step] @ S.T), axis=1)
+    return out
+
+
+def _nearest_cell_batched(vecs: DataFrame, seeds: DataFrame, vec_col: str) -> DataFrame:
+    """`vecs` plus `cell`, its nearest seed, through one mapInPandas pass
+    over the collected seed matrix (_argmin_rows): Arrow traffic is O(n)
+    instead of the O(n * n_seeds) pairs the JVM path ranks. Same tie-break
+    as _nearest_seeds (seeds are scanned in cell order) and the same
+    malformed-vector errors; scores follow BLAS summation order."""
     rows = seeds.orderBy("cell").collect()
     cells = np.array([r.cell for r in rows], dtype=np.int64)
     S = np.array([list(r.svec) for r in rows], dtype=np.float64)
@@ -458,34 +555,21 @@ def _cell_assignments_fast(
         for pdf in iterator:
             if len(pdf) == 0:
                 continue
-            V = np.vstack(pdf[vec_alias].to_numpy()).astype(np.float64, copy=False)
-            # argmin in ROW CHUNKS: a whole-batch score matrix is
-            # n_batch x n_cells doubles (65536 x 1000 = 524 MB transient
-            # PER WORKER at sqrt(n) cells — 32 workers allocate ~16 GB a
-            # wave, and the measured build was bimodal 7.6-80 s per action
-            # under the resulting allocator/THP thrash). Chunking bounds
-            # the transient to ~64 MB; same argmin per row. Interleaved
-            # A/B at 1M x 1000 cells: 63.4 s -> 3.4 s median and the
-            # variance collapses (OPTIMIZATION_r10.md).
-            out = np.empty(V.shape[0], dtype=np.int64)
-            # ~8M score doubles per chunk; chunk_rows overrides for tests
-            # (prod batches never split below n_cells ~8k). Caveat: BLAS
-            # may pick different kernels for different chunk SHAPES (e.g. a
-            # short trailing chunk hitting GEMV), so chunked scores can
-            # differ from whole-batch in the last ulp and flip argmin on
-            # near-ties — the same class of sensitivity as the documented
-            # BLAS-vs-sequential caveat; this path is opt-in non-oracle.
-            step = chunk_rows if chunk_rows is not None else max(1, (1 << 23) // max(1, S.shape[0]))
-            if step <= 0:
-                raise ValueError(f"chunk_rows must be positive, got {chunk_rows}")
-            for i in range(0, V.shape[0], step):
-                scores = s2[None, :] - 2.0 * (V[i:i + step] @ S.T)
-                out[i:i + step] = np.argmin(scores, axis=1)
+            idx = _argmin_rows(_stack_vectors(pdf[vec_col], S.shape[1]), S, s2)
             pdf = pdf.copy()
-            pdf["cell"] = cells[out].astype("int32")
+            pdf["cell"] = cells[idx].astype("int32")
             yield pdf
 
     return vecs.mapInPandas(assign, out_schema)
+
+
+def _assign_cells(c: DataFrame, seeds: DataFrame) -> DataFrame:
+    """Every store row plus its `cell`. The seed count picks the kernel:
+    the exact JVM ranking up to _EXACT_ARGMIN_MAX_SEEDS seeds, the batched
+    numpy argmin above (counting a seed table is one small job)."""
+    if seeds.count() > _EXACT_ARGMIN_MAX_SEEDS:
+        return _nearest_cell_batched(c, seeds, "cvec")
+    return _nearest_seeds(c, seeds, ["vec_id"], "cvec", "cell", 1)
 
 
 def build_ann_index(
@@ -497,16 +581,21 @@ def build_ann_index(
     seeds: DataFrame | None = None,
     index_fs=None,
     meta_cols: list[str] | None = None,
-    fast_assign: bool = False,
     max_cells: int = 65536,
 ) -> None:
     """Persist the IVF index the way a 100 TB vector store actually lays
     out: vectors written CELL-PARTITIONED (<index_dir>/cells/cell=K/) so a
     probe is a partition-PRUNED read of n_probe/n_cells of the data at the
     file-listing level, plus the tiny seed table (<index_dir>/seeds/).
-    `seeds` takes a trained quantizer (`clustering.kmeans_centroids` /
-    `kmeans_centroids_fast` + `centroids_df`); default is the
-    deterministic first-n_cells codebook `ivf_topk` uses.
+    `seeds` takes a trained quantizer (`clustering.kmeans_centroids` +
+    `centroids_df`); default is the deterministic first-n_cells codebook
+    `ivf_topk` uses. `meta_cols` ride along in every row, so a filtered
+    probe can push its predicate into the pruned scan.
+
+    Cell assignment reads the seed table back from the store and picks its
+    kernel by the seed count (_assign_cells): the exact JVM ranking up to
+    _EXACT_ARGMIN_MAX_SEEDS cells, the batched numpy argmin above, whose
+    Arrow traffic is O(n) where the JVM path ranks n * n_cells pairs.
 
     n_cells=None (the default) SCALES THE QUANTIZER WITH THE CORPUS:
     max(8, min(max_cells, round(sqrt(n)))) — conventional IVF sizing,
@@ -518,30 +607,14 @@ def build_ann_index(
     against the build's own write."""
     import os as _os
 
+    from duckdb_routing_spark.operators.fs import live_table_dir
+
     if seeds is None:
         if n_cells is None:
             n_cells = max(8, min(max_cells, int(round(corpus.count() ** 0.5))))
-        seeds = (
-            corpus.orderBy(id_col)
-            .limit(n_cells)
-            .select(F.col(id_col).alias("cell"), F.col(vec_col).alias("svec"))
-        )
-    from duckdb_routing_spark.operators.fs import live_table_dir
-
-    seeds.write.mode("overwrite").parquet(
-        live_table_dir(_os.path.join(index_dir, "seeds"), index_fs)
-    )
-    # cnorm via the HOF self-dot on a float64 twin (_hof_norm), so the
-    # build pays no ArrowEvalPython pass over the whole corpus for norms
-    c = _with_double_vec(
-        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cvec"),
-                      *[F.col(m) for m in (meta_cols or [])]),
-        "cvec", "__nt",
-    ).selectExpr("vec_id", "cvec", f"{_hof_norm('__nt')} AS cnorm",
-                 *(meta_cols or []))
-    # metadata columns ride INSIDE the cell partitions so a filtered probe
-    # (ann_query_index(filter_expr=...)) pushes its predicate into the
-    # pruned scan — partition pruning and rowgroup filtering compose
+        seeds = _first_seeds(corpus, n_cells, id_col, vec_col)
+    seeds_dir = live_table_dir(_os.path.join(index_dir, "seeds"), index_fs)
+    seeds.write.mode("overwrite").parquet(seeds_dir)
     # two-level layout (ingest_batch, cell): the base build is batch -1 and
     # every extension owns a batch id, so an at-least-once replay of an
     # increment overwrites ITS OWN partitions (dynamic partition overwrite)
@@ -549,10 +622,9 @@ def build_ann_index(
     # STATIC overwrite on purpose: a (re)build is a from-scratch truncate —
     # dynamic mode would leave earlier increments' ingest_batch=N partitions
     # (and cells the new corpus no longer touches) alive under the new base
-    assigned = (
-        _cell_assignments_fast(c, seeds, "cvec")
-        if fast_assign
-        else _cell_assignments(c, seeds, "vec_id", "cvec", 1)
+    assigned = _assign_cells(
+        _normed(corpus, id_col, vec_col, ("vec_id", "cvec", "cnorm"), meta_cols),
+        corpus.sparkSession.read.parquet(seeds_dir),
     )
     # colocate each cell in one task before the partitioned write: without
     # this every upstream task opens a writer per cell it sees (tasks x
@@ -579,7 +651,8 @@ def extend_ann_index(
 ) -> None:
     """Grow a persisted IVF index in place: assign the new vectors against
     the index's OWN seed table (the quantizer is immutable once built —
-    re-seeding would orphan every existing cell) and land them under
+    re-seeding would orphan every existing cell; same kernel choice by
+    seed count as build_ann_index) and land them under
     (ingest_batch=increment, cell=K) with dynamic partition overwrite, so
     REPLAYING an increment (at-least-once delivery, foreachBatch retries)
     overwrites its own partitions instead of appending duplicates.
@@ -593,13 +666,7 @@ def extend_ann_index(
 
     spark = new_vectors.sparkSession
     seeds = spark.read.parquet(live_table_dir(_os.path.join(index_dir, "seeds"), index_fs))
-    # same HOF-norm conversion as build_ann_index (bit-identical values)
-    c = _with_double_vec(
-        new_vectors.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cvec"),
-                           *[F.col(m) for m in (meta_cols or [])]),
-        "cvec", "__nt",
-    ).selectExpr("vec_id", "cvec", f"{_hof_norm('__nt')} AS cnorm",
-                 *(meta_cols or []))
+    c = _normed(new_vectors, id_col, vec_col, ("vec_id", "cvec", "cnorm"), meta_cols)
     # schema-drift guard: an extension must carry the SAME column set the
     # store already holds — appended files with missing/extra metadata would
     # silently shadow columns at read time (plain parquet picks one footer)
@@ -613,13 +680,13 @@ def extend_ann_index(
             f"extension columns {sorted(c.columns)} do not match the store's "
             f"{sorted(existing)} — pass the same meta_cols as the build"
         )
-    _cell_assignments(c, seeds, "vec_id", "cvec", 1).withColumn(
+    _assign_cells(c, seeds).withColumn(
         "ingest_batch", F.lit(increment)
     ).repartition("cell").write.option(
         "partitionOverwriteMode", "dynamic"
     ).mode("overwrite").partitionBy(
         "ingest_batch", "cell"
-    ).parquet(live_table_dir(_os.path.join(index_dir, "cells"), index_fs))
+    ).parquet(cells_live)
 
 
 def delete_from_ann_index(
@@ -793,17 +860,12 @@ def ann_query_index(
     from duckdb_routing_spark.operators.fs import live_table_dir
 
     seeds = spark.read.parquet(live_table_dir(_os.path.join(index_dir, "seeds"), index_fs))
-    # qnorm via the HOF self-dot on a float64 twin (_hof_norm) — the probe
-    # plan has no Python stage
-    q = _with_double_vec(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")),
-        "qvec", "__nt",
-    ).selectExpr("query_id", "qvec", f"{_hof_norm('__nt')} AS qnorm")
+    q = _normed(queries, id_col, vec_col, ("query_id", "qvec", "qnorm"))
     # materialize the (tiny) assignment once: the probe list collect and the
     # broadcast join side must see the SAME rows — a lazy plan would
     # evaluate twice, and a nondeterministic `queries` input could then
     # probe cells its re-computed assignments no longer match
-    q_cells = _cell_assignments(q, seeds, "query_id", "qvec", n_probe).localCheckpoint()
+    q_cells = _nearest_seeds(q, seeds, ["query_id"], "qvec", "cell", n_probe).localCheckpoint()
     probe = [r.cell for r in q_cells.select("cell").distinct().collect()]
     cells = spark.read.parquet(live_table_dir(_os.path.join(index_dir, "cells"), index_fs)).filter(
         F.col("cell").isin(probe)
@@ -814,25 +876,10 @@ def ann_query_index(
         # join — a probe reads n_probe/n_cells of the index AND only the
         # rows matching the filter; top-k is exact over the filtered slice
         cells = cells.where(F.expr(filter_expr))
-    scored = (
-        _with_double_vec(cells, "cvec", "__cd")
-        .join(F.broadcast(_with_double_vec(q_cells, "qvec", "__qd")), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            # HOF dot, no Python stage (a pandas-UDF dot measured 4.2x
-            # slower on the probe join, OPTIMIZATION_r10.md); per-side
-            # float64 twins keep products exact on float32 input
-            (F.expr(_dot_hof("__qd", "__cd")) / (F.col("qnorm") * F.col("cnorm"))).alias("cosine"),
-        )
+    pairs = _with_double_vec(cells, "cvec", "__cd").join(
+        F.broadcast(_with_double_vec(q_cells, "qvec", "__qd")), "cell"
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return _rank_by_cosine(pairs, "__qd", "__cd", k)
 
 
 def semantic_dedup(
@@ -861,11 +908,7 @@ def semantic_dedup(
     the in-house path (the SemDeDup paper's actual recipe: kmeans cells,
     then prune)."""
     if seeds is None:
-        seeds = (
-            corpus.orderBy(id_col)
-            .limit(n_cells)
-            .select(F.col(id_col).alias("cell"), F.col(vec_col).alias("svec"))
-        )
+        seeds = _first_seeds(corpus, n_cells, id_col, vec_col)
     # HOF dot + norm on a per-side float64 twin (the _with_double_vec
     # idiom): no ArrowEvalPython stage on the corpus scan or the cell-local
     # pair stream (HOF_AB_r11.json A/B at volume). The twin `vd` doubles as
@@ -873,7 +916,7 @@ def semantic_dedup(
     c = _with_double_vec(
         corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")), "v", "vd"
     ).selectExpr("vec_id", "vd", f"{_hof_norm('vd')} AS nrm")
-    cells = _cell_assignments(c, seeds, "vec_id", "vd", 1)
+    cells = _nearest_seeds(c, seeds, ["vec_id"], "vd", "cell", 1)
     a = cells.select(F.col("vec_id").alias("id_a"), F.col("vd").alias("va"), F.col("nrm").alias("na"), "cell")
     b = cells.select(F.col("vec_id").alias("id_b"), F.col("vd").alias("vb"), F.col("nrm").alias("nb"), "cell")
     pruned = (
@@ -966,21 +1009,7 @@ def ann_lsh_topk(
     # (HOF_AB_r11.json A/B), so the plan has no Python stage
     sig_corpus = _bucketed(corpus, id_col, vec_col, "vec_id", "cd", "cnorm", dim, n_planes)
     sig_q = _bucketed(queries, id_col, vec_col, "query_id", "qd", "qnorm", dim, n_planes)
-    scored = (
-        sig_corpus.join(F.broadcast(sig_q), "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            (F.expr(_dot_hof("qd", "cd")) / (F.col("qnorm") * F.col("cnorm"))).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return _rank_by_cosine(sig_corpus.join(F.broadcast(sig_q), "bucket"), "qd", "cd", k)
 
 
 # ---------------------------------------------------------------------------
@@ -1030,30 +1059,14 @@ def pq_encode(corpus: DataFrame, codebook: DataFrame, dim: int = 64, m: int = 8,
     uint8s per vector, a 32x compression of dim-64 float32) is what ADC
     search then reads instead of the raw embeddings."""
     subs = F.array(*_subvectors(F.col(vec_col), dim, m))
-    exploded = _with_double_vec(
-        corpus.select(F.col(id_col).alias("vec_id"), F.posexplode(subs).alias("s", "sub")),
-        "sub",
-        "subd",
-    )
-    # HOF dots on float64 twins (HOF_AB_r11.json A/B at encode volume);
-    # dot(c,c) is constant per codebook entry, so it is computed ONCE per
-    # m*k broadcast row instead of per (vector, subspace, code) pair (same
-    # value attached by the join)
-    cb = _with_double_vec(codebook, "cvec", "cvecd").selectExpr(
-        "s", "code", "cvecd", f"{_dot_hof('cvecd', 'cvecd')} AS cc"
-    )
-    scored = exploded.join(F.broadcast(cb), "s").select(
-        "vec_id",
-        "s",
-        "code",
-        (F.col("cc") - 2.0 * F.expr(_dot_hof("subd", "cvecd"))).alias("score"),
-    )
-    # NULLS LAST for the same malformed-vector reason as _cell_assignments
-    w = Window.partitionBy("vec_id", "s").orderBy(F.asc_nulls_last("score"), F.asc("code"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", "s", "code")
+    exploded = corpus.select(F.col(id_col).alias("vec_id"), F.posexplode(subs).alias("s", "sub"))
+    # the codebook is the seed table, joined on the subspace: HOF dots on
+    # float64 twins (HOF_AB_r11.json A/B at encode volume) with dot(c,c)
+    # computed once per m*k broadcast row; a subvector that is short,
+    # NULL or holds a NULL element raises
+    cb = codebook.withColumnRenamed("cvec", "svec")
+    return _nearest_seeds(exploded, cb, ["vec_id", "s"], "sub", "code", 1, on="s").select(
+        "vec_id", "s", "code"
     )
 
 
@@ -1084,16 +1097,14 @@ def pq_adc_topk(corpus: DataFrame, queries: DataFrame, topk: int = 10,
         "qsub",
         "qsubd",
     )
-    # same HOF-on-twins conversion as pq_encode (bit-identical values; the
-    # LUT build no longer crosses the Python boundary)
-    cbq = _with_double_vec(codebook, "cvec", "cvecd").selectExpr(
-        "s", "code", "cvecd", f"{_dot_hof('cvecd', 'cvecd')} AS cc"
-    )
-    lut = q.join(F.broadcast(cbq), "s").select(
+    # the codebook twins pq_encode scores against (_seed_twins:
+    # bit-identical values, no Python stage in the LUT build)
+    cb = _seed_twins(codebook.withColumnRenamed("cvec", "svec"))
+    lut = q.join(F.broadcast(cb), "s").select(
         "query_id",
         "s",
         "code",
-        (F.col("cc") - 2.0 * F.expr(_dot_hof("qsubd", "cvecd"))).alias("partial"),
+        (F.col("__ss") - 2.0 * F.expr(_dot_hof("qsubd", "__sd"))).alias("partial"),
     )
     scored = (
         codes.join(F.broadcast(lut), ["s", "code"])
@@ -1101,7 +1112,7 @@ def pq_adc_topk(corpus: DataFrame, queries: DataFrame, topk: int = 10,
         .groupBy("query_id", "vec_id")
         .agg(F.sum("partial").alias("adc"))
     )
-    # NULLS LAST for the same malformed-vector reason as _cell_assignments
+    # NULLS LAST: a NULL partial must not win rank 1
     w = Window.partitionBy("query_id").orderBy(F.asc_nulls_last("adc"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))

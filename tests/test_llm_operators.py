@@ -199,6 +199,15 @@ def test_simhash_banded_pairs_match_bruteforce(spark, docs):
     assert got == want
 
 
+def test_simhash_pair_finders_guard_their_recall_radius():
+    """Pigeonhole recall holds only below the band count: both banded pair
+    finders refuse a radius their layout cannot guarantee."""
+    with pytest.raises(ValueError, match="3-band layout guarantees recall only for max_hamming <= 2"):
+        dedup.simhash_hamming_pairs(None, max_hamming=3)
+    with pytest.raises(ValueError, match="4-band layout guarantees recall only for max_hamming <= 3"):
+        dedup.simhash64_hamming_pairs(None, max_hamming=4)
+
+
 def test_ann_recall_vs_exact(spark, emb):
     queries = emb.filter(F.col("vec_id") < 10)
     exact = similarity.cosine_topk(emb, queries, k=10).select("query_id", "vec_id")
@@ -1144,16 +1153,23 @@ def test_ann_index_probe_prunes_partitions_and_matches_ivf(spark, emb, tmp_path)
     assert m and "IN" in m.group(1).upper(), "probe scan lost its cell partition filter"
 
 
-def test_ann_fast_assign_build_matches_exact_build(spark, emb, tmp_path):
-    """fast_assign=True (batch-argmin over the broadcast seed matrix —
-    O(n) Arrow traffic instead of the exact path's O(n*cells) crossJoin
-    pairs) must place every vector in the same cell and serve identical
-    probes on this fixture; the exact path stays the default because BLAS
-    summation can differ from sequential accumulation in the last ulp on
-    adversarial near-ties."""
-    a, b = str(tmp_path / "exact"), str(tmp_path / "fast")
+def test_ann_batched_build_matches_exact_build(spark, emb, tmp_path, monkeypatch):
+    """Above _EXACT_ARGMIN_MAX_SEEDS seeds a build assigns cells with the
+    batched numpy argmin (_nearest_cell_batched: O(n) Arrow traffic
+    instead of ranking n * cells pairs in the JVM). Forced on at 8 cells,
+    it must place every vector in the same cell and serve identical
+    probes on this fixture; BLAS summation can differ from the sequential
+    fold in the last ulp, so only adversarial near-ties could differ."""
+    a, b = str(tmp_path / "exact"), str(tmp_path / "batched")
     similarity.build_ann_index(emb, a, n_cells=8)
-    similarity.build_ann_index(emb, b, n_cells=8, fast_assign=True)
+    calls = []
+    batched = similarity._nearest_cell_batched
+    monkeypatch.setattr(similarity, "_EXACT_ARGMIN_MAX_SEEDS", 4)
+    monkeypatch.setattr(
+        similarity, "_nearest_cell_batched", lambda *a_: calls.append(1) or batched(*a_)
+    )
+    similarity.build_ann_index(emb, b, n_cells=8)
+    assert calls == [1]
     cells_a = spark.read.parquet(a + "/cells").select("vec_id", "cell")
     cells_b = spark.read.parquet(b + "/cells").select("vec_id", "cell")
     assert sorted(map(tuple, cells_a.collect())) == sorted(map(tuple, cells_b.collect()))
@@ -1163,23 +1179,70 @@ def test_ann_fast_assign_build_matches_exact_build(spark, emb, tmp_path):
     assert [tuple(r) for r in ga.collect()] == [tuple(r) for r in gb.collect()]
 
 
-def test_fast_assign_chunked_argmin_crosses_boundaries(spark, emb):
-    """The fast-assign kernel computes its argmin in row chunks to bound
-    the per-worker score-matrix transient (the whole-batch matrix is
-    n_batch x n_cells doubles — 524 MB at 65536 x 1000). Production chunk
-    sizes never split a test-sized batch, so force a tiny chunk and pin
-    that assignments are identical across chunk boundaries (argmin is
-    per-row; chunking must not change any cell)."""
-    from duckdb_routing_spark.operators.similarity import _cell_assignments_fast
+_MALFORMED = {
+    "ragged": ([0.5] * 60, r"nearest_seeds: vector of \d+ elements, dim is \d+"),
+    "null_vector": (None, "nearest_seeds: NULL vector"),
+    "null_element": ([0.5] * 30 + [None] + [0.5] * 33, "nearest_seeds: NULL or NaN element"),
+}
 
-    seeds = (
-        emb.orderBy("vec_id").limit(8)
-        .select(F.col("vec_id").alias("cell"), F.col("embedding").alias("svec"))
+
+def _ivf(emb, tmp_path, monkeypatch):
+    return similarity.ivf_topk(emb, emb.filter("vec_id < 3"), k=10, n_cells=8).collect()
+
+
+def _ivf_batched(emb, tmp_path, monkeypatch):
+    monkeypatch.setattr(similarity, "_EXACT_ARGMIN_MAX_SEEDS", 4)
+    similarity.build_ann_index(emb, str(tmp_path / "idx"), n_cells=8)
+
+
+def _kmeans(emb, tmp_path, monkeypatch):
+    from duckdb_routing_spark.operators import clustering
+
+    return clustering.kmeans_lloyd(emb, k=4, iterations=2).collect()
+
+
+def _kmeans_batched(emb, tmp_path, monkeypatch):
+    from duckdb_routing_spark.operators import clustering
+
+    monkeypatch.setattr(clustering, "_EXACT_ARGMIN_MAX_SEEDS", 2)
+    return clustering.kmeans_centroids(emb, k=4, iterations=2)
+
+
+def _pq(emb, tmp_path, monkeypatch):
+    return similarity.pq_encode(emb, similarity.pq_codebook(emb)).collect()
+
+
+@pytest.mark.parametrize("case", sorted(_MALFORMED))
+@pytest.mark.parametrize("op", [_ivf, _ivf_batched, _kmeans, _kmeans_batched, _pq],
+                         ids=lambda f: f.__name__.strip("_"))
+def test_nearest_seed_rejects_malformed_vector(spark, emb, tmp_path, monkeypatch, op, case):
+    """A ragged vector, a NULL vector or a NULL element scores NULL
+    against every seed; IVF cells, k-means clusters and PQ codes must
+    raise instead of silently giving it the lowest seed id — on the JVM
+    ranking and on the batched numpy path alike."""
+    vec, message = _MALFORMED[case]
+    base = emb.select("vec_id", "embedding")
+    bad = spark.createDataFrame([(10**6, vec)], base.schema)
+    with pytest.raises(Exception, match=message):
+        op(base.unionByName(bad), tmp_path, monkeypatch)
+
+
+def test_build_ann_index_quotes_meta_cols(spark, emb, tmp_path):
+    """A metadata column whose name needs backticks (`src.lang`) rides
+    through build and extension as one column and filters a probe."""
+    corpus = emb.withColumn("src.lang", F.when(F.col("label") == 1, "en").otherwise("de"))
+    idx = str(tmp_path / "qidx")
+    similarity.build_ann_index(corpus.filter("vec_id % 2 = 0"), idx, n_cells=8, meta_cols=["src.lang"])
+    similarity.extend_ann_index(
+        corpus.filter("vec_id % 2 = 1"), idx, increment=1, meta_cols=["src.lang"]
     )
-    c = emb.select(F.col("vec_id"), F.col("embedding").alias("cvec"))
-    whole = _cell_assignments_fast(c, seeds, "cvec").select("vec_id", "cell")
-    chunked = _cell_assignments_fast(c, seeds, "cvec", chunk_rows=7).select("vec_id", "cell")
-    assert sorted(map(tuple, whole.collect())) == sorted(map(tuple, chunked.collect()))
+    store = spark.read.parquet(idx + "/cells")
+    assert "src.lang" in store.columns and store.count() == emb.count()
+    got = similarity.ann_query_index(
+        spark, idx, emb.filter("vec_id < 3"), k=10, n_probe=8, filter_expr="`src.lang` = 'en'"
+    ).collect()
+    labels = dict(emb.select("vec_id", "label").collect())
+    assert got and all(labels[r.vec_id] == 1 for r in got)
 
 
 def test_quality_classifier_with_partial_weight_table(spark, docs):

@@ -273,7 +273,7 @@ def test_semantic_dedup_over_trained_kmeans_cells(spark):
     C = np.array([v for _, v in cents])
     cid = np.array([c for c, _ in cents])
     # score = ||c||^2 - 2 v.c, exact tiebreak by cell id (matches
-    # _cell_assignments' ORDER BY score, cell)
+    # _nearest_seeds' ORDER BY score, seed id)
     score = (C * C).sum(1)[None, :] - 2.0 * V @ C.T
     assign = np.array(
         [cid[min(range(len(cid)), key=lambda j: (score[i, j], cid[j]))] for i in range(len(V))]
@@ -382,14 +382,20 @@ def test_export_tokenized_shards_tokenizer_families(spark, tmp_path):
         export_tokenized_shards(small, str(tmp_path / "bad"), merges=[("a", "b")], tokenizer="unigram")
 
 
-def test_kmeans_centroids_fast_matches_exact_assignments(spark):
-    """The scale trainer (batch-argmin Lloyd, kmeans_centroids_fast) must
-    produce centroids whose assignment equals the exact sequential
-    trainer's on real data — float summation order may differ in the last
-    ulp, but on the sf0.001 embeddings the induced partition is identical."""
+def test_kmeans_batched_lloyd_matches_exact_assignments(spark, monkeypatch):
+    """Above _EXACT_ARGMIN_MAX_SEEDS clusters kmeans_centroids trains with
+    the batched Lloyd pass (_lloyd_batched: one mapInPandas argmin per
+    iteration). Forced on at k=4, its centroids must match the exact
+    decimal-mean trainer's to 1e-9 and induce the identical partition on
+    the sf0.001 embeddings."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     exact = clustering.kmeans_centroids(emb, k=4, iterations=3)
-    fast = clustering.kmeans_centroids_fast(emb, k=4, iterations=3)
+    calls = []
+    batched = clustering._lloyd_batched
+    monkeypatch.setattr(clustering, "_EXACT_ARGMIN_MAX_SEEDS", 2)
+    monkeypatch.setattr(clustering, "_lloyd_batched", lambda *a: calls.append(1) or batched(*a))
+    fast = clustering.kmeans_centroids(emb, k=4, iterations=3)
+    assert calls == [1]
     import numpy as np
 
     E = np.array([v for _, v in exact])
@@ -402,16 +408,22 @@ def test_kmeans_centroids_fast_matches_exact_assignments(spark):
     assert a == b
 
 
-def test_kmeans_fast_chunked_argmin_crosses_boundaries(spark):
-    """The trainer's Lloyd pass computes its argmin in row chunks to bound
-    the per-worker score-matrix transient; production chunk sizes never
-    split a test-sized batch, so force a tiny chunk and pin that the
-    trained centroids are bit-identical (each row's assignment, partial
-    sum and count are chunk-independent)."""
+@pytest.mark.parametrize("k", [3, 6], ids=["exact", "batched"])
+def test_kmeans_leaves_no_persisted_rdd(spark, monkeypatch, k):
+    """Training persists its input for the Lloyd loop and must release it:
+    the session's persistent RDDs do not grow across kmeans_lloyd on
+    either trainer, and a cache the caller holds on the input survives."""
+    from pyspark import StorageLevel
+
+    monkeypatch.setattr(clustering, "_EXACT_ARGMIN_MAX_SEEDS", 4, raising=False)
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    whole = clustering.kmeans_centroids_fast(emb, k=4, iterations=3)
-    chunked = clustering.kmeans_centroids_fast(emb, k=4, iterations=3, chunk_rows=7)
-    assert whole == chunked
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    assert clustering.kmeans_lloyd(emb, k=k, iterations=2).count() == emb.count()
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+    mine = emb.filter("vec_id >= 0").cache()
+    clustering.kmeans_centroids(mine, k=k, iterations=2)
+    assert mine.storageLevel != StorageLevel.NONE
+    mine.unpersist()
 
 
 def test_build_ann_index_auto_cells_sqrt_n(spark, tmp_path):

@@ -17,11 +17,11 @@ sample-trained codebook, not the generator's own centers (that would
 measure an oracle quantizer). --cells 0 (the default) auto-sizes it at
 sqrt(n) like build_ann_index's n_cells=None default (r9's committed curve
 normalized a 64-cell codebook at 1M vectors — recall 0.9 cost 12.5% of
-the index; sqrt sizing is the fix being measured). Training uses
-clustering.kmeans_centroids_fast above 64 cells (the batch-argmin Lloyd
-pass; the exact crossJoin trainer is quadratic in k) and the index build
-uses build_ann_index(fast_assign=True): O(n) Arrow traffic, not the
-exact path's O(n*cells) pairs.
+the index; sqrt sizing is the fix being measured). clustering.kmeans_centroids
+and build_ann_index pick their kernel by the cell count: above
+similarity._EXACT_ARGMIN_MAX_SEEDS cells both run the batched numpy argmin
+(O(n) Arrow traffic per pass) instead of ranking O(n*cells) pairs in the
+JVM.
 
 Usage:
   python tools/ann_curve.py [--n 1000000] [--dim 64] [--cells 0]
@@ -134,22 +134,12 @@ def main() -> None:
         # still 269k). Stride 53 cycles through every mode: max cell 3.7k
         # at 3 iterations. Real pipelines hash-sample for the same reason.
         sample = corpus.filter(f"vec_id % {train_stride} = 0")
-        train = (
-            clustering.kmeans_centroids_fast
-            if n_cells > 64
-            else clustering.kmeans_centroids
-        )
-        cents = train(sample, k=n_cells, iterations=train_iters)
+        cents = clustering.kmeans_centroids(sample, k=n_cells, iterations=train_iters)
         seeds = clustering.centroids_df(spark, cents)
         train_s = time.perf_counter() - t0
 
-        # fast_assign: the batch-argmin build path — the exact crossJoin
-        # assignment moves O(n * n_cells) vector pairs through Arrow,
-        # which is the difference between ~1 GB and 100+ GB here
         t0 = time.perf_counter()
-        similarity.build_ann_index(
-            corpus, index_dir, n_cells=n_cells, seeds=seeds, fast_assign=True
-        )
+        similarity.build_ann_index(corpus, index_dir, n_cells=n_cells, seeds=seeds)
         build_s = time.perf_counter() - t0
         print(f"# train {train_s:.1f}s build {build_s:.1f}s "
               f"({n} vecs x {dim} dims, {n_cells} cells)", file=sys.stderr)
@@ -197,10 +187,10 @@ def main() -> None:
                 spark, index_dir, queries, k=k, n_probe=n_probe
             )
             # actual rows scanned: sum of each query's probed cell sizes
-            q_assign = similarity._cell_assignments(
+            q_assign = similarity._nearest_seeds(
                 queries.selectExpr("vec_id AS query_id", "embedding AS qvec"),
                 spark.read.parquet(os.path.join(index_dir, "seeds")),
-                "query_id", "qvec", n_probe,
+                ["query_id"], "qvec", "cell", n_probe,
             ).select("query_id", "cell").collect()
             rows_scanned = sum(size_by_cell.get(r.cell, 0) for r in q_assign)
             df.count()  # warm (codegen + page cache); timed run below
@@ -234,8 +224,7 @@ def main() -> None:
             "n_cells": n_cells,
             "n_queries": n_queries,
             "k": k,
-            "quantizer": ("kmeans_fast" if n_cells > 64 else "kmeans")
-            + f"(sample=1/{train_stride}, iters={train_iters})",
+            "quantizer": f"kmeans(sample=1/{train_stride}, iters={train_iters})",
             "train_sec": round(train_s, 1),
             "build_sec": round(build_s, 1),
             "balance": balance,
