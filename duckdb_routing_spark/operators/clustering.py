@@ -85,11 +85,14 @@ def _update(
     ]
 
 
-def _lloyd_batched(src: DataFrame, C: np.ndarray, iterations: int) -> np.ndarray:
+def _lloyd_batched(
+    src: DataFrame, C: np.ndarray, iterations: int, *, step: int | None = None
+) -> np.ndarray:
     """`iterations` Lloyd update steps from centroid matrix C over the
     vectors in `src`'s column `v`: each step is one mapInPandas argmin pass
-    emitting per-partition partial sums (O(k*dim) rows per partition),
-    combined driver-side — no k-way crossJoin, no (cluster, dim) shuffle.
+    (_argmin_rows, row chunks of `step`) emitting per-partition partial
+    sums (O(k*dim) rows per partition), combined driver-side — no k-way
+    crossJoin, no (cluster, dim) shuffle.
     Same tie-break (lowest cluster id), empty-cluster rule (keep the
     previous centroid) and malformed-vector errors as the exact trainer."""
     kk, dim = C.shape
@@ -103,7 +106,7 @@ def _lloyd_batched(src: DataFrame, C: np.ndarray, iterations: int) -> np.ndarray
                 if len(pdf) == 0:
                     continue
                 V = _stack_vectors(pdf["v"], dim)
-                a = _argmin_rows(V, C, c2)
+                a = _argmin_rows(V, C, c2, step=step)
                 np.add.at(sums, a, V)
                 counts += np.bincount(a, minlength=kk)
             yield pd.DataFrame({"cell": np.arange(kk), "cnt": counts, "vsum": list(sums)})

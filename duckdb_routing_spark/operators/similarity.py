@@ -535,12 +535,15 @@ def _argmin_rows(V: np.ndarray, S: np.ndarray, s2: np.ndarray, *, step: int | No
     return out
 
 
-def _nearest_cell_batched(vecs: DataFrame, seeds: DataFrame, vec_col: str) -> DataFrame:
+def _nearest_cell_batched(
+    vecs: DataFrame, seeds: DataFrame, vec_col: str, *, step: int | None = None
+) -> DataFrame:
     """`vecs` plus `cell`, its nearest seed, through one mapInPandas pass
-    over the collected seed matrix (_argmin_rows): Arrow traffic is O(n)
-    instead of the O(n * n_seeds) pairs the JVM path ranks. Same tie-break
-    as _nearest_seeds (seeds are scanned in cell order) and the same
-    malformed-vector errors; scores follow BLAS summation order."""
+    over the collected seed matrix (_argmin_rows, row chunks of `step`):
+    Arrow traffic is O(n) instead of the O(n * n_seeds) pairs the JVM path
+    ranks. Same tie-break as _nearest_seeds (seeds are scanned in cell
+    order) and the same malformed-vector errors; scores follow BLAS
+    summation order."""
     rows = seeds.orderBy("cell").collect()
     cells = np.array([r.cell for r in rows], dtype=np.int64)
     S = np.array([list(r.svec) for r in rows], dtype=np.float64)
@@ -555,7 +558,7 @@ def _nearest_cell_batched(vecs: DataFrame, seeds: DataFrame, vec_col: str) -> Da
         for pdf in iterator:
             if len(pdf) == 0:
                 continue
-            idx = _argmin_rows(_stack_vectors(pdf[vec_col], S.shape[1]), S, s2)
+            idx = _argmin_rows(_stack_vectors(pdf[vec_col], S.shape[1]), S, s2, step=step)
             pdf = pdf.copy()
             pdf["cell"] = cells[idx].astype("int32")
             yield pdf

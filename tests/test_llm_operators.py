@@ -1179,6 +1179,23 @@ def test_ann_batched_build_matches_exact_build(spark, emb, tmp_path, monkeypatch
     assert [tuple(r) for r in ga.collect()] == [tuple(r) for r in gb.collect()]
 
 
+def test_fast_assign_chunked_argmin_crosses_boundaries(spark, emb):
+    """The batched cell assignment computes its argmin in row chunks to
+    bound the per-worker score-matrix transient (the whole-batch matrix is
+    n_batch x n_cells doubles — 524 MB at 65536 x 1000). The default chunk
+    never splits a test-sized batch, so force a tiny one and pin that
+    assignments are identical across chunk boundaries (argmin is per-row;
+    chunking must not change any cell)."""
+    seeds = (
+        emb.orderBy("vec_id").limit(8)
+        .select(F.col("vec_id").alias("cell"), F.col("embedding").alias("svec"))
+    )
+    c = emb.select(F.col("vec_id"), F.col("embedding").alias("cvec"))
+    whole = similarity._nearest_cell_batched(c, seeds, "cvec").select("vec_id", "cell")
+    chunked = similarity._nearest_cell_batched(c, seeds, "cvec", step=7).select("vec_id", "cell")
+    assert sorted(map(tuple, whole.collect())) == sorted(map(tuple, chunked.collect()))
+
+
 _MALFORMED = {
     "ragged": ([0.5] * 60, r"nearest_seeds: vector of \d+ elements, dim is \d+"),
     "null_vector": (None, "nearest_seeds: NULL vector"),

@@ -408,6 +408,23 @@ def test_kmeans_batched_lloyd_matches_exact_assignments(spark, monkeypatch):
     assert a == b
 
 
+def test_kmeans_fast_chunked_argmin_crosses_boundaries(spark):
+    """The batched Lloyd pass computes its argmin in row chunks to bound
+    the per-worker score-matrix transient; the default chunk never splits a
+    test-sized batch, so force a tiny one and pin that the trained
+    centroids are bit-identical (each row's assignment, partial sum and
+    count are chunk-independent)."""
+    import numpy as np
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    src = emb.select(F.col("embedding").cast("array<double>").alias("v"))
+    seeds = emb.orderBy("vec_id").limit(4).select("embedding").collect()
+    C = np.array([list(r.embedding) for r in seeds], dtype=np.float64)
+    whole = clustering._lloyd_batched(src, C, 2)
+    chunked = clustering._lloyd_batched(src, C, 2, step=7)
+    assert np.array_equal(whole, chunked)
+
+
 @pytest.mark.parametrize("k", [3, 6], ids=["exact", "batched"])
 def test_kmeans_leaves_no_persisted_rdd(spark, monkeypatch, k):
     """Training persists its input for the Lloyd loop and must release it:
