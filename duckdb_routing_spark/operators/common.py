@@ -57,18 +57,6 @@ def dataset_bytes(path: str) -> int:
     return total
 
 
-def probe_array_dim(path: str, col: str) -> int:
-    """Length of an array column's first value, read driver-side via the
-    parquet reader (no Spark job). Parquet schemas don't carry list
-    lengths, so fixed-dim operators (unrolled dot products) probe one row.
-    Assumes the column is uniform-dim, which the vector kernels already
-    require (np.vstack)."""
-    import pyarrow.dataset as pads
-
-    first = pads.dataset(path, format="parquet").head(1, columns=[col])
-    return len(first.column(0)[0])
-
-
 def literal_df(spark, rows: list, ddl: str) -> DataFrame:
     """Small literal input as a one-partition Catalyst plan instead of
     `createDataFrame(rows, ddl)`.

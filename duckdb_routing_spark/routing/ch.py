@@ -7,7 +7,7 @@ Networks"); no reference code was consulted beyond its observable API.
 
 Role in this engine: when a loaded graph carries this index (``g._ch``),
 `kernels.p2p_path` and `kernels.matrix_rows` route through it; a graph
-without one routes by ALT A* and frontier SSSP. No setting selects it.
+without one routes by the capped frontier SSSP. No setting selects it.
 CH trades a heavy one-time node-ordering/shortcut build for the fastest
 warm queries on road-network topologies (low highway dimension) — the
 reference's deployment shape (ITALY.md: warm query <100 ms on 9.7M
@@ -21,7 +21,7 @@ Measured (round-8 batched independent-set build + cheap 2-hop priority;
 queries warm):
   UNIFORM grids — CH's known worst topology (shortcut growth wants a
   nested-dissection order; the grid fixtures ship no index and route by
-  ALT A*):
+  the capped frontier SSSP):
     100x100 (10k):   build ~11 s (was ~140 s), query ~19 ms
     200x200 (40k):   build ~72 s (was ~149 s), query ~27 ms
   ROAD-LIKE networks (testing.build_roadlike_csr — local/arterial/highway
@@ -41,7 +41,7 @@ Correctness: CH queries return EXACTLY the Dijkstra shortest-path weight.
 The witness search is settle-limited, which can only ADD redundant
 shortcuts (a truncated witness search pessimistically assumes the shortcut
 is needed) — never drop a needed one, so exactness is preserved
-(property-tested against dijkstra_p2p on grids and random graphs).
+(property-tested against testing.dijkstra_p2p on grids and random graphs).
 """
 
 from __future__ import annotations
@@ -543,8 +543,8 @@ def ch_p2p_path(g: RoutingGraph, src: int, dst: int):
 def ensure_ch(g: RoutingGraph) -> CHIndex:
     """Prepare the graph's CH index once, before the graph is loaded (or at
     artifact build time): returns the index already on the graph, else
-    builds and attaches it. Kernels never call this — a graph without an index routes by ALT
-    and frontier SSSP (kernels.p2p_path, kernels.matrix_rows)."""
+    builds and attaches it. Kernels never call this — a graph without an
+    index routes by frontier SSSP (kernels.p2p_path, kernels.matrix_rows)."""
     ch = getattr(g, "_ch", None)
     if ch is None:
         ch = build_ch(g)

@@ -15,6 +15,12 @@ thread-local `PathCalculator` over one shared graph (lib.rs:504-533), minus
 the locking. Nearest-neighbor semantics match the reference's R-tree: squared
 Euclidean distance in (lon, lat) degree space over main-road nodes only
 (lib.rs:121-142, 234-242).
+
+The only routing state that travels with the graph is an optional prepared
+contraction-hierarchy index (``_ch``): the ``ch_<mode>.npz`` artifact
+sidecar and the ``_ch_arrays`` payload field. Nothing else is derived per
+executor beyond the reverse CSR that kernels.p2p_path caches on first use;
+an ``alt_<mode>.npz`` sidecar from older builds is ignored.
 """
 
 from __future__ import annotations
@@ -347,20 +353,9 @@ class RoutingGraph:
         self.save_sidecars(dir_path, mode)
 
     def save_sidecars(self, dir_path: str, mode: str) -> None:
-        """ALT/CH preprocessing tables + manifest entry for an artifact whose
-        node/edge parquet already exists — the distributed build writes the
-        tables via df.write.parquet and only this driver-side pass remains."""
-        alt = getattr(self, "_alt", None)
-        if alt is not None:
-            # build-time ALT landmark tables (the CH-preprocessing analog):
-            # executors loading this artifact skip the 2k per-process SSSPs
-            from duckdb_routing_spark.routing.kernels import pack_alt
-
-            np.savez_compressed(
-                os.path.join(dir_path, f"alt_{mode}.npz"),
-                dist_from=pack_alt(alt[0]),
-                dist_to=pack_alt(alt[1]),
-            )
+        """CH index sidecar + manifest entry for an artifact whose node/edge
+        parquet already exists — the distributed build writes the tables
+        via df.write.parquet and only this driver-side pass remains."""
         chx = getattr(self, "_ch", None)
         if chx is not None:
             # build-time contraction-hierarchy index (the reference persists
@@ -387,8 +382,8 @@ class RoutingGraph:
         only endpoints inside the window. Roads crossing the boundary are
         cut — choose a bbox with margin, like any tile-based router.
 
-        Precomputed ALT tables are whole-graph; a windowed load skips them
-        (the lazy per-process fallback recomputes on the subgraph)."""
+        A prepared CH index is whole-graph; a windowed load skips it. An
+        ``alt_<mode>.npz`` left by older builds is ignored."""
         filters = None
         if bbox is not None:
             min_lon, min_lat, max_lon, max_lat = map(float, bbox)
@@ -409,12 +404,6 @@ class RoutingGraph:
             )
             return cls.from_pandas(nodes, edges)
         g = cls.from_pandas(nodes, edges)
-        alt_path = os.path.join(dir_path, f"alt_{mode}.npz")
-        if os.path.exists(alt_path):
-            from duckdb_routing_spark.routing.kernels import unpack_alt
-
-            with np.load(alt_path) as z:
-                g._alt = (unpack_alt(z["dist_from"]), unpack_alt(z["dist_to"]))
         ch_path = os.path.join(dir_path, f"ch_{mode}.npz")
         if os.path.exists(ch_path):
             from duckdb_routing_spark.routing.ch import CHIndex
@@ -426,12 +415,6 @@ class RoutingGraph:
     # picklable payload for sc.broadcast (exclude nothing — all arrays useful)
     def to_payload(self) -> dict:
         payload = self._base_payload()
-        alt = getattr(self, "_alt", None)
-        if alt is not None:
-            from duckdb_routing_spark.routing.kernels import pack_alt
-
-            payload["_alt_from_i32"] = pack_alt(alt[0])
-            payload["_alt_to_i32"] = pack_alt(alt[1])
         chx = getattr(self, "_ch", None)
         if chx is not None:
             # ship the prepared CH index with the broadcast (built once,
@@ -459,14 +442,8 @@ class RoutingGraph:
 
     @classmethod
     def from_payload(cls, payload: dict) -> "RoutingGraph":
-        alt_f = payload.pop("_alt_from_i32", None)
-        alt_t = payload.pop("_alt_to_i32", None)
         ch_arrays = payload.pop("_ch_arrays", None)
         g = cls(**payload)
-        if alt_f is not None:
-            from duckdb_routing_spark.routing.kernels import unpack_alt
-
-            g._alt = (unpack_alt(alt_f), unpack_alt(alt_t))
         if ch_arrays is not None:
             from duckdb_routing_spark.routing.ch import CHIndex
 

@@ -2,16 +2,25 @@
 
 The reference uses contraction hierarchies (`fast_paths`, rust/src/lib.rs:260)
 for point-to-point queries and a plain binary-heap Dijkstra for isochrones
-(lib.rs:638-720). Every accelerator here is exact — weights are identical to
-Dijkstra. The batch path runs a numpy-vectorized frontier SSSP
-(sssp_frontier_ms), with heap Dijkstra retained where predecessors/paths are
-needed; weights are integer milliseconds, durations are ms/1000.0
-(lib.rs:421-427).
+(lib.rs:638-720). Every kernel here is exact: weights are identical to
+Dijkstra (the heap oracles live in duckdb_routing_spark.testing). Weights are
+integer milliseconds, durations are ms/1000.0 (lib.rs:421-427).
 
-Single-pair routes (p2p_path) and matrices (matrix_rows) follow one rule:
-a graph carrying a prepared CH index (``g._ch``, routing/ch.py) routes
-through it; any other graph uses ALT A* (astar_p2p_path) and one frontier
-SSSP per matrix origin. No kernel builds a CH index.
+One primitive does the search: sssp_frontier_ms, a numpy-vectorized frontier
+SSSP with an optional cost cap. It runs three ways:
+
+  - no cap: batch travel times, matrix origins (sssp_multi_target) and
+    optimized routes (map matching keeps the heap dijkstra_multi_target,
+    which stops once its few candidate targets are settled);
+  - a fixed cap: dijkstra_isochrone, the reference's cutoff search;
+  - a cap that shrinks to dst's label: p2p_path on a graph without a
+    prepared CH index. Its path is shortest_path_tree's tight-edge rule
+    walked back from dst, so p2p and matrix paths break ties alike.
+
+Single-pair routes (p2p_path) and matrices (matrix_rows) follow one rule: a
+graph carrying a prepared CH index (``g._ch``, routing/ch.py) routes through
+it; any other graph uses the frontier kernel. No kernel builds routing
+state beyond the reverse CSR cached on the graph.
 
 These kernels run inside Arrow-batched pandas UDF / mapInPandas workers with
 the graph arrays coming from a Spark broadcast: one graph per engine and mode
@@ -37,65 +46,11 @@ NO_ROUTE = -1.0
 NOT_LOADED = -2.0
 
 
-def dijkstra_p2p(g: RoutingGraph, src: int, dst: int) -> float:
-    """Shortest-path weight in ms from src to dst, or -1.0 if unreachable.
-
-    Early-exits when dst is settled (matches CH query results exactly)."""
-    if src == dst:
-        return 0.0
-    indptr, indices, weights = g.indptr, g.indices, g.weights_ms
-    dist = {src: 0}
-    heap = [(0, src)]
-    while heap:
-        d, u = heapq.heappop(heap)
-        if u == dst:
-            return float(d)
-        if d > dist.get(u, np.inf):
-            continue
-        for ei in range(indptr[u], indptr[u + 1]):
-            v = indices[ei]
-            nd = d + weights[ei]
-            if nd < dist.get(v, np.inf):
-                dist[v] = nd
-                heapq.heappush(heap, (nd, v))
-    return NO_ROUTE
-
-
-def dijkstra_p2p_path(g: RoutingGraph, src: int, dst: int):
-    """(weight_ms, path_node_list) or (NO_ROUTE, None)."""
-    indptr, indices, weights = g.indptr, g.indices, g.weights_ms
-    dist = {src: 0}
-    prev: dict[int, int] = {}
-    heap = [(0, src)]
-    found = src == dst
-    while heap and not found:
-        d, u = heapq.heappop(heap)
-        if u == dst:
-            found = True
-            break
-        if d > dist.get(u, np.inf):
-            continue
-        for ei in range(indptr[u], indptr[u + 1]):
-            v = indices[ei]
-            nd = d + weights[ei]
-            if nd < dist.get(v, np.inf):
-                dist[v] = nd
-                prev[v] = u
-                heapq.heappush(heap, (nd, v))
-    if not found and dst not in dist:
-        return NO_ROUTE, None
-    path = [dst]
-    while path[-1] != src:
-        path.append(prev[path[-1]])
-    path.reverse()
-    return float(dist[dst]), path
-
-
 def _reverse_csr(g: RoutingGraph):
-    """Reverse-edge CSR (indptr, indices, weights), built once and cached on
-    the graph object — _alt_data's to-landmark SSSPs search incoming edges.
-    Cache lives with the broadcast graph, so every Arrow batch on an
-    executor reuses it."""
+    """Reverse-edge CSR (indptr, sources, weights), built once and cached on
+    the graph object: p2p_path walks its path back from dst over incoming
+    edges. Within each target the edges keep ascending forward edge index,
+    so the first tight one is the one shortest_path_tree picks."""
     cached = getattr(g, "_rev_csr", None)
     if cached is not None:
         return cached
@@ -109,213 +64,6 @@ def _reverse_csr(g: RoutingGraph):
     rev = (rindptr, src[order], g.weights_ms[order])
     g._rev_csr = rev
     return rev
-
-
-_ALT_I32_INF = np.iinfo(np.int32).max
-
-
-def pack_alt(dist: np.ndarray) -> np.ndarray:
-    """int64 landmark distances -> int32 for artifact/broadcast transport.
-    int32 ms caps at ~24.8 days of travel — far beyond any country-scale
-    route; _INF (unreachable) maps to the int32 sentinel. Halves the
-    shipped bytes (the stated 10M-node posture: k=4 / int32 ≈ 320 MB)."""
-    return np.where(dist == _INF, _ALT_I32_INF, np.minimum(dist, _ALT_I32_INF - 1)).astype(
-        np.int32
-    )
-
-
-def unpack_alt(packed: np.ndarray) -> np.ndarray:
-    return np.where(packed == _ALT_I32_INF, _INF, packed.astype(np.int64))
-
-
-def _alt_data(g: RoutingGraph, k: int = 8):
-    """ALT (A*, Landmarks, Triangle inequality) preprocessing, cached on the
-    graph object: exact SSSP distance arrays from/to up to `k` geometric
-    extreme landmarks (Goldberg & Harrelson 2005 — the published
-    preprocessing-light alternative to contraction hierarchies;
-    rust/src/lib.rs:260 uses fast_paths CH for the same purpose).
-
-    Cost: 2k vectorized frontier SSSPs (~25 ms each on the 40k grid), run
-    once per executor process against the broadcast graph. Memory is
-    2*k*n int64 — at country scale (10M nodes) drop to k=4 / int32 ms
-    (~320 MB, comparable to CH's shortcut storage) before broadcasting."""
-    cached = getattr(g, "_alt", None)
-    if cached is not None:
-        return cached
-    import types
-
-    lon, lat = g.node_lon, g.node_lat
-    # 4 corner + 4 edge-midpoint extremes; the axis scores carry a small
-    # pull toward the orthogonal axis mean so grid boundary ties resolve to
-    # MIDPOINTS instead of collapsing onto the corners (8 spread landmarks
-    # bound diagonal routes much tighter than 4 corners)
-    clon = lon - float(lon.mean())
-    clat = lat - float(lat.mean())
-    span = max(float(np.ptp(lon)) + float(np.ptp(lat)), 1e-12)
-    corners = [
-        lon + lat,
-        lon - lat,
-        -lon - lat,
-        lat - lon,
-        clon - np.abs(clat) * 1e-3 / span,
-        -clon - np.abs(clat) * 1e-3 / span,
-        clat - np.abs(clon) * 1e-3 / span,
-        -clat - np.abs(clon) * 1e-3 / span,
-    ]
-    lms: list[int] = []
-    for s in corners[:k]:
-        c = int(np.argmax(s))
-        if c not in lms:
-            lms.append(c)
-    dist_from = np.stack([sssp_frontier_ms(g, L) for L in lms])
-    rindptr, rindices, rweights = _reverse_csr(g)
-    rg = types.SimpleNamespace(
-        indptr=rindptr, indices=rindices, weights_ms=rweights, num_nodes=g.num_nodes
-    )
-    dist_to = np.stack([sssp_frontier_ms(rg, L) for L in lms])
-    g._alt = (dist_from, dist_to)
-    # fault the per-query scratch pages ONCE at prep time so the first
-    # warm query doesn't bill them (measured ~0.9 s of first-touch at 250k)
-    _alt_scratch(g, dist_from.shape)
-    return g._alt
-
-
-# Landmarks evaluated per query in the full h pass. The pass is
-# memory-bandwidth-bound (one subtract + one maximum over n int64 per term),
-# so cost is linear in the ACTIVE count while pruning quality comes from the
-# best few bounds for the pair (measured at 2.07M nodes, round 8: all 8
-# landmarks ~130 ms/query, top-4 ~40 ms, corridor unchanged).
-ALT_ACTIVE_LANDMARKS = 4
-
-
-def _alt_scratch(g: RoutingGraph, shape):
-    """Preallocated buffers for the per-query ALT h computation, cached on
-    the graph object (lives with the executor's broadcast copy): one n-row
-    temp + the h output (O(n), not O(k*n) — the per-landmark fold reuses
-    the row), plus per-landmark has-unreachable flags for dist_to so the
-    backward mask pass is skipped on fully-connected rows. fill() touches
-    every page at allocation so queries never pay first-fault."""
-    cached = getattr(g, "_alt_scratch_buf", None)
-    if cached is not None and cached[1].shape[0] == shape[1]:
-        return cached
-    k, n = shape
-    row = np.empty(n, dtype=np.int64)
-    hmax = np.empty(n, dtype=np.int64)
-    row.fill(0)
-    hmax.fill(0)
-    _, dist_to = g._alt
-    to_unreach = np.asarray([(dist_to[i] == _INF).any() for i in range(k)], dtype=bool)
-    g._alt_scratch_buf = (row, hmax, to_unreach)
-    return g._alt_scratch_buf
-
-
-def astar_p2p_path(g: RoutingGraph, src: int, dst: int):
-    """(weight_ms, path_node_list) or (NO_ROUTE, None) via A* over ALT
-    landmark lower bounds — p2p_path's accelerator for graphs without a
-    prepared CH index.
-
-    h(u) = max over landmarks L of max(d(L,t)-d(L,u), d(u,L)-d(t,L), 0) is
-    a CONSISTENT lower bound on d(u,t) (triangle inequality on exact SSSP
-    distances; max of consistent heuristics is consistent), so the search
-    is exact: weights are identical to dijkstra_p2p (property-tested).
-    Settles shrink to a corridor around the shortest path — measured 40x
-    fewer settles / ~20x wall-clock on mid-grid routes of the 40k grid,
-    and it handles the Manhattan-geometry diagonals where plain
-    great-circle A* degenerates to Dijkstra."""
-    if src == dst:
-        return 0.0, [int(src)]
-    dist_from, dist_to = _alt_data(g)
-    # Per-landmark s-t bounds: drive BOTH the short-route dispatch (h0 =
-    # best bound) and ACTIVE-LANDMARK selection (Goldberg & Harrelson §6 —
-    # the landmarks that bound THIS pair tightly are the ones that prune
-    # its search; the rest only add O(n) h-pass bandwidth). The h pass is
-    # memory-bound: at 2.07M nodes all-8 landmarks cost ~130 ms/query,
-    # the top-4 subset ~40 ms for the same corridor (measured round 8).
-    per_lm = np.zeros(dist_from.shape[0], dtype=np.int64)
-    for i in range(dist_from.shape[0]):
-        b = 0
-        if dist_from[i, dst] != _INF and dist_from[i, src] != _INF:
-            b = max(b, int(dist_from[i, dst]) - int(dist_from[i, src]))
-        if dist_to[i, src] != _INF and dist_to[i, dst] != _INF:
-            b = max(b, int(dist_to[i, src]) - int(dist_to[i, dst]))
-        per_lm[i] = b
-    h0 = int(per_lm.max()) if per_lm.size else 0
-    mean_w = getattr(g, "_mean_w_ms", None)
-    if mean_w is None:
-        mean_w = float(g.weights_ms.mean()) if len(g.weights_ms) else 1.0
-        g._mean_w_ms = mean_w
-    if h0 / max(mean_w, 1e-9) < np.sqrt(g.num_nodes) / 4.0:
-        return dijkstra_p2p_path(g, src, dst)
-    # One vectorized pass builds h for EVERY node over the ACTIVE landmark
-    # subset (O(k_active*n)) — measured ~4x cheaper than lazy per-node
-    # Python evaluation once a search settles more than a few thousand
-    # nodes. Landmarks that cannot reach dst (or that dst cannot reach)
-    # contribute no forward (resp. backward) term — masked to 0, never
-    # +inf: the search itself proves unreachability.
-    #
-    # All work happens in PREALLOCATED per-graph scratch (out= ops): the
-    # naive expression allocated ~5x k*n of temporaries per query, whose
-    # first-touch page faults cost more than the search itself on a fresh
-    # process (measured 0.9 s cold vs 0.05 s warm at 250k nodes) — and at
-    # 10M-node country scale would be GBs of allocation per query.
-    active = np.argsort(per_lm, kind="stable")[-ALT_ACTIVE_LANDMARKS:]
-    row, hmax, to_unreach = _alt_scratch(g, dist_from.shape)
-    hmax.fill(0)
-    for i in (int(x) for x in active):
-        dft = dist_from[i, dst]
-        if dft != _INF:
-            # forward term d(L,t) - d(L,u); u unreachable from L gives a
-            # hugely negative value — maximum() drops it without a mask
-            np.subtract(dft, dist_from[i], out=row)
-            np.maximum(hmax, row, out=hmax)
-        dtt = dist_to[i, dst]
-        if dtt != _INF:
-            # backward term d(u,L) - d(t,L); u-cannot-reach-L yields
-            # sentinel-minus-finite (a hugely POSITIVE value — a valid
-            # infinite bound mathematically, but it would overflow the
-            # heap's nd + h arithmetic), so those entries mask to 0;
-            # the row flag skips the mask pass on fully-connected rows
-            np.subtract(dist_to[i], dtt, out=row)
-            if to_unreach[i]:
-                row[dist_to[i] == _INF] = 0
-            np.maximum(hmax, row, out=hmax)
-    # exact integer ms in a float view is unnecessary — heap arithmetic
-    # stays in int64 (values < 2^53, comparisons identical)
-    h = hmax
-
-    indptr, indices, weights = g.indptr, g.indices, g.weights_ms
-    inf = np.inf
-    dist = {src: 0}
-    prev: dict[int, int] = {}
-    # tie-break on equal f toward the LARGER g-cost (deeper node): when a
-    # landmark lies near the source, f is constant across every node on a
-    # shortest-path plateau and first-in tie order would settle the whole
-    # plateau breadth-first before reaching dst (measured: 92k settles on
-    # the 250k grid corner route; ~1k with this tie-break)
-    heap = [(float(h[src]), 0, src)]
-    settled: set[int] = set()
-    while heap:
-        f, negd, u = heapq.heappop(heap)
-        if u == dst:
-            break
-        if u in settled:
-            continue
-        settled.add(u)
-        d = dist[u]
-        for ei in range(indptr[u], indptr[u + 1]):
-            v = indices[ei]
-            nd = d + weights[ei]
-            if nd < dist.get(v, inf):
-                dist[v] = nd
-                prev[v] = u
-                heapq.heappush(heap, (nd + h[v], -int(nd), v))
-    if dst not in dist:
-        return NO_ROUTE, None
-    path = [dst]
-    while path[-1] != src:
-        path.append(prev[path[-1]])
-    path.reverse()
-    return float(dist[dst]), path
 
 
 def dijkstra_multi_target(g: RoutingGraph, src: int, targets: np.ndarray):
@@ -353,32 +101,18 @@ def dijkstra_multi_target(g: RoutingGraph, src: int, targets: np.ndarray):
 
 
 def dijkstra_isochrone(g: RoutingGraph, src: int, max_cost_ms: int):
-    """All nodes reachable within max_cost_ms: (node_ids, costs_ms).
+    """All nodes reachable within max_cost_ms: (node_ids, costs_ms), ordered
+    by (cost, node id).
 
     Semantics of the reference isochrone (rust/src/lib.rs:677-717): early
-    cutoff, every settled node emitted with its cost; costs <= cutoff."""
-    indptr, indices, weights = g.indptr, g.indices, g.weights_ms
-    dist = {src: 0}
-    heap = [(0, src)]
-    out_nodes: list[int] = []
-    out_costs: list[int] = []
-    settled = set()
-    while heap:
-        d, u = heapq.heappop(heap)
-        if u in settled or d > dist.get(u, np.inf):
-            continue
-        if d > max_cost_ms:
-            continue
-        settled.add(u)
-        out_nodes.append(u)
-        out_costs.append(d)
-        for ei in range(indptr[u], indptr[u + 1]):
-            v = indices[ei]
-            nd = d + weights[ei]
-            if nd <= max_cost_ms and nd < dist.get(v, np.inf):
-                dist[v] = nd
-                heapq.heappush(heap, (nd, v))
-    return np.asarray(out_nodes, dtype=np.int64), np.asarray(out_costs, dtype=np.int64)
+    cutoff, every reached node emitted with its cost; costs <= cutoff. Runs
+    sssp_frontier_ms with cap=max_cost_ms, which is exact for every node
+    within the cap and never labels one beyond it."""
+    dist = sssp_frontier_ms(g, src, cap=max_cost_ms)
+    nodes = np.flatnonzero(dist <= max_cost_ms)
+    costs = dist[nodes]
+    order = np.argsort(costs, kind="stable")  # nodes ascend within a cost
+    return nodes[order], costs[order]
 
 
 def path_distance_m(g: RoutingGraph, path: list[int]) -> float:
@@ -399,7 +133,7 @@ def path_distance_m(g: RoutingGraph, path: list[int]) -> float:
 _INF = np.iinfo(np.int64).max
 
 
-def sssp_frontier_ms(g: RoutingGraph, src: int) -> np.ndarray:
+def sssp_frontier_ms(g: RoutingGraph, src: int, cap: int | None = None, dst: int = -1) -> np.ndarray:
     """Exact single-source shortest paths via numpy-vectorized frontier
     label-correcting (Bellman-Ford restricted to an active frontier).
 
@@ -408,7 +142,14 @@ def sssp_frontier_ms(g: RoutingGraph, src: int) -> np.ndarray:
     (ragged CSR gather + minimum.at scatter): ~10-40x the Python heap
     Dijkstra on 40k-node graphs, identical distances (label-correcting
     converges to the exact fixed point; weights are non-negative ints).
-    Returns int64 distances in ms with _INF for unreachable nodes."""
+    Returns int64 distances in ms with _INF for unlabeled nodes.
+
+    `cap` skips every relaxation whose new label exceeds it: the search
+    stays inside the cap's ball, and every node whose true distance is
+    <= cap still gets its exact label (its shortest path only passes
+    through nodes no farther than itself). A `dst` >= 0 shrinks the cap to
+    dst's current label after each round; that label never drops below
+    the true distance, so dst and every node closer than it end exact."""
     indptr, indices, weights = g.indptr, g.indices, g.weights_ms
     n = g.num_nodes
     dist = np.full(n, _INF, dtype=np.int64)
@@ -425,10 +166,14 @@ def sssp_frontier_ms(g: RoutingGraph, src: int) -> np.ndarray:
         nd = np.repeat(dist[frontier], counts) + weights[eidx]
         tgt = indices[eidx]
         better = nd < dist[tgt]
+        if cap is not None:
+            better &= nd <= cap
         tgt, nd = tgt[better], nd[better]
         if tgt.size == 0:
             break
         np.minimum.at(dist, tgt, nd)
+        if dst >= 0 and dist[dst] < _INF:
+            cap = int(dist[dst]) if cap is None else min(cap, int(dist[dst]))
         # nodes whose label actually improved re-enter the frontier
         frontier = np.unique(tgt[nd <= dist[tgt]])
     return dist
@@ -444,8 +189,18 @@ def shortest_path_tree(g: RoutingGraph, dist: np.ndarray, src: int) -> np.ndarra
     tight incoming edge, and picking the lowest-numbered tight edge per node
     yields a valid shortest-path tree (same guarantee CH unpacking gives the
     reference, rust/src/lib.rs:246-261 — any tight tree is a shortest path;
-    durations are tie-independent). Returns int64 pred with -1 for the
-    source and unreachable nodes."""
+    durations are tie-independent).
+
+    A zero-weight tight edge joins two nodes at the same distance, so on a
+    graph with zero-weight edges tight edges alone can close a cycle. There
+    a zero-weight edge only counts when its source is fewer zero-weight
+    hops than its target from a node entered over a positive tight edge
+    (or from src). Every other node keeps its lowest-numbered tight edge.
+
+    Labels from a capped sssp_frontier_ms give the same predecessor as the
+    full search for every node within the cap: a tight edge into an exact
+    label always starts at an exact label. Returns int64 pred with -1 for
+    the source and unreachable nodes."""
     indptr, indices, weights = g.indptr, g.indices, g.weights_ms
     n = g.num_nodes
     usrc = np.repeat(np.arange(n, dtype=np.int64), np.diff(indptr))
@@ -454,6 +209,20 @@ def shortest_path_tree(g: RoutingGraph, dist: np.ndarray, src: int) -> np.ndarra
     r = np.flatnonzero(reach)
     tight[r] = dist[usrc[r]] + weights[r] == dist[indices[r]]
     te = np.flatnonzero(tight)
+    zero = weights[te] == 0
+    if zero.any():
+        tu, tv = usrc[te], indices[te]
+        hop = np.full(n, n, dtype=np.int64)
+        hop[src] = 0
+        hop[tv[~zero]] = 0
+        zu, zv = tu[zero], tv[zero]
+        while True:
+            nxt = hop.copy()
+            np.minimum.at(nxt, zv, hop[zu] + 1)
+            if np.array_equal(nxt, hop):
+                break
+            hop = nxt
+        te = te[~zero | (hop[tu] < hop[tv])]
     tv = indices[te]
     order = np.argsort(tv, kind="stable")  # edge index ascending within each target
     tv_sorted = tv[order]
@@ -555,16 +324,38 @@ def _prepared_ch(g: RoutingGraph):
 
 
 def p2p_path(g: RoutingGraph, src: int, dst: int):
-    """Single-pair (weight_ms, path): contraction hierarchies when the graph
-    carries a prepared index (the reference's own accelerator, fastest warm
-    queries), ALT A* otherwise (astar_p2p_path — light preprocessing, built
-    once per process on first use). Both are exact — identical weights to
-    dijkstra_p2p, property-tested."""
+    """Single-pair (weight_ms, path) or (NO_ROUTE, None): contraction
+    hierarchies when the graph carries a prepared index (the reference's
+    own accelerator), otherwise one sssp_frontier_ms whose cap shrinks to
+    dst's label. The path is shortest_path_tree's, walked back from dst
+    over the reverse CSR, so p2p and matrix paths break ties alike. Both
+    branches are exact and keep no per-query state."""
     if _prepared_ch(g) is not None:
         from duckdb_routing_spark.routing import ch
 
         return ch.ch_p2p_path(g, src, dst)
-    return astar_p2p_path(g, src, dst)
+    src, dst = int(src), int(dst)
+    if src == dst:
+        return 0.0, [src]
+    dist = sssp_frontier_ms(g, src, dst=dst)
+    if dist[dst] == _INF:
+        return NO_ROUTE, None
+    rindptr, rsrc, rw = _reverse_csr(g)
+    path = [dst]
+    while path[-1] != src:
+        v = path[-1]
+        dv = dist[v]
+        for ei in range(rindptr[v], rindptr[v + 1]):
+            w = rw[ei]
+            if w > 0 and dist[rsrc[ei]] == dv - w:
+                path.append(int(rsrc[ei]))
+                break
+        else:
+            # v is entered over zero-weight tight edges only: the tree's
+            # hop rule picks among them
+            return float(dist[dst]), path_from_pred(shortest_path_tree(g, dist, src), src, dst)
+    path.reverse()
+    return float(dist[dst]), path
 
 
 def matrix_rows(g: RoutingGraph, src_nodes, tgt_nodes, from_idx=None) -> list[tuple]:

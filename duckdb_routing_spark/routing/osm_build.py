@@ -17,6 +17,11 @@ At 100 TB posture: every step is a shuffle-on-key DataFrame op (explode,
 window, join, distinct) — planet-scale way tables partition naturally; the
 speed table joins as a broadcast; only the final artifact (nodes/edges of one
 country-sized graph) is small enough to collect/broadcast.
+
+The build writes the graph tables and the manifest, and prepares no routing
+index: a graph without one routes p2p by the capped frontier SSSP
+(kernels.p2p_path), and a CH index is a separate build-time step
+(`ch.ensure_ch`, saved by `RoutingGraph.save_sidecars`).
 """
 
 from __future__ import annotations
@@ -432,14 +437,8 @@ def build_tiles(
     distributed pipeline and WRITE THE ARTIFACT DISTRIBUTED: nodes/edges go
     straight to parquet via df.write (the reference's Europe build is a
     30 GB PBF -> 150 GB of tiles, scripts/BUILD_EUROPE_TILES.md:20-60 —
-    that cannot transit one driver collect); only the ALT landmark pass
-    reads the finished per-mode slice back driver-side."""
-    # ALT landmark preprocessing at BUILD time (the CH-preprocessing analog,
-    # rust/src/lib.rs:246-261): 2k vectorized SSSPs here save every future
-    # executor process the same work — the artifact ships the tables and
-    # warm p2p queries start immediately.
-    from duckdb_routing_spark.routing.kernels import _alt_data
-
+    that cannot transit one driver collect); only the manifest pass reads
+    the finished per-mode slice back driver-side."""
     os.makedirs(out_dir, exist_ok=True)
     segments = segments_from_ways(ways)
     segments.persist()
@@ -450,9 +449,7 @@ def build_tiles(
             nodes_pdf = osm_nodes.toPandas()
             for mode in modes:
                 n_pdf, e_pdf = build_mode_graph_pandas(seg_pdf, nodes_pdf, mode)
-                g = RoutingGraph.from_pandas(n_pdf, e_pdf)
-                _alt_data(g)
-                g.save(out_dir, mode)
+                RoutingGraph.from_pandas(n_pdf, e_pdf).save(out_dir, mode)
         else:
             for mode in modes:
                 nodes, edges = build_mode_graph_df(spark, segments, osm_nodes, mode)
@@ -466,11 +463,9 @@ def build_tiles(
                 edges.write.mode("overwrite").parquet(
                     os.path.join(out_dir, f"edges_{mode}.parquet")
                 )
-                # landmark/manifest pass over the finished MODE-FILTERED
-                # slice only (file-backed read, not a job result transfer)
-                g = RoutingGraph.load(out_dir, mode)
-                _alt_data(g)
-                g.save_sidecars(out_dir, mode)
+                # manifest pass over the finished MODE-FILTERED slice only
+                # (file-backed read, not a job result transfer)
+                RoutingGraph.load(out_dir, mode).save_sidecars(out_dir, mode)
     finally:
         segments.unpersist()
     write_valhalla_config(out_dir, modes)

@@ -433,9 +433,9 @@ def streaming_ann_sync(
         df = batch_df
         if seq_col:
             df = reduce_cdc_batch(df, id_col, op_col, seq_col)
-        dels = df.where(F.col(op_col) == "delete").select(id_col)
+        dels = df.where(F.col(op_col) == "delete").select(_sim._quoted(id_col))
         ups = df.where(F.col(op_col) == "upsert").select(
-            id_col, vec_col, *(meta_cols or [])
+            *(_sim._quoted(c) for c in (id_col, vec_col, *(meta_cols or [])))
         )
         _sim.delete_from_ann_index(spark, index_dir, dels, id_col=id_col)
         _sim.upsert_ann_index(

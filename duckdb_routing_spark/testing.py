@@ -7,13 +7,20 @@ are 'secondary', one row of horizontal edges is oneway (eastbound), plus a
 every node is a snap candidate. Everything derives from integer grid math —
 reproducible across engines, which lets the DuckDB oracle rebuild the exact
 same edge set from an inlined VALUES list.
+
+Also the reference oracles the tests and tools check the package against:
+heap Dijkstra (dijkstra_p2p, dijkstra_p2p_path) and a parquet array-dim
+probe. Nothing in the package's query paths calls them.
 """
 
 from __future__ import annotations
 
+import heapq
+
 import numpy as np
 import pandas as pd
 
+from duckdb_routing_spark.routing import kernels
 from duckdb_routing_spark.routing.geometry import haversine_m_scalar
 from duckdb_routing_spark.routing.graph import RoutingGraph
 from duckdb_routing_spark.routing.speeds import get_speed_kmh, is_main_road, segment_weight_ms
@@ -226,3 +233,74 @@ def build_roadlike_csr(nrows: int, ncols: int, drop_pct: int = 20) -> RoutingGra
         length_m=w.astype(np.float64),
         main_nodes=np.arange(n_int, dtype=np.int64),
     )
+
+
+# ---------------------------------------------------------------------------
+# reference oracles: plain heap searches and probes the tests and tools
+# check the package against
+# ---------------------------------------------------------------------------
+
+
+def dijkstra_p2p(g: RoutingGraph, src: int, dst: int) -> float:
+    """Heap Dijkstra oracle: shortest-path weight in ms from src to dst, or
+    -1.0 (kernels.NO_ROUTE) if unreachable. Early-exits when dst is
+    settled. The tests check every routing kernel against it."""
+    if src == dst:
+        return 0.0
+    indptr, indices, weights = g.indptr, g.indices, g.weights_ms
+    dist = {src: 0}
+    heap = [(0, src)]
+    while heap:
+        d, u = heapq.heappop(heap)
+        if u == dst:
+            return float(d)
+        if d > dist.get(u, np.inf):
+            continue
+        for ei in range(indptr[u], indptr[u + 1]):
+            v = indices[ei]
+            nd = d + weights[ei]
+            if nd < dist.get(v, np.inf):
+                dist[v] = nd
+                heapq.heappush(heap, (nd, v))
+    return kernels.NO_ROUTE
+
+
+def dijkstra_p2p_path(g: RoutingGraph, src: int, dst: int):
+    """Heap Dijkstra oracle with the path: (weight_ms, path_node_list) or
+    (kernels.NO_ROUTE, None)."""
+    indptr, indices, weights = g.indptr, g.indices, g.weights_ms
+    dist = {src: 0}
+    prev: dict[int, int] = {}
+    heap = [(0, src)]
+    found = src == dst
+    while heap and not found:
+        d, u = heapq.heappop(heap)
+        if u == dst:
+            found = True
+            break
+        if d > dist.get(u, np.inf):
+            continue
+        for ei in range(indptr[u], indptr[u + 1]):
+            v = indices[ei]
+            nd = d + weights[ei]
+            if nd < dist.get(v, np.inf):
+                dist[v] = nd
+                prev[v] = u
+                heapq.heappush(heap, (nd, v))
+    if not found and dst not in dist:
+        return kernels.NO_ROUTE, None
+    path = [dst]
+    while path[-1] != src:
+        path.append(prev[path[-1]])
+    path.reverse()
+    return float(dist[dst]), path
+
+
+def probe_array_dim(path: str, col: str) -> int:
+    """Length of an array column's first value, read via the parquet reader
+    (no Spark job). Parquet schemas don't carry list lengths, so this probes
+    one row; it assumes the column is uniform-dim."""
+    import pyarrow.dataset as pads
+
+    first = pads.dataset(path, format="parquet").head(1, columns=[col])
+    return len(first.column(0)[0])

@@ -1,13 +1,13 @@
 """Contraction-hierarchy index: artifact/broadcast persistence and the
 accelerator rule — p2p and matrix use CH exactly when the loaded graph
-carries a prepared index, and ALT / frontier SSSP otherwise."""
+carries a prepared index, and the frontier SSSP otherwise."""
 
 import numpy as np
 import pytest
 
 from duckdb_routing_spark.routing import ch, kernels
 from duckdb_routing_spark.routing.graph import RoutingGraph
-from duckdb_routing_spark.testing import build_grid_graph
+from duckdb_routing_spark.testing import build_grid_graph, dijkstra_p2p
 
 
 @pytest.fixture(scope="module")
@@ -36,7 +36,7 @@ def test_ch_artifact_roundtrip(grid_with_ch, tmp_path):
     np.testing.assert_array_equal(idx2.rank, g._ch.rank)
     np.testing.assert_array_equal(idx2.up_weights, g._ch.up_weights)
     for s, t in _query_pairs(g):
-        assert ch.ch_p2p_path(g2, s, t)[0] == kernels.dijkstra_p2p(g, s, t)
+        assert ch.ch_p2p_path(g2, s, t)[0] == dijkstra_p2p(g, s, t)
 
 
 def test_ch_payload_roundtrip(grid_with_ch):
@@ -47,7 +47,7 @@ def test_ch_payload_roundtrip(grid_with_ch):
     assert getattr(g2, "_ch", None) is not None
     for s, t in _query_pairs(g):
         # the dispatcher must route through the SHIPPED index (no rebuild)
-        assert kernels.p2p_path(g2, s, t)[0] == kernels.dijkstra_p2p(g, s, t)
+        assert kernels.p2p_path(g2, s, t)[0] == dijkstra_p2p(g, s, t)
 
 
 def _engines_with_and_without_ch(spark):
@@ -70,8 +70,8 @@ def _engines_with_and_without_ch(spark):
 
 def test_engine_sql_routes_equal_with_and_without_ch(spark):
     """SQL travel_time and route durations are identical whether the loaded
-    graph carries a CH index (routes take CH) or not (routes take ALT):
-    both accelerators are exact."""
+    graph carries a CH index (routes take CH) or not (routes take the
+    capped frontier SSSP): both kernels are exact."""
     plain, with_ch = _engines_with_and_without_ch(spark)
     q = (
         "SELECT travel_time(52.0, 13.0, 52.018, 13.018, 'auto') AS s, "
@@ -104,7 +104,7 @@ def test_ch_many_to_many_matches_dijkstra(grid_with_ch):
         if s < 0 or t < 0:
             assert dm is None and ds is None
             continue
-        want = kernels.dijkstra_p2p(g, s, t)
+        want = dijkstra_p2p(g, s, t)
         assert ds is not None and abs(ds * 1000.0 - want) < 1e-9
         _, p2p_path = ch.ch_p2p_path(g, s, t)
         assert abs(dm - kernels.path_distance_m(g, p2p_path)) < 1e-9
@@ -153,8 +153,9 @@ def test_engine_matrix_equal_with_and_without_ch(spark):
 
 def test_kernels_pick_accelerator_from_prepared_ch(monkeypatch):
     """p2p_path and matrix_rows call the CH kernels exactly when the graph
-    carries a prepared index; without one they take ALT A* and frontier
-    SSSP, and never build an index."""
+    carries a prepared index; without one they run the frontier SSSP
+    (capped for p2p), never build an index and never attach landmark
+    tables."""
     calls = []
 
     def spy(mod, name):
@@ -168,17 +169,22 @@ def test_kernels_pick_accelerator_from_prepared_ch(monkeypatch):
 
     for mod, name in [
         (ch, "ch_p2p_path"), (ch, "ch_many_to_many"), (ch, "build_ch"),
-        (kernels, "astar_p2p_path"), (kernels, "sssp_multi_target"),
+        (kernels, "sssp_frontier_ms"), (kernels, "sssp_multi_target"),
     ]:
         spy(mod, name)
 
     plain = build_grid_graph("auto", 10, 10, island=False)
     s, t = 0, plain.num_nodes - 1
-    w = kernels.dijkstra_p2p(plain, s, t)
+    w = dijkstra_p2p(plain, s, t)
     assert kernels.p2p_path(plain, s, t)[0] == w
     rows_plain = kernels.matrix_rows(plain, [s, 5], [t, 3])
-    assert calls == ["astar_p2p_path", "sssp_multi_target", "sssp_multi_target"]
+    assert calls == [
+        "sssp_frontier_ms",
+        "sssp_multi_target", "sssp_frontier_ms",
+        "sssp_multi_target", "sssp_frontier_ms",
+    ]
     assert getattr(plain, "_ch", None) is None
+    assert getattr(plain, "_alt", None) is None
 
     prepared = build_grid_graph("auto", 10, 10, island=False)
     prepared._ch = ch.build_ch(prepared)

@@ -8,12 +8,11 @@ import numpy as np
 import pytest
 
 from duckdb_routing_spark.routing import ch as chm
-from duckdb_routing_spark.routing import kernels
 from duckdb_routing_spark.routing.ch_partitioned import (
     build_ch_partitioned,
     grid_cells,
 )
-from duckdb_routing_spark.testing import build_grid_graph, build_roadlike_csr
+from duckdb_routing_spark.testing import build_grid_graph, build_roadlike_csr, dijkstra_p2p
 
 
 def _pairs(g, n, seed=7):
@@ -26,7 +25,7 @@ def test_partitioned_exact_on_grid_vs_dijkstra_and_reference_build():
     part = build_ch_partitioned(g, n_cells=9)
     ref = chm.build_ch(g)
     for s, t in _pairs(g, 40):
-        d = kernels.dijkstra_p2p(g, s, t)
+        d = dijkstra_p2p(g, s, t)
         assert chm.ch_p2p(part, s, t)[0] == d
         assert chm.ch_p2p(ref, s, t)[0] == d
 
@@ -35,7 +34,7 @@ def test_partitioned_exact_on_roadlike():
     g = build_roadlike_csr(60, 60)
     part = build_ch_partitioned(g, n_cells=16)
     for s, t in _pairs(g, 30, seed=11):
-        assert chm.ch_p2p(part, s, t)[0] == kernels.dijkstra_p2p(g, s, t)
+        assert chm.ch_p2p(part, s, t)[0] == dijkstra_p2p(g, s, t)
 
 
 def test_partitioned_path_unpacks_to_original_nodes():
@@ -74,7 +73,7 @@ def test_spark_mode_identical_to_serial(spark):
     assert np.array_equal(a.down_weights, b.down_weights)
     assert a.n_shortcuts == b.n_shortcuts
     for s, t in _pairs(g, 15, seed=5):
-        assert chm.ch_p2p(a, s, t)[0] == kernels.dijkstra_p2p(g, s, t)
+        assert chm.ch_p2p(a, s, t)[0] == dijkstra_p2p(g, s, t)
 
 
 def test_single_cell_degenerates_to_full_build_semantics():
@@ -82,7 +81,7 @@ def test_single_cell_degenerates_to_full_build_semantics():
     g = build_grid_graph("auto", 12, 12, island=False)
     part = build_ch_partitioned(g, n_cells=1)
     for s, t in _pairs(g, 20, seed=9):
-        assert chm.ch_p2p(part, s, t)[0] == kernels.dijkstra_p2p(g, s, t)
+        assert chm.ch_p2p(part, s, t)[0] == dijkstra_p2p(g, s, t)
 
 
 def test_grid_cells_partitions_every_node():

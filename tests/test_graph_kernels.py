@@ -10,7 +10,14 @@ import pytest
 
 from duckdb_routing_spark.routing import kernels
 from duckdb_routing_spark.routing.graph import RoutingGraph
-from duckdb_routing_spark.testing import BASE_LAT, BASE_LON, SPACING_DEG, build_grid_graph
+from duckdb_routing_spark.testing import (
+    BASE_LAT,
+    BASE_LON,
+    SPACING_DEG,
+    build_grid_graph,
+    dijkstra_p2p,
+    dijkstra_p2p_path,
+)
 
 
 @pytest.fixture(scope="module")
@@ -57,34 +64,34 @@ def test_snap_brute_force_equivalence(g):
 
 def test_p2p_straight_line(g):
     # (0,0) -> (0,5): 5 residential segments, same weight each
-    w = kernels.dijkstra_p2p(g, node(0, 0), node(0, 5))
-    single = kernels.dijkstra_p2p(g, node(0, 0), node(0, 1))
+    w = dijkstra_p2p(g, node(0, 0), node(0, 5))
+    single = dijkstra_p2p(g, node(0, 0), node(0, 1))
     assert w == pytest.approx(5 * single)
     assert w > 0
     # symmetric on a non-oneway row
-    assert kernels.dijkstra_p2p(g, node(0, 5), node(0, 0)) == pytest.approx(w)
+    assert dijkstra_p2p(g, node(0, 5), node(0, 0)) == pytest.approx(w)
 
 
 def test_vertical_edges_faster_per_meter(g):
     # secondary (60 km/h) beats residential (30 km/h) per ~equal length
-    h = kernels.dijkstra_p2p(g, node(0, 0), node(0, 1))
-    v = kernels.dijkstra_p2p(g, node(0, 0), node(1, 0))
+    h = dijkstra_p2p(g, node(0, 0), node(0, 1))
+    v = dijkstra_p2p(g, node(0, 0), node(1, 0))
     assert v < h
 
 
 def test_oneway_row_asymmetric(g):
     # row 1 is eastbound-only: westbound must detour via another row
-    e = kernels.dijkstra_p2p(g, node(1, 0), node(1, 5))
-    wber = kernels.dijkstra_p2p(g, node(1, 5), node(1, 0))
+    e = dijkstra_p2p(g, node(1, 0), node(1, 5))
+    wber = dijkstra_p2p(g, node(1, 5), node(1, 0))
     assert wber > e
 
 
 def test_no_route_to_island(g):
-    assert kernels.dijkstra_p2p(g, node(0, 0), 100) == kernels.NO_ROUTE
+    assert dijkstra_p2p(g, node(0, 0), 100) == kernels.NO_ROUTE
 
 
 def test_p2p_path_reconstruction(g):
-    w, path = kernels.dijkstra_p2p_path(g, node(0, 0), node(2, 3))
+    w, path = dijkstra_p2p_path(g, node(0, 0), node(2, 3))
     assert w > 0
     assert path[0] == node(0, 0) and path[-1] == node(2, 3)
     # contiguous: each hop is a real edge
@@ -101,7 +108,7 @@ def test_multi_target_matches_p2p(g):
     targets = np.array([node(0, 5), node(5, 0), node(9, 9), 100])
     w, prev = kernels.dijkstra_multi_target(g, node(0, 0), targets)
     for t, wt in zip(targets, w):
-        want = kernels.dijkstra_p2p(g, node(0, 0), int(t))
+        want = dijkstra_p2p(g, node(0, 0), int(t))
         assert wt == pytest.approx(want)
     assert w[3] == kernels.NO_ROUTE
 
@@ -121,9 +128,9 @@ def test_isochrone_monotone_and_cutoff(g):
 
 def test_mode_ordering():
     # pedestrian slower than bicycle slower than auto over the same OD
-    wa = kernels.dijkstra_p2p(build_grid_graph("auto"), 0, 99)
-    wb = kernels.dijkstra_p2p(build_grid_graph("bicycle"), 0, 99)
-    wp = kernels.dijkstra_p2p(build_grid_graph("pedestrian"), 0, 99)
+    wa = dijkstra_p2p(build_grid_graph("auto"), 0, 99)
+    wb = dijkstra_p2p(build_grid_graph("bicycle"), 0, 99)
+    wp = dijkstra_p2p(build_grid_graph("pedestrian"), 0, 99)
     assert wa < wb < wp
 
 
@@ -145,7 +152,7 @@ def test_artifact_roundtrip(tmp_path, g):
     g2 = RoutingGraph.load(str(tmp_path), "auto")
     assert g2.num_nodes == g.num_nodes
     assert g2.num_edges == g.num_edges
-    assert kernels.dijkstra_p2p(g2, 0, 99) == kernels.dijkstra_p2p(g, 0, 99)
+    assert dijkstra_p2p(g2, 0, 99) == dijkstra_p2p(g, 0, 99)
     np.testing.assert_array_equal(g2.main_nodes, g.main_nodes)
 
 
@@ -155,7 +162,7 @@ def test_frontier_sssp_matches_dijkstra(g):
     for src in (0, 37, 55, 99, 100):
         dist = kernels.sssp_frontier_ms(g, src)
         for dst in (0, 9, 42, 50, 99, 100, 101):
-            want = kernels.dijkstra_p2p(g, src, dst)
+            want = dijkstra_p2p(g, src, dst)
             got = float(dist[dst]) if dist[dst] != kernels._INF else kernels.NO_ROUTE
             assert got == want, f"{src}->{dst}: frontier {got} != dijkstra {want}"
 
@@ -194,6 +201,6 @@ def test_batch_travel_time_vectorized_consistency(g):
     for i in range(n):
         s = g.nearest_main_node(float(lo1[i]), float(la1[i]))
         t = g.nearest_main_node(float(lo2[i]), float(la2[i]))
-        w = kernels.dijkstra_p2p(g, s, t)
+        w = dijkstra_p2p(g, s, t)
         want = w / 1000.0 if w >= 0 else np.nan
         assert (np.isnan(got[i]) and np.isnan(want)) or got[i] == want

@@ -252,13 +252,14 @@ def test_dataset_bytes_and_dim_probe(spark, tmp_path):
     arbitrarily large directory corpora); probe_array_dim reads one row
     driver-side from either layout."""
     from duckdb_routing_spark.operators import common
+    from duckdb_routing_spark.testing import probe_array_dim
 
     out = str(tmp_path / "emb_dir.parquet")
     spark.range(200).selectExpr(
         "id AS vec_id", "array(cast(id as float), cast(id+1 as float), 0.5f) AS embedding"
     ).repartition(4).write.parquet(out)
     assert common.dataset_bytes(out) > 4096  # > a directory inode
-    assert common.probe_array_dim(out, "embedding") == 3
+    assert probe_array_dim(out, "embedding") == 3
 
 
 def test_winnowing_shared_substring_guarantee(spark):

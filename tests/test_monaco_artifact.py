@@ -34,12 +34,13 @@ def test_casino_to_palace_route(monaco_graph):
     duration_minutes > 0 between Casino (7.4281, 43.7396) and Palace
     (7.4197, 43.7312)."""
     from duckdb_routing_spark.routing import kernels
+    from duckdb_routing_spark.testing import dijkstra_p2p_path
 
     g = monaco_graph
     s = g.nearest_main_node(7.4281, 43.7396)
     d = g.nearest_main_node(7.4197, 43.7312)
     assert s >= 0 and d >= 0
-    w, path = kernels.dijkstra_p2p_path(g, s, d)
+    w, path = dijkstra_p2p_path(g, s, d)
     assert w > 0 and len(path) > 2
     dist_km = kernels.path_distance_m(g, path) / 1000.0
     minutes = w / 1000.0 / 60.0

@@ -144,8 +144,8 @@ def test_build_tiles_distributed_write_no_driver_collect(spark, tmp_path, monkey
     g = RoutingGraph.load(out, "auto")
     ref = build_grid_graph("auto", 6, 6, island=False)
     assert (g.num_nodes, g.num_edges) == (ref.num_nodes, ref.num_edges)
-    # ALT sidecar written by the driver-side landmark pass
-    assert os.path.exists(os.path.join(out, "alt_auto.npz"))
+    # the build writes no landmark tables: p2p needs no preparation
+    assert not os.path.exists(os.path.join(out, "alt_auto.npz"))
     d_built = kernels.batch_travel_time_s(g, [52.0], [13.0], [52.005], [13.005])[0]
     d_ref = kernels.batch_travel_time_s(ref, [52.0], [13.0], [52.005], [13.005])[0]
     assert d_built == d_ref

@@ -11,7 +11,7 @@ from duckdb_routing_spark.sources.osm_pbf import (
     scan_blobs,
     write_osm_pbf,
 )
-from duckdb_routing_spark.testing import build_grid_graph, grid_nodes, grid_ways as _grid_ways
+from duckdb_routing_spark.testing import build_grid_graph, dijkstra_p2p, grid_nodes, grid_ways as _grid_ways
 
 
 def test_varint_zigzag_roundtrip():
@@ -43,7 +43,6 @@ def test_pbf_roundtrip(spark, tmp_path):
 
 
 def test_build_from_pbf_matches_pandas_build(spark, tmp_path):
-    from duckdb_routing_spark.routing import kernels
     from duckdb_routing_spark.routing.graph import RoutingGraph
     from duckdb_routing_spark.routing.osm_build import build_tiles_from_pbf
 
@@ -56,9 +55,9 @@ def test_build_from_pbf_matches_pandas_build(spark, tmp_path):
     g_ref = build_grid_graph("auto")
     assert g.num_nodes == g_ref.num_nodes
     assert g.num_edges == g_ref.num_edges
-    assert kernels.dijkstra_p2p(g, 0, 99) == pytest.approx(kernels.dijkstra_p2p(g_ref, 0, 99))
+    assert dijkstra_p2p(g, 0, 99) == pytest.approx(dijkstra_p2p(g_ref, 0, 99))
     # oneway row: reverse edge suppressed in both builds
-    assert kernels.dijkstra_p2p(g, 11, 10) == pytest.approx(kernels.dijkstra_p2p(g_ref, 11, 10))
+    assert dijkstra_p2p(g, 11, 10) == pytest.approx(dijkstra_p2p(g_ref, 11, 10))
 
 
 def test_load_config_builds_and_caches_from_raw_pbf(spark, tmp_path):
@@ -81,7 +80,6 @@ def test_load_config_builds_and_caches_from_raw_pbf(spark, tmp_path):
     assert eng.is_loaded("auto")
     assert eng.tiles_path == path  # the SETTING reports the pbf, like the reference
     assert os.path.isdir(path + ".tiles")  # cache artifacts landed beside the source
-    from duckdb_routing_spark.routing import kernels
     from duckdb_routing_spark.testing import build_grid_graph
 
     g_ref = build_grid_graph("auto")

@@ -15,6 +15,7 @@ from duckdb_routing_spark.testing import (
     BASE_LON,
     SPACING_DEG,
     build_grid_graph,
+    dijkstra_p2p,
     grid_nodes,
     grid_segments,
 )
@@ -291,7 +292,6 @@ def test_dense_rank_by_is_parallel_and_correct(spark):
 def test_distributed_build_matches_pandas_build(spark, tmp_path):
     """The Spark 'tile build' pipeline must produce the same graph as the
     pandas fixture builder (same weights, same connectivity)."""
-    from duckdb_routing_spark.routing import kernels
     from duckdb_routing_spark.routing.osm_build import build_tiles
     from duckdb_routing_spark.routing.graph import RoutingGraph
 
@@ -308,8 +308,8 @@ def test_distributed_build_matches_pandas_build(spark, tmp_path):
     g_ref = build_grid_graph("auto")
     assert g_spark.num_nodes == g_ref.num_nodes
     assert g_spark.num_edges == g_ref.num_edges
-    w1 = kernels.dijkstra_p2p(g_spark, 0, 99)
-    w2 = kernels.dijkstra_p2p(g_ref, 0, 99)
+    w1 = dijkstra_p2p(g_spark, 0, 99)
+    w2 = dijkstra_p2p(g_ref, 0, 99)
     assert w1 == pytest.approx(w2)
 
 

@@ -1,87 +1,67 @@
-"""Scale-trend validation for the p2p accelerator: a 250k-node lattice
+"""Scale-trend validation for the p2p kernel: a 250k-node lattice
 (country-scale direction; Italy is 9.7M nodes per ITALY.md:55-56). Checks
-that ALT A* stays exact and keeps beating plain Dijkstra as the graph
-grows — the property that makes warm single-pair queries feasible where
-the reference uses contraction hierarchies (rust/src/lib.rs:260)."""
+that the capped frontier search stays exact and keeps beating plain heap
+Dijkstra as the graph grows, with no per-graph preparation — the property
+that keeps warm single-pair queries cheap on graphs that ship no CH index
+(the reference prepares one, rust/src/lib.rs:260). Uniform lattices are
+this kernel's weakest topology: the cap prunes little on a grid."""
 
+import os
 import time
 
+import numpy as np
+
 from duckdb_routing_spark.routing import kernels
-from duckdb_routing_spark.testing import build_big_grid_csr
+from duckdb_routing_spark.testing import build_big_grid_csr, dijkstra_p2p, dijkstra_p2p_path
 
 
-def test_alt_astar_scales_to_quarter_million_nodes():
+def test_capped_frontier_p2p_scales_to_quarter_million_nodes():
     g = build_big_grid_csr(500, 500)
     assert g.num_nodes == 250_000
 
-    t0 = time.perf_counter()
-    kernels._alt_data(g)
-    prep = time.perf_counter() - t0
-
     pairs = [(0, g.num_nodes - 1), (0, g.num_nodes // 2), (499, 250_000 - 500)]
-    t_uni = t_alt = 0.0
+    t_uni = t_cap = 0.0
     for s, t in pairs:
         # per-pair best-of-2 on BOTH sides: an outside-load burst poisons
         # one run, not the ratio (this host shows multi-second bursts)
-        d_uni = d_alt = float("inf")
+        d_uni = d_cap = float("inf")
         for _ in range(2):
             t0 = time.perf_counter()
-            w_uni, _ = kernels.dijkstra_p2p_path(g, s, t)
+            w_uni, _ = dijkstra_p2p_path(g, s, t)
             d_uni = min(d_uni, time.perf_counter() - t0)
             t0 = time.perf_counter()
-            w_alt, path = kernels.astar_p2p_path(g, s, t)
-            d_alt = min(d_alt, time.perf_counter() - t0)
+            w_cap, path = kernels.p2p_path(g, s, t)
+            d_cap = min(d_cap, time.perf_counter() - t0)
         t_uni += d_uni
-        t_alt += d_alt
-        assert w_alt == w_uni
+        t_cap += d_cap
+        assert w_cap == w_uni
         assert path[0] == s and path[-1] == t
-    # preprocessing amortizes: it must stay cheaper than a handful of
-    # unaccelerated queries, and warm queries must win clearly
-    assert t_alt * 1.5 < t_uni, f"ALT {t_alt:.2f}s vs uni {t_uni:.2f}s"
-    assert prep < t_uni * 5, f"ALT preprocessing {prep:.2f}s too heavy vs {t_uni:.2f}s"
+    assert t_cap * 1.5 < t_uni, f"capped frontier {t_cap:.2f}s vs uni {t_uni:.2f}s"
 
 
-def test_alt_tables_persist_through_artifact_and_payload():
-    """ALT landmark tables computed at build time survive BOTH transport
-    paths — the parquet artifact (save/load + int32 npz sidecar) and the
-    broadcast payload — and the restored tables drive an exact A*."""
-    import tempfile
-
-    import numpy as np
-
+def test_artifact_and_payload_carry_no_alt_tables(tmp_path):
+    """Neither transport path carries landmark tables any more: save writes
+    no alt sidecar, the payload has no ALT fields, and a loader that meets
+    an alt_<mode>.npz left by an older build ignores it and still routes
+    exactly."""
     from duckdb_routing_spark.routing.graph import RoutingGraph
     from duckdb_routing_spark.testing import build_grid_graph
 
     g = build_grid_graph("auto", 20, 20, island=False)
-    kernels._alt_data(g)
-    want_f, want_t = g._alt
-
-    with tempfile.TemporaryDirectory() as d:
-        g.save(d, "auto")
-        g2 = RoutingGraph.load(d, "auto")
-    assert np.array_equal(g2._alt[0], want_f) and np.array_equal(g2._alt[1], want_t)
-
+    d = str(tmp_path)
+    g.save(d, "auto")
+    assert [f for f in os.listdir(d) if f.endswith(".npz")] == []
+    assert not any("alt" in k for k in g.to_payload())
+    np.savez_compressed(tmp_path / "alt_auto.npz", dist_from=np.zeros((8, 1), np.int32),
+                        dist_to=np.zeros((8, 1), np.int32))
+    g2 = RoutingGraph.load(d, "auto")
     g3 = RoutingGraph.from_payload(g.to_payload())
-    assert np.array_equal(g3._alt[0], want_f) and np.array_equal(g3._alt[1], want_t)
-
-    # the restored tables are used, not recomputed: exactness check
     for s, t in [(0, 399), (19, 380), (0, 1)]:
-        w_ref = kernels.dijkstra_p2p(g, s, t)
+        w_ref = dijkstra_p2p(g, s, t)
         for gg in (g2, g3):
-            w, path = kernels.astar_p2p_path(gg, s, t)
+            w, path = kernels.p2p_path(gg, s, t)
             assert w == w_ref and path[0] == s and path[-1] == t
-
-
-def test_alt_int32_packing_roundtrip():
-    import numpy as np
-
-    d = np.array([[0, 123456, kernels._INF, 2_000_000_000]], dtype=np.int64)
-    packed = kernels.pack_alt(d)
-    assert packed.dtype == np.int32
-    back = kernels.unpack_alt(packed)
-    assert back[0, 0] == 0 and back[0, 1] == 123456
-    assert back[0, 2] == kernels._INF  # sentinel restored
-    assert back[0, 3] == 2_000_000_000
+            assert getattr(gg, "_alt", None) is None
 
 
 def test_batch_grid_catalyst_coords_bit_exact(spark):

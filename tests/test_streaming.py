@@ -639,3 +639,66 @@ def test_streaming_ann_sync_with_meta_cols(spark, tmp_path):
         ).collect()
     ]
     assert a == b == want and len(a) >= 20
+
+
+def test_streaming_ann_sync_quotes_meta_cols(spark, tmp_path):
+    """A metadata column whose name needs backticks (`src.lang`) rides
+    through the CDC sync as one column: the drained store holds the same
+    rows as a batch build over the net corpus and serves the same filtered
+    probe."""
+    from duckdb_routing_spark.operators import similarity
+    from duckdb_routing_spark.streaming import docs as sd
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").select(
+        "vec_id", "embedding",
+        F.when(F.col("label") == 1, "en").otherwise("de").alias("src.lang"),
+    )
+    seeds = (
+        emb.orderBy("vec_id").limit(8)
+        .select(F.col("vec_id").alias("cell"), F.col("embedding").alias("svec"))
+    )
+    synced, net_dir = str(tmp_path / "qsynced"), str(tmp_path / "qnet")
+    base = emb.filter("vec_id % 2 = 0")
+    similarity.build_ann_index(base, synced, seeds=seeds, meta_cols=["src.lang"])
+
+    chunks = [
+        emb.filter("vec_id % 2 = 1").withColumn("op", F.lit("upsert")),
+        spark.createDataFrame([(4,), (6,)], "vec_id long").select(
+            "vec_id",
+            F.lit(None).cast("array<float>").alias("embedding"),
+            F.lit(None).cast("string").alias("src.lang"),
+            F.lit("delete").alias("op"),
+        ),
+    ]
+    in_dir = tmp_path / "qcdc_in"
+    in_dir.mkdir()
+    for b, ch in enumerate(chunks):
+        ch.coalesce(1).write.parquet(str(in_dir / f"chunk_{b}.parquet"))
+    stream = (
+        spark.readStream.schema("vec_id long, embedding array<float>, `src.lang` string, op string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(in_dir / "chunk_*.parquet"))
+    )
+    q = sd.streaming_ann_sync(stream, synced, meta_cols=["src.lang"])
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    net = base.filter("vec_id NOT IN (4, 6)").unionByName(emb.filter("vec_id % 2 = 1"))
+    similarity.build_ann_index(net, net_dir, seeds=seeds, meta_cols=["src.lang"])
+
+    def rows(path):
+        return sorted(
+            tuple(r) for r in spark.read.parquet(path + "/cells").select("vec_id", "`src.lang`").collect()
+        )
+
+    assert rows(synced) == rows(net_dir) and len(rows(synced)) == net.count()
+    queries = emb.filter("vec_id IN (10, 11, 12)")
+    a, b = (
+        [tuple(r) for r in similarity.ann_query_index(
+            spark, d, queries, k=10, n_probe=2, filter_expr="`src.lang` = 'en'"
+        ).collect()]
+        for d in (synced, net_dir)
+    )
+    assert a == b and a
