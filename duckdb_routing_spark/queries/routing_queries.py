@@ -474,11 +474,12 @@ def route_tile_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ETL operator (#9/#11) through the small-build dispatch: a 60x60
     lattice (7k segments — far under SMALL_BUILD_SEGMENTS) derives its whole
     graph in ONE lazy Arrow task via the fused single-batch kernel
-    (osm_build.build_cardinalities_df), the same dispatch `build_tiles` takes
-    for city/country extracts. The distributed multi-stage pipeline
-    (segments -> speed join -> haversine weights -> oneway -> dense remap)
-    stays oracle-covered end-to-end by q:route_pbf_build and the pandas/DF
-    parity test (tests/test_osm_build.py)."""
+    (osm_build.build_cardinalities_from_grid), the same dispatch
+    `build_tiles` takes for city/country extracts. The distributed
+    multi-stage pipeline (segments -> speed join -> haversine weights ->
+    oneway -> dense remap) stays oracle-covered end-to-end by
+    q:route_pbf_build and the pandas/DF parity test
+    (tests/test_osm_build.py)."""
     from duckdb_routing_spark.routing.osm_build import build_cardinalities_from_grid
 
     # fixture generated INSIDE the task (closure ships three ints, not two

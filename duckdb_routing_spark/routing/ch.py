@@ -334,12 +334,15 @@ def _build_ch_inner(g: RoutingGraph) -> CHIndex:
         live -= in_batch
         dirty &= live
 
-    # partition the edge multiset by rank direction. Keep only the LAST
-    # (lowest) weight per (u, v, mid) pair implicitly: parallel entries are
-    # all retained — Dijkstra takes the min anyway — but drop entries
-    # strictly dominated by a later shortcut with the same endpoints.
+    # partition the edge multiset by rank direction. Every entry is kept:
+    # an edge or shortcut that a later, cheaper shortcut between the same
+    # endpoints undercut stays beside it, the query searches relax both and
+    # Dijkstra keeps the minimum.
     up = [[] for _ in range(n)]
-    down = [[] for _ in range(n)]  # keyed by the HIGHER-rank endpoint v? no: by target for backward search
+    # reverse adjacency keyed by each edge's lower-rank endpoint v: the
+    # backward search from the target walks down[v] up to the higher-rank
+    # nodes with an edge into v
+    down = [[] for _ in range(n)]
     for u, v, w, mid in edges:
         if rank[v] > rank[u]:
             up[u].append((v, w, mid))

@@ -25,14 +25,11 @@ an ``alt_<mode>.npz`` sidecar from older builds is ignored.
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-
-ARTIFACT_MANIFEST = "_manifest.json"
 
 
 @dataclass
@@ -350,26 +347,12 @@ class RoutingGraph:
         )
         nodes.to_parquet(os.path.join(dir_path, f"nodes_{mode}.parquet"), index=False)
         edges.to_parquet(os.path.join(dir_path, f"edges_{mode}.parquet"), index=False)
-        self.save_sidecars(dir_path, mode)
-
-    def save_sidecars(self, dir_path: str, mode: str) -> None:
-        """CH index sidecar + manifest entry for an artifact whose node/edge
-        parquet already exists — the distributed build writes the tables
-        via df.write.parquet and only this driver-side pass remains."""
         chx = getattr(self, "_ch", None)
         if chx is not None:
             # build-time contraction-hierarchy index (the reference persists
             # its prepared fast_paths index inside the .routing artifact the
             # same way): loaders skip the node-ordering build entirely
             np.savez_compressed(os.path.join(dir_path, f"ch_{mode}.npz"), **chx.to_arrays())
-        manifest_path = os.path.join(dir_path, ARTIFACT_MANIFEST)
-        manifest = {}
-        if os.path.exists(manifest_path):
-            with open(manifest_path) as f:
-                manifest = json.load(f)
-        manifest[mode] = {"nodes": self.num_nodes, "edges": self.num_edges}
-        with open(manifest_path, "w") as f:
-            json.dump(manifest, f)
 
     @classmethod
     def load(cls, dir_path: str, mode: str, bbox: tuple | None = None) -> "RoutingGraph":

@@ -18,10 +18,10 @@ window, join, distinct) — planet-scale way tables partition naturally; the
 speed table joins as a broadcast; only the final artifact (nodes/edges of one
 country-sized graph) is small enough to collect/broadcast.
 
-The build writes the graph tables and the manifest, and prepares no routing
-index: a graph without one routes p2p by the capped frontier SSSP
-(kernels.p2p_path), and a CH index is a separate build-time step
-(`ch.ensure_ch`, saved by `RoutingGraph.save_sidecars`).
+The build writes the graph tables and prepares no routing index: a graph
+without one routes p2p by the capped frontier SSSP (kernels.p2p_path), and
+a CH index is a separate build-time step (`ch.ensure_ch`, saved as a
+sidecar by `RoutingGraph.save`).
 """
 
 from __future__ import annotations
@@ -369,14 +369,22 @@ def build_mode_graph_pandas(segments, osm_nodes, mode: str):
     return nodes, edges
 
 
-def build_cardinalities_df(spark: SparkSession, segments_pdf, osm_nodes_pdf, mode: str) -> DataFrame:
+def build_cardinalities_from_grid(
+    spark: SparkSession, nrows: int, ncols: int, mode: str, island: bool = False
+) -> DataFrame:
     """Small-build single-task path for graph-cardinality queries (the
     `route_tile_build` bench shape): the WHOLE segments->graph derivation
-    runs as ONE lazy Arrow task via the single-batch kernel — no shuffle, no
-    multi-stage DAG, still executed per action on an executor (never
-    driver-eager). Inputs must already satisfy SMALL_BUILD_SEGMENTS; real
-    PBF-scale builds keep the distributed `build_mode_graph_df` pipeline
-    (exercised end-to-end by q:route_pbf_build)."""
+    for an nrows x ncols lattice runs as ONE lazy Arrow task via the
+    single-batch kernel — no shuffle, no multi-stage DAG, still executed
+    per action on an executor (never driver-eager). Real PBF-scale builds
+    keep the distributed `build_mode_graph_df` pipeline (exercised
+    end-to-end by q:route_pbf_build).
+
+    The lattice is GENERATED inside the task: the closure ships three ints
+    instead of two pickled pandas frames (~1 MB serialized per action —
+    measured as the dominant cost of the small-build bench shape, 0.56 s
+    -> ~0.25 s). Same symmetric footing as the DuckDB oracle, which also
+    derives the lattice from the grid rules rather than receiving it."""
     import pandas as pd
 
     def one_task(_batches):
@@ -386,26 +394,6 @@ def build_cardinalities_df(spark: SparkSession, segments_pdf, osm_nodes_pdf, mod
         # a fresh worker spawn (~0.3-0.5 s measured; pid-pinned in
         # test_single_task_worker_reuse)
         for _ in _batches:
-            pass
-        nodes, edges = build_mode_graph_pandas(segments_pdf, osm_nodes_pdf, mode)
-        yield pd.DataFrame({"n_nodes": [len(nodes)], "n_edges": [len(edges)]})
-
-    return spark.range(1, numPartitions=1).mapInPandas(one_task, "n_nodes long, n_edges long")
-
-
-def build_cardinalities_from_grid(
-    spark: SparkSession, nrows: int, ncols: int, mode: str, island: bool = False
-) -> DataFrame:
-    """`build_cardinalities_df` with the lattice fixture GENERATED inside
-    the task: the closure ships three ints instead of two pickled pandas
-    frames (~1 MB serialized per action — measured as the dominant cost of
-    the small-build bench shape, 0.56 s -> ~0.25 s). Same symmetric footing
-    as the DuckDB oracle, which also derives the lattice from the grid
-    rules rather than receiving it."""
-    import pandas as pd
-
-    def one_task(_batches):
-        for _ in _batches:  # drain -> worker returns to the reuse pool
             pass
         from duckdb_routing_spark.testing import grid_nodes, grid_segments
 
@@ -437,8 +425,8 @@ def build_tiles(
     distributed pipeline and WRITE THE ARTIFACT DISTRIBUTED: nodes/edges go
     straight to parquet via df.write (the reference's Europe build is a
     30 GB PBF -> 150 GB of tiles, scripts/BUILD_EUROPE_TILES.md:20-60 —
-    that cannot transit one driver collect); only the manifest pass reads
-    the finished per-mode slice back driver-side."""
+    that cannot transit one driver collect) and the graph is never read
+    back driver-side."""
     os.makedirs(out_dir, exist_ok=True)
     segments = segments_from_ways(ways)
     segments.persist()
@@ -463,9 +451,6 @@ def build_tiles(
                 edges.write.mode("overwrite").parquet(
                     os.path.join(out_dir, f"edges_{mode}.parquet")
                 )
-                # manifest pass over the finished MODE-FILTERED slice only
-                # (file-backed read, not a job result transfer)
-                RoutingGraph.load(out_dir, mode).save_sidecars(out_dir, mode)
     finally:
         segments.unpersist()
     write_valhalla_config(out_dir, modes)

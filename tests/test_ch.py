@@ -25,16 +25,18 @@ def _query_pairs(g):
 def test_ch_artifact_roundtrip(grid_with_ch, tmp_path):
     """save() persists the prepared index as a ch_<mode>.npz sidecar and
     load() restores it — executors/loaders never re-run the ordering, the
-    same contract as the reference's prepared .routing artifact."""
+    same contract as the reference's prepared .routing artifact. Every
+    to_arrays() array survives the npz round trip unchanged."""
     g = grid_with_ch
     g.save(str(tmp_path), "auto")
     assert (tmp_path / "ch_auto.npz").exists()
     g2 = RoutingGraph.load(str(tmp_path), "auto")
     idx2 = getattr(g2, "_ch", None)
     assert idx2 is not None
-    assert idx2.n_shortcuts == g._ch.n_shortcuts
-    np.testing.assert_array_equal(idx2.rank, g._ch.rank)
-    np.testing.assert_array_equal(idx2.up_weights, g._ch.up_weights)
+    want, got = g._ch.to_arrays(), idx2.to_arrays()
+    assert want.keys() == got.keys()
+    for name in want:
+        np.testing.assert_array_equal(got[name], want[name], err_msg=name)
     for s, t in _query_pairs(g):
         assert ch.ch_p2p_path(g2, s, t)[0] == dijkstra_p2p(g, s, t)
 
@@ -221,6 +223,19 @@ def test_roadlike_ch_exact_and_linear_shape():
         wd = kernels.sssp_frontier_ms(g, s)[t]
         want = -1.0 if wd == np.iinfo(np.int64).max else float(wd)
         assert w_ch == want, (s, t, w_ch, want)
+    # unpacked paths are original-edge walks whose cheapest parallel edge
+    # weights sum to the CH weight (shortcut middles recurse correctly)
+    g._ch = idx
+    for s, t in pairs[:3]:
+        w, path = chm.ch_p2p_path(g, s, t)
+        assert path[0] == s and path[-1] == t
+        hops = []
+        for a, b in zip(path, path[1:]):
+            row = slice(g.indptr[a], g.indptr[a + 1])
+            cand = g.weights_ms[row][g.indices[row] == b]
+            assert len(cand) > 0, f"unpacked hop {a}->{b} not an original edge"
+            hops.append(int(cand.min()))
+        assert sum(hops) == int(w)
     t0 = time.perf_counter()
     chm.ch_p2p(idx, 0, 59 * 60 + 59)
     assert time.perf_counter() - t0 < 0.05

@@ -17,7 +17,7 @@ import pytest
 
 from duckdb_routing_spark.routing.osm_build import (
     SMALL_BUILD_SEGMENTS,
-    build_cardinalities_df,
+    build_cardinalities_from_grid,
     build_mode_graph_df,
     build_mode_graph_pandas,
     build_tiles,
@@ -93,23 +93,27 @@ def test_pandas_oneway_and_zero_ms_semantics():
 def test_cardinalities_single_task_matches_distributed(spark):
     """The lazy single-task path reports the same cardinalities the
     distributed build derives (the q:route_tile_build contract)."""
-    seg_pdf = _seg_pdf(6, 6, island=False)
-    nodes_pdf = grid_nodes(6, 6, island=False)
-    row = build_cardinalities_df(spark, seg_pdf, nodes_pdf, "auto").first()
-    p_nodes, p_edges = build_mode_graph_pandas(seg_pdf, nodes_pdf, "auto")
+    df = build_cardinalities_from_grid(spark, 6, 6, "auto")
+    row = df.first()
+    p_nodes, p_edges = build_mode_graph_pandas(
+        _seg_pdf(6, 6, island=False), grid_nodes(6, 6, island=False), "auto"
+    )
     assert (row["n_nodes"], row["n_edges"]) == (len(p_nodes), len(p_edges))
     # plan shape: one task, no exchange anywhere
-    plan = build_cardinalities_df(spark, seg_pdf, nodes_pdf, "auto")._jdf.queryExecution().executedPlan().toString()
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
 
 
 def test_build_tiles_distributed_write_no_driver_collect(spark, tmp_path, monkeypatch):
     """Above SMALL_BUILD_SEGMENTS the artifact tables are written with
-    df.write.parquet — NEVER via a driver collect. Asserted by making
-    DataFrame.toPandas raise during the build: the graph must reach disk
-    anyway, load back, and route (the maxResultSize-can't-fit-one-collect
-    posture for the reference's 30 GB PBF -> 150 GB tile Europe build)."""
+    df.write.parquet — NEVER via a driver collect, and never read back
+    driver-side. Asserted by making DataFrame.toPandas and RoutingGraph.load
+    raise during the build: the graph must reach disk anyway, load back,
+    and route (the maxResultSize-can't-fit-one-collect posture for the
+    reference's 30 GB PBF -> 150 GB tile Europe build)."""
     from pyspark.sql import DataFrame as SparkDF
+
+    from duckdb_routing_spark.routing.graph import RoutingGraph
 
     ways = spark.createDataFrame(
         pd.DataFrame(
@@ -131,13 +135,18 @@ def test_build_tiles_distributed_write_no_driver_collect(spark, tmp_path, monkey
     def _no_collect(self, *a, **k):
         raise AssertionError("distributed build must not collect tables to the driver")
 
+    def _no_reload(*a, **k):
+        raise AssertionError("distributed build must not reload the graph on the driver")
+
     monkeypatch.setattr(SparkDF, "toPandas", _no_collect)
+    monkeypatch.setattr(RoutingGraph, "load", classmethod(_no_reload))
     build_tiles(spark, ways, osm_nodes, out, modes=("auto",))
     monkeypatch.undo()
 
-    # artifact is a parquet DIRECTORY readable by the normal load path
+    # artifact is a parquet DIRECTORY readable by the normal load path;
+    # the tables and valhalla.json are the whole artifact
     assert os.path.isdir(os.path.join(out, "nodes_auto.parquet"))
-    from duckdb_routing_spark.routing.graph import RoutingGraph
+    assert not os.path.exists(os.path.join(out, "_manifest.json"))
     from duckdb_routing_spark.routing import kernels
     from duckdb_routing_spark.testing import build_grid_graph
 
