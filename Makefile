@@ -15,7 +15,7 @@ test:
 	$(PY) -m pytest tests/ -q
 
 test-fast:
-	$(PY) -m pytest tests/test_speeds.py tests/test_geometry.py tests/test_graph_kernels.py tests/test_properties.py tests/test_frontier_kernel.py tests/test_zip_invalidation.py tests/test_tool_imports.py tests/test_argmin_kernel.py -q
+	$(PY) -m pytest tests/test_speeds.py tests/test_geometry.py tests/test_graph_kernels.py tests/test_properties.py tests/test_frontier_kernel.py tests/test_zip_invalidation.py tests/test_tool_imports.py tests/test_argmin_kernel.py tests/test_matching.py -q
 
 parity:
 	$(PY) -m pytest tests/test_oracle_parity.py -q

@@ -239,12 +239,15 @@ def merges_df(spark, merges: list[tuple[str, str]]) -> DataFrame:
     same A/B keeps clustering.centroids_df on createDataFrame (a k x dim
     double array literal PARSES in ~8 s — the literal trade inverts on
     numeric bulk). `when(true, _)` restores createDataFrame's nullable
-    schema so downstream schema hashes are unchanged."""
+    schema so downstream schema hashes are unchanged. Each token travels
+    as hex of its UTF-8 bytes, so no SQL string escaping applies and
+    quotes and backslashes round-trip whatever
+    spark.sql.parser.escapedStringLiterals says."""
     if not merges:
         return spark.createDataFrame([], "rank INT, left STRING, right STRING")
 
     def s(x: str) -> str:
-        return "'" + x.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return f"decode(unhex('{x.encode().hex()}'), 'UTF-8')"
 
     rows = ",".join(
         f"struct({i}, {s(a)}, {s(b)})" for i, (a, b) in enumerate(merges)

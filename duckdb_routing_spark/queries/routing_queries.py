@@ -146,7 +146,7 @@ ORDER BY from_idx, to_idx
 """
 
 
-@register("route_matrix", oracle=MATRIX_ORACLE, headline=True, doc="N x M travel-time matrix (per-origin multi-target Dijkstra)")
+@register("route_matrix", oracle=MATRIX_ORACLE, headline=True, doc="N x M travel-time matrix (one frontier SSSP per origin)")
 def route_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     eng = _engine(spark)
     src = [_node_latlon(s) for s in _MATRIX_SOURCES]

@@ -99,6 +99,33 @@ def _resolve(broadcasts: _EngineBroadcasts, mode: str) -> RoutingGraph:
     return cached[1]
 
 
+def _point_action(g: RoutingGraph, action: str, locs: list) -> str | None:
+    """JSON answer of a per-row point action (locate, route) on graph g,
+    shared by the travel_time_request UDF and RoutingEngine.request; None
+    for any other action."""
+    if action == "locate":
+        out = []
+        for p in locs:
+            idx = g.nearest_main_node(float(p["lon"]), float(p["lat"]))
+            out.append(None if idx < 0 else {"lat": float(g.node_lat[idx]), "lon": float(g.node_lon[idx])})
+        return json.dumps({"locations": out})
+    if action == "route":
+        if len(locs) < 2:
+            return json.dumps({"error": "route requires 2 locations"})
+        s = g.nearest_main_node(float(locs[0]["lon"]), float(locs[0]["lat"]))
+        d = g.nearest_main_node(float(locs[1]["lon"]), float(locs[1]["lat"]))
+        if s < 0 or d < 0:
+            return json.dumps({"error": "no road near location"})
+        w, path = kernels.p2p_path(g, s, d)
+        if w < 0:
+            return json.dumps({"error": "no route found"})
+        dist_m = kernels.path_distance_m(g, path)
+        return json.dumps(
+            {"trip": {"summary": {"length": dist_m / 1000.0, "time": w / 1000.0}, "shape_points": len(path)}}
+        )
+    return None
+
+
 ROUTE_STRUCT = T.StructType(
     [
         T.StructField("distance_km", T.DoubleType()),
@@ -540,38 +567,17 @@ class RoutingEngine:
             locate, status). Table-shaped actions (matrix, isochrone,
             optimized_route) need the engine object — the driver-side
             engine.request() serves those."""
-            import json as _json
-
             try:
-                req = _json.loads(request_json) if request_json else {}
-            except _json.JSONDecodeError as e:
-                return _json.dumps({"error": f"Invalid JSON: {e}"})
-            costing = req.get("costing", "auto")
-            locs = req.get("locations", [])
+                req = json.loads(request_json) if request_json else {}
+            except json.JSONDecodeError as e:
+                return json.dumps({"error": f"Invalid JSON: {e}"})
             if action == "status":
-                return _json.dumps({"loaded": bool(broadcasts), "modes": sorted(broadcasts)})
-            g = _resolve(broadcasts, costing)
-            if action == "locate":
-                out = []
-                for p in locs:
-                    idx = g.nearest_main_node(float(p["lon"]), float(p["lat"]))
-                    out.append(None if idx < 0 else {"lat": float(g.node_lat[idx]), "lon": float(g.node_lon[idx])})
-                return _json.dumps({"locations": out})
-            if action == "route":
-                if len(locs) < 2:
-                    return _json.dumps({"error": "route requires 2 locations"})
-                s = g.nearest_main_node(float(locs[0]["lon"]), float(locs[0]["lat"]))
-                d = g.nearest_main_node(float(locs[1]["lon"]), float(locs[1]["lat"]))
-                if s < 0 or d < 0:
-                    return _json.dumps({"error": "no road near location"})
-                w, path = kernels.p2p_path(g, s, d)
-                if w < 0:
-                    return _json.dumps({"error": "no route found"})
-                dist_m = kernels.path_distance_m(g, path)
-                return _json.dumps(
-                    {"trip": {"summary": {"length": dist_m / 1000.0, "time": w / 1000.0}, "shape_points": len(path)}}
-                )
-            return _json.dumps({"error": f"Unsupported per-row action: {action}; use engine.request()"})
+                return json.dumps({"loaded": bool(broadcasts), "modes": sorted(broadcasts)})
+            g = _resolve(broadcasts, req.get("costing", "auto"))
+            out = _point_action(g, action, req.get("locations", []))
+            if out is not None:
+                return out
+            return json.dumps({"error": f"Unsupported per-row action: {action}; use engine.request()"})
 
         @F.udf(T.BooleanType())
         def travel_time_is_loaded(costing):
@@ -709,8 +715,9 @@ class RoutingEngine:
 
     def isochrones(self, origins: DataFrame, max_seconds: float, costing: str = "auto") -> DataFrame:
         """Batch isochrones: origins(origin_id, lat, lon) -> (origin_id, lat,
-        lon, seconds). The scale path — one Dijkstra per origin, origins
-        spread across executors."""
+        lon, seconds). The scale path — one frontier SSSP per origin,
+        capped at max_seconds (kernels.dijkstra_isochrone), origins spread
+        across executors."""
         broadcasts = self._broadcasts
         max_ms = int(max_seconds * 1000.0)
         schema = T.StructType([T.StructField("origin_id", T.LongType())] + list(ISOCHRONE_SCHEMA))
@@ -834,9 +841,9 @@ class RoutingEngine:
 
     def optimized_route(self, lats, lons, costing: str = "auto") -> dict:
         """TSP-style waypoint ordering (the reference's optimized_route
-        action): N x N duration matrix (one multi-target Dijkstra per
-        origin), nearest-neighbor construction from location 0, then 2-opt
-        until no improving swap. Returns {order, duration_s}."""
+        action): N x N duration matrix (one frontier SSSP per origin,
+        capped at its farthest waypoint), nearest-neighbor construction
+        from location 0, then 2-opt until no improving swap. Returns {order, duration_s}."""
         g = self._local.get(costing if costing in self._local else "auto")
         if g is None:
             raise RuntimeError("Travel time extension not loaded")
@@ -899,31 +906,9 @@ class RoutingEngine:
             return json.dumps(
                 {"loaded": True, "modes": sorted(self._local), "nodes": {m: x.num_nodes for m, x in self._local.items()}}
             )
-        if action == "locate":
-            out = []
-            for p in locs:
-                idx = g.nearest_main_node(float(p["lon"]), float(p["lat"]))
-                out.append(None if idx < 0 else {"lat": float(g.node_lat[idx]), "lon": float(g.node_lon[idx])})
-            return json.dumps({"locations": out})
-        if action == "route":
-            if len(locs) < 2:
-                return json.dumps({"error": "route requires 2 locations"})
-            s = g.nearest_main_node(float(locs[0]["lon"]), float(locs[0]["lat"]))
-            d = g.nearest_main_node(float(locs[1]["lon"]), float(locs[1]["lat"]))
-            if s < 0 or d < 0:
-                return json.dumps({"error": "no road near location"})
-            w, path = kernels.p2p_path(g, s, d)
-            if w < 0:
-                return json.dumps({"error": "no route found"})
-            dist_m = kernels.path_distance_m(g, path)
-            return json.dumps(
-                {
-                    "trip": {
-                        "summary": {"length": dist_m / 1000.0, "time": w / 1000.0},
-                        "shape_points": len(path),
-                    }
-                }
-            )
+        out = _point_action(g, action, locs)
+        if out is not None:
+            return out
         if action in ("matrix", "sources_to_targets"):
             sources = req.get("sources", locs)
             targets = req.get("targets", locs)

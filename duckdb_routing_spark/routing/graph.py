@@ -19,7 +19,7 @@ Euclidean distance in (lon, lat) degree space over main-road nodes only
 The only routing state that travels with the graph is an optional prepared
 contraction-hierarchy index (``_ch``): the ``ch_<mode>.npz`` artifact
 sidecar and the ``_ch_arrays`` payload field. Nothing else is derived per
-executor beyond the reverse CSR that kernels.p2p_path caches on first use;
+executor beyond the reverse CSR that kernels.path_to caches on first use;
 an ``alt_<mode>.npz`` sidecar from older builds is ignored.
 """
 

@@ -7,15 +7,14 @@ Dijkstra (the heap oracles live in duckdb_routing_spark.testing). Weights are
 integer milliseconds, durations are ms/1000.0 (lib.rs:421-427).
 
 One primitive does the search: sssp_frontier_ms, a numpy-vectorized frontier
-SSSP with an optional cost cap. It runs three ways:
+SSSP with an optional cost cap. It runs two ways:
 
-  - no cap: batch travel times, matrix origins (sssp_multi_target) and
-    optimized routes (map matching keeps the heap dijkstra_multi_target,
-    which stops once its few candidate targets are settled);
   - a fixed cap: dijkstra_isochrone, the reference's cutoff search;
-  - a cap that shrinks to dst's label: p2p_path on a graph without a
-    prepared CH index. Its path is shortest_path_tree's tight-edge rule
-    walked back from dst, so p2p and matrix paths break ties alike.
+  - a cap that shrinks to the farthest target's label once every target
+    has one: p2p_path on a graph without a prepared CH index (one target),
+    batch travel times, matrix origins, optimized routes and map matching
+    (sssp_multi_target). Paths follow shortest_path_tree's tight-edge
+    rule, so p2p, matrix and map-matching paths break ties alike.
 
 Single-pair routes (p2p_path) and matrices (matrix_rows) follow one rule: a
 graph carrying a prepared CH index (``g._ch``, routing/ch.py) routes through
@@ -35,8 +34,6 @@ the init figure includes idle wait between tasks.
 
 from __future__ import annotations
 
-import heapq
-
 import numpy as np
 
 from duckdb_routing_spark.routing.geometry import haversine_m
@@ -48,7 +45,7 @@ NOT_LOADED = -2.0
 
 def _reverse_csr(g: RoutingGraph):
     """Reverse-edge CSR (indptr, sources, weights), built once and cached on
-    the graph object: p2p_path walks its path back from dst over incoming
+    the graph object: path_to walks a path back from dst over incoming
     edges. Within each target the edges keep ascending forward edge index,
     so the first tight one is the one shortest_path_tree picks."""
     cached = getattr(g, "_rev_csr", None)
@@ -64,40 +61,6 @@ def _reverse_csr(g: RoutingGraph):
     rev = (rindptr, src[order], g.weights_ms[order])
     g._rev_csr = rev
     return rev
-
-
-def dijkstra_multi_target(g: RoutingGraph, src: int, targets: np.ndarray):
-    """Single-source Dijkstra serving many targets at once (the matrix
-    operator's inner kernel — one Dijkstra amortizes all M destinations,
-    better than M point queries). Returns (weights_ms float64[M],
-    predecessor dict) with -1.0 for unreachable targets."""
-    indptr, indices, weights = g.indptr, g.indices, g.weights_ms
-    target_set = set(int(t) for t in targets)
-    remaining = len(target_set)
-    dist = {src: 0}
-    prev: dict[int, int] = {}
-    settled = set()
-    heap = [(0, src)]
-    while heap and remaining > 0:
-        d, u = heapq.heappop(heap)
-        if u in settled:
-            continue
-        settled.add(u)
-        if u in target_set:
-            remaining -= 1
-        for ei in range(indptr[u], indptr[u + 1]):
-            v = indices[ei]
-            nd = d + weights[ei]
-            if nd < dist.get(v, np.inf):
-                dist[v] = nd
-                prev[v] = u
-                heapq.heappush(heap, (nd, v))
-    out = np.full(len(targets), NO_ROUTE, dtype=np.float64)
-    for i, t in enumerate(targets):
-        t = int(t)
-        if t in dist:
-            out[i] = float(dist[t])
-    return out, prev
 
 
 def dijkstra_isochrone(g: RoutingGraph, src: int, max_cost_ms: int):
@@ -133,7 +96,7 @@ def path_distance_m(g: RoutingGraph, path: list[int]) -> float:
 _INF = np.iinfo(np.int64).max
 
 
-def sssp_frontier_ms(g: RoutingGraph, src: int, cap: int | None = None, dst: int = -1) -> np.ndarray:
+def sssp_frontier_ms(g: RoutingGraph, src: int, cap: int | None = None, targets=None) -> np.ndarray:
     """Exact single-source shortest paths via numpy-vectorized frontier
     label-correcting (Bellman-Ford restricted to an active frontier).
 
@@ -147,15 +110,22 @@ def sssp_frontier_ms(g: RoutingGraph, src: int, cap: int | None = None, dst: int
     `cap` skips every relaxation whose new label exceeds it: the search
     stays inside the cap's ball, and every node whose true distance is
     <= cap still gets its exact label (its shortest path only passes
-    through nodes no farther than itself). A `dst` >= 0 shrinks the cap to
-    dst's current label after each round; that label never drops below
-    the true distance, so dst and every node closer than it end exact."""
+    through nodes no farther than itself). Once every node in `targets`
+    has a label, each round shrinks the cap to the largest target label;
+    labels never drop below the true distance, so every target and every
+    node closer than the farthest one end exact."""
     indptr, indices, weights = g.indptr, g.indices, g.weights_ms
     n = g.num_nodes
     dist = np.full(n, _INF, dtype=np.int64)
     dist[src] = 0
     frontier = np.asarray([src], dtype=np.int64)
+    if targets is not None:
+        targets = np.asarray(targets, dtype=np.int64)
     while frontier.size:
+        if targets is not None:
+            far = int(dist[targets].max(initial=0))
+            if far < _INF:
+                cap = far if cap is None else min(cap, far)
         starts = indptr[frontier]
         counts = indptr[frontier + 1] - starts
         total = int(counts.sum())
@@ -172,8 +142,6 @@ def sssp_frontier_ms(g: RoutingGraph, src: int, cap: int | None = None, dst: int
         if tgt.size == 0:
             break
         np.minimum.at(dist, tgt, nd)
-        if dst >= 0 and dist[dst] < _INF:
-            cap = int(dist[dst]) if cap is None else min(cap, int(dist[dst]))
         # nodes whose label actually improved re-enter the frontier
         frontier = np.unique(tgt[nd <= dist[tgt]])
     return dist
@@ -235,18 +203,6 @@ def shortest_path_tree(g: RoutingGraph, dist: np.ndarray, src: int) -> np.ndarra
     return pred
 
 
-def path_from_pred_dict(prev: dict, src: int, dst: int) -> list[int] | None:
-    """Walk a predecessor DICT (dijkstra_multi_target's) from dst to src."""
-    path = [int(dst)]
-    while path[-1] != src:
-        p = prev.get(path[-1])
-        if p is None:
-            return None
-        path.append(int(p))
-    path.reverse()
-    return path
-
-
 def path_from_pred(pred: np.ndarray, src: int, dst: int) -> list[int] | None:
     """Walk a predecessor array from dst back to src; None if disconnected."""
     path = [int(dst)]
@@ -259,18 +215,45 @@ def path_from_pred(pred: np.ndarray, src: int, dst: int) -> list[int] | None:
     return path
 
 
-def sssp_multi_target(g: RoutingGraph, src: int, targets: np.ndarray):
-    """Vectorized replacement for dijkstra_multi_target on the matrix path:
-    one frontier SSSP + tight-edge tree serves every destination. Returns
-    (weights_ms float64[M] with -1.0 unreachable, pred int64[n])."""
-    dist = sssp_frontier_ms(g, src)
-    pred = shortest_path_tree(g, dist, src)
+def path_to(g: RoutingGraph, dist: np.ndarray, src: int, dst: int) -> list[int] | None:
+    """The src -> dst path of shortest_path_tree, or None if dst has no
+    label, walked back from dst over the reverse CSR without building the
+    tree: each step takes the first positive tight edge into the node. A
+    node entered over zero-weight tight edges only falls back to the tree's
+    hop rule. `dist` must be exact at dst, as any sssp_frontier_ms whose
+    targets include dst leaves it."""
+    dst = int(dst)
+    if dist[dst] == _INF:
+        return None
+    rindptr, rsrc, rw = _reverse_csr(g)
+    path = [dst]
+    while path[-1] != src:
+        v = path[-1]
+        dv = dist[v]
+        for ei in range(rindptr[v], rindptr[v + 1]):
+            w = rw[ei]
+            if w > 0 and dist[rsrc[ei]] == dv - w:
+                path.append(int(rsrc[ei]))
+                break
+        else:
+            return path_from_pred(shortest_path_tree(g, dist, src), src, dst)
+    path.reverse()
+    return path
+
+
+def sssp_multi_target(g: RoutingGraph, src: int, targets):
+    """One frontier SSSP serving every target, its cap shrinking to the
+    farthest target's label (negative target ids, unsnapped points, are
+    skipped). Returns (weights_ms float64[M] with -1.0 unreachable, dist
+    int64[n]); dist is exact at every target, so path_to and
+    shortest_path_tree give the full search's paths to them."""
+    targets = np.asarray(targets, dtype=np.int64)
+    ok = targets >= 0
+    dist = sssp_frontier_ms(g, src, targets=targets[ok])
     out = np.full(len(targets), NO_ROUTE, dtype=np.float64)
-    for i, t in enumerate(targets):
-        t = int(t)
-        if t >= 0 and dist[t] != _INF:
-            out[i] = float(dist[t])
-    return out, pred
+    w = dist[targets[ok]]
+    out[ok] = np.where(w == _INF, NO_ROUTE, w.astype(np.float64))
+    return out, dist
 
 
 # ---------------------------------------------------------------------------
@@ -284,9 +267,10 @@ def batch_travel_time_s(g: RoutingGraph, lat1, lon1, lat2, lon2) -> np.ndarray:
     matching src/travel_time_extension.cpp:512-514).
 
     Batch shape: rows are grouped by snapped SOURCE node and each group runs
-    ONE frontier SSSP (sssp_frontier_ms) — an OD table with n_src distinct
-    origins per Arrow batch costs n_src searches, not n_rows (measured 6x
-    on a 40k-node graph with 5k pairs / 715 origins). Folding k origins
+    ONE frontier SSSP (sssp_multi_target, capped at the group's farthest
+    destination) — an OD table with n_src distinct origins per Arrow batch
+    costs n_src searches, not n_rows (measured 6x on a 40k-node graph with
+    5k pairs / 715 origins). Folding k origins
     into one shared frontier loop was measured 1.6-2.1x slower than k
     single-source calls on a 96k-node road-like grid (k = 1-8) and no
     faster on the 40k-node batch grid (1.5x slower at k = 1, within 3% at
@@ -306,11 +290,9 @@ def batch_travel_time_s(g: RoutingGraph, lat1, lon1, lat2, lon2) -> np.ndarray:
     dst[valid] = g.nearest_main_nodes(lon2[valid], lat2[valid])
     ok = valid & (src >= 0) & (dst >= 0)
     for s in np.unique(src[ok]):
-        dist = sssp_frontier_ms(g, int(s))
         m = ok & (src == s)
-        w = dist[dst[m]].astype(np.float64)
-        w[w == float(_INF)] = np.nan
-        out[m] = w / 1000.0
+        w, _ = sssp_multi_target(g, int(s), dst[m])
+        out[m] = np.where(w < 0, np.nan, w / 1000.0)
     return out
 
 
@@ -327,34 +309,18 @@ def p2p_path(g: RoutingGraph, src: int, dst: int):
     """Single-pair (weight_ms, path) or (NO_ROUTE, None): contraction
     hierarchies when the graph carries a prepared index (the reference's
     own accelerator), otherwise one sssp_frontier_ms whose cap shrinks to
-    dst's label. The path is shortest_path_tree's, walked back from dst
-    over the reverse CSR, so p2p and matrix paths break ties alike. Both
-    branches are exact and keep no per-query state."""
+    dst's label and path_to's walk back from dst, so p2p and matrix paths
+    break ties alike. Both branches are exact and keep no per-query
+    state."""
     if _prepared_ch(g) is not None:
         from duckdb_routing_spark.routing import ch
 
         return ch.ch_p2p_path(g, src, dst)
     src, dst = int(src), int(dst)
-    if src == dst:
-        return 0.0, [src]
-    dist = sssp_frontier_ms(g, src, dst=dst)
-    if dist[dst] == _INF:
+    dist = sssp_frontier_ms(g, src, targets=(dst,))
+    path = path_to(g, dist, src, dst)
+    if path is None:
         return NO_ROUTE, None
-    rindptr, rsrc, rw = _reverse_csr(g)
-    path = [dst]
-    while path[-1] != src:
-        v = path[-1]
-        dv = dist[v]
-        for ei in range(rindptr[v], rindptr[v + 1]):
-            w = rw[ei]
-            if w > 0 and dist[rsrc[ei]] == dv - w:
-                path.append(int(rsrc[ei]))
-                break
-        else:
-            # v is entered over zero-weight tight edges only: the tree's
-            # hop rule picks among them
-            return float(dist[dst]), path_from_pred(shortest_path_tree(g, dist, src), src, dst)
-    path.reverse()
     return float(dist[dst]), path
 
 
@@ -364,7 +330,8 @@ def matrix_rows(g: RoutingGraph, src_nodes, tgt_nodes, from_idx=None) -> list[tu
 
     With a prepared CH index this is the bucket many-to-many
     (ch.ch_many_to_many: N+M upward-cone searches); otherwise one frontier
-    SSSP per origin serves every target (sssp_multi_target). Unsnapped
+    SSSP per origin serves every target (sssp_multi_target) and one
+    shortest_path_tree per origin gives their paths. Unsnapped
     (negative) ids and unreachable cells give None cells; distance is
     hop-haversine over the time-optimal path (lib.rs:779-795). Durations
     are exact on both paths; distances may differ by meters between them on
@@ -394,7 +361,8 @@ def matrix_rows(g: RoutingGraph, src_nodes, tgt_nodes, from_idx=None) -> list[tu
         if s < 0:
             rows.extend((i, j, None, None) for j in range(len(tgt_nodes)))
             continue
-        w_ms, pred = sssp_multi_target(g, s, tgt_nodes)
+        w_ms, dist = sssp_multi_target(g, s, tgt_nodes)
+        pred = shortest_path_tree(g, dist, s)
         for j, t in enumerate(tgt_nodes):
             if t < 0 or w_ms[j] < 0:
                 rows.append((i, j, None, None))

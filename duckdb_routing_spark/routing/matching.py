@@ -14,13 +14,14 @@ the graph's spatial hash:
   - decode:     Viterbi over the trellis, deterministic tie-break toward
                 the lower candidate index.
 
-Transition route lengths come from one time-shortest multi-target Dijkstra
-per candidate per step (k searches per trace point, early-exit on the next
-point's candidate set) with path length summed by haversine over the path
-nodes — the same distance semantics as the engine's routes
-(rust/src/lib.rs:779-795). Runs driver-side inside engine.request(): trace
-shapes are service-bounded (tens to hundreds of points), not a data-scale
-pipeline.
+Transition route lengths come from one time-shortest frontier SSSP per live
+candidate per step (kernels.sssp_multi_target: at most k searches per trace
+point, each capped at the farthest of the next point's candidates) and the
+tight-edge path to each candidate (kernels.path_to), its length summed by
+haversine over the path nodes — the same paths and distance semantics as
+the engine's routes (rust/src/lib.rs:779-795). Runs driver-side inside
+engine.request(): trace shapes are service-bounded (tens to hundreds of
+points), not a data-scale pipeline.
 """
 
 from __future__ import annotations
@@ -77,14 +78,11 @@ def hmm_match(
         for i, s in enumerate(prev_nodes):
             if not np.isfinite(score[i]):
                 continue
-            w, pred = kernels.dijkstra_multi_target(g, int(s), cur_nodes)
+            w, dist = kernels.sssp_multi_target(g, int(s), cur_nodes)
             for j, t_node in enumerate(cur_nodes):
-                if int(s) == int(t_node):
-                    trans[i, j] = -gc_m / beta_m
-                    continue
                 if w[j] < 0:
                     continue
-                path = kernels.path_from_pred_dict(pred, int(s), int(t_node))
+                path = kernels.path_to(g, dist, int(s), int(t_node))
                 route_m = kernels.path_distance_m(g, path)
                 trans[i, j] = -abs(route_m - gc_m) / beta_m
         total = score[:, None] + trans + emis[t][None, :]

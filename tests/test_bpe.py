@@ -178,6 +178,21 @@ def test_merges_df_roundtrip(spark, merges):
     assert back == merges
 
 
+@pytest.mark.parametrize("escaped", ["false", "true"])
+def test_merges_df_quote_and_backslash_tokens_under_either_literal_mode(spark, escaped):
+    merges = [("it", "'s"), ("a\\", "b"), ("x", "y"), ("\\'", "\"\\n")]
+    key = "spark.sql.parser.escapedStringLiterals"
+    before = spark.conf.get(key)
+    spark.conf.set(key, escaped)
+    try:
+        df = bpe.merges_df(spark, merges)
+        back = [(r.left, r.right) for r in df.orderBy("rank").collect()]
+    finally:
+        spark.conf.set(key, before)
+    assert back == merges
+    assert [f.nullable for f in df.schema.fields] == [True, True, True]
+
+
 # --- fuzz (pure-Python kernel, no Spark: runs hypothesis' full budget) ------
 
 _words = st.text(

@@ -1,8 +1,9 @@
 """Property tests for the capped frontier SSSP (no Spark): p2p_path on a
-graph without a CH index and dijkstra_isochrone both run
-kernels.sssp_frontier_ms with a cost cap. Random digraphs carry zero-weight
-edges (and zero-weight cycles), parallel edges, unreachable targets and
-src == dst; caps include 0."""
+graph without a CH index, sssp_multi_target and dijkstra_isochrone all run
+kernels.sssp_frontier_ms with a cost cap, fixed or shrinking to the
+farthest target. Random digraphs carry zero-weight edges (and zero-weight
+cycles), parallel edges, unreachable targets and src == dst; caps include
+0."""
 
 import numpy as np
 from hypothesis import given, settings
@@ -51,6 +52,30 @@ def test_capped_p2p_equals_heap_dijkstra_and_the_tree_path(case):
                 assert path is None
             elif s == t:
                 assert path == [s]
+            else:
+                assert path == kernels.path_from_pred(pred, s, t)
+
+
+@settings(max_examples=60, deadline=None)
+@given(graphs)
+def test_targets_cap_exact_at_targets_with_tree_paths(case):
+    """With targets=T every target's label is exact, no label drops below
+    the true distance, and path_to on the capped labels is the full
+    search's tree path for every reachable target."""
+    seed, n = case
+    g = _graph(seed, n)
+    rng = np.random.default_rng(seed)
+    for s in range(n):
+        full = kernels.sssp_frontier_ms(g, s)
+        pred = kernels.shortest_path_tree(g, full, s)
+        targets = rng.integers(0, n, int(rng.integers(1, 6)))
+        capped = kernels.sssp_frontier_ms(g, s, targets=targets)
+        assert np.array_equal(capped[targets], full[targets])
+        assert (capped >= full).all()
+        for t in targets.tolist():
+            path = kernels.path_to(g, capped, s, t)
+            if full[t] == kernels._INF:
+                assert path is None
             else:
                 assert path == kernels.path_from_pred(pred, s, t)
 

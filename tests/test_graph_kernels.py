@@ -105,12 +105,15 @@ def test_p2p_path_reconstruction(g):
 
 
 def test_multi_target_matches_p2p(g):
+    src = node(0, 0)
     targets = np.array([node(0, 5), node(5, 0), node(9, 9), 100])
-    w, prev = kernels.dijkstra_multi_target(g, node(0, 0), targets)
+    w, dist = kernels.sssp_multi_target(g, src, targets)
     for t, wt in zip(targets, w):
-        want = dijkstra_p2p(g, node(0, 0), int(t))
-        assert wt == pytest.approx(want)
+        assert wt == dijkstra_p2p(g, src, int(t))
     assert w[3] == kernels.NO_ROUTE
+    # the targets-capped labels give every reachable target p2p_path's path
+    for t in targets[:3]:
+        assert kernels.path_to(g, dist, src, int(t)) == kernels.p2p_path(g, src, int(t))[1]
 
 
 def test_isochrone_monotone_and_cutoff(g):
@@ -171,9 +174,10 @@ def test_frontier_sssp_matches_dijkstra_all_modes():
     for mode in ("auto", "bicycle", "pedestrian"):
         gm = build_grid_graph(mode)
         dist = kernels.sssp_frontier_ms(gm, 11)
-        w, _ = kernels.dijkstra_multi_target(gm, 11, np.arange(gm.num_nodes, dtype=np.int64))
-        want = np.where(w < 0, np.float64(np.iinfo(np.int64).max), w)
-        assert (dist.astype(np.float64) == want).all()
+        w, _ = kernels.sssp_multi_target(gm, 11, np.arange(gm.num_nodes, dtype=np.int64))
+        want = [dijkstra_p2p(gm, 11, t) for t in range(gm.num_nodes)]
+        assert w.tolist() == want
+        assert np.where(dist == kernels._INF, kernels.NO_ROUTE, dist).tolist() == want
 
 
 def test_batch_snap_matches_scalar(g):

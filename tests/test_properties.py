@@ -114,7 +114,7 @@ def test_dijkstra_matches_floyd_warshall(seed, n):
                 assert got == want
     # multi-target agrees too
     targets = np.arange(n)
-    w, _ = kernels.dijkstra_multi_target(g, 0, targets)
+    w, _ = kernels.sssp_multi_target(g, 0, targets)
     for t in range(n):
         want = dist[0, t]
         assert (w[t] == kernels.NO_ROUTE and math.isinf(want)) or w[t] == want

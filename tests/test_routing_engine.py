@@ -156,8 +156,8 @@ def test_request_dispatcher(spark, engine):
 
 
 def test_trace_and_height_actions(spark, engine):
-    """trace_route/trace_attributes: nearest-node map matching + chained
-    shortest paths; height: gated on a loaded elevation table."""
+    """trace_route/trace_attributes: HMM map matching + chained shortest
+    paths; height: gated on a loaded elevation table."""
     shape = [
         {"lat": pt(0, 0)[0], "lon": pt(0, 0)[1]},
         {"lat": pt(0, 5)[0], "lon": pt(0, 5)[1]},

@@ -232,6 +232,10 @@ def test_request_sql_udf(spark, engine):
     assert json.loads(row.s)["loaded"] is True
     assert "engine.request" in json.loads(row.m)["error"]
     assert "Invalid JSON" in json.loads(row.bad)["error"]
+    # the per-row UDF and the driver-side dispatcher answer point actions alike
+    for action in ("route", "locate"):
+        udf = spark.sql(f"SELECT travel_time_request('{action}', '{req}') AS r").first().r
+        assert udf == engine.request(action, req)
 
 
 def test_concave_contours_contain_point_cloud(spark, engine):
