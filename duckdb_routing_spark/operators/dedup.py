@@ -11,10 +11,12 @@ Scale design (the reason each variant exists):
   - SimHash: constant-size bit signature; hamming-radius lookups.
 
 Everything below is pure Catalyst expressions (split / transform / explode /
-groupBy / join) — no Python UDFs, no driver-side loops. MinHash permutations
-are Carter-Wegman integer hashes over one md5 per shingle (bands_from_hashes)
-— stable across engines, which makes the whole pipeline
-DuckDB-oracle-checkable.
+groupBy / join) — no Python UDFs, no driver-side loops — except
+near_dup_pairs_single_task, the one-task twin of near_dup_pairs for corpora
+small enough that job and plan overhead dominate (ARCHITECTURE.md §2).
+MinHash permutations are Carter-Wegman integer hashes over one md5 per
+shingle (bands_from_hashes) — stable across engines, which makes the whole
+pipeline DuckDB-oracle-checkable.
 """
 
 from __future__ import annotations
@@ -24,6 +26,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from duckdb_routing_spark.operators.common import spread_small_scan
 
@@ -388,7 +391,11 @@ def near_dup_pairs(
     base and candidate set are persisted: each feeds two consumers, and
     without materialization Spark re-executes the full LSH DAG per consumer
     (~6x wall-clock at sf0.1; at cluster scale these would be written to a
-    staging table between stages)."""
+    staging table between stages).
+
+    For a corpus of a few MB, :func:`near_dup_pairs_single_task` computes
+    the same rows in one Python task; the `dedup_near_dups` registry query
+    picks between the two by input bytes."""
     base = shingle_hash_base(docs, id_col, text_col, k, distinct=False).persist()
     cands = lsh_candidates_from_hashes(
         base, n_hashes, band_size, max_bucket=max_bucket
@@ -396,6 +403,132 @@ def near_dup_pairs(
     # broadcast-vs-shuffle for the Jaccard stage is auto-decided inside
     # jaccard_from_hashes by measuring the candidate slice itself
     return jaccard_from_hashes(base, cands).filter(F.col("jaccard") >= threshold)
+
+
+def near_dup_pairs_single_task(
+    docs: DataFrame,
+    threshold: float = 0.8,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k: int = 3,
+    n_hashes: int = 12,
+    band_size: int = 3,
+    max_bucket: int | None = 1024,
+) -> DataFrame:
+    """:func:`near_dup_pairs` for a small corpus, in ONE mapInPandas task:
+    the same (doc_a, doc_b, jaccard) rows, sorted by (doc_a, doc_b), with
+    the same schema and nullability.
+
+    The distributed pipeline spends about a second on plan building,
+    persists and its eager sizing count before any stage runs, which is
+    most of a request over a thousand documents. Here one task reads the
+    corpus and runs every step of the pipeline in numpy and plain Python:
+      - tokens are `text.split(" ")`, the same as Spark's `split(text, ' ')`
+        (empty tokens kept); a text with fewer than k tokens has no shingles;
+      - (h1, h2) are the two 60-bit halves of each shingle's md5 (the top
+        60 bits of each 8-byte half are `int(hex[0:15], 16)` and
+        `int(hex[16:31], 16)`, shingle_hash_base's conv(substring(...)));
+      - the Carter-Wegman mins come from np.minimum.reduceat over each
+        document's shingle run; a duplicated doc id pools its rows, as
+        the distributed groupBy("doc_id") does;
+      - documents bucket by (band, band signature) — a tuple key, equal
+        exactly when the '|'-joined band_sig strings are — and each
+        bucket's sorted members pair all-pairs, or star-pair above
+        `max_bucket` (see :func:`_pairs_in_buckets`);
+      - Jaccard is float(n_inter) / float(n_a + n_b - n_inter) over the
+        distinct (h1, h2) sets, the arithmetic of jaccard_from_hashes.
+    Rows with a NULL id or text are dropped before the Python stage: they
+    never produce a pair on the distributed path either.
+
+    The whole corpus and its shingle hashes live in one Python worker, so
+    this is for inputs of a few MB (the registry query dispatches on
+    bytes, ARCHITECTURE.md §2); anything larger belongs on
+    :func:`near_dup_pairs`."""
+    id_type = docs.schema[id_col].dataType
+    # the distributed plan's nullability: doc_a merges the star hub
+    # (element_at, nullable) with all-pairs members, doc_b is always a
+    # collect_set member, and a Divide is nullable
+    schema = T.StructType([
+        T.StructField("doc_a", id_type, True),
+        T.StructField("doc_b", id_type, False),
+        T.StructField("jaccard", T.DoubleType(), True),
+    ])
+    cap = (1 << 31) - 1 if max_bucket is None else max_bucket
+
+    def kernel(batches):
+        ids, texts = [], []
+        for pdf in batches:
+            ids.extend(pdf["doc_id"].tolist())
+            texts.extend(pdf["text"].tolist())
+        yield _near_dups_local(ids, texts, threshold, k, n_hashes, band_size, cap)
+
+    idc, tc = F.col(id_col), F.col(text_col)
+    return (
+        docs.filter(idc.isNotNull() & tc.isNotNull())
+        .select(idc.alias("doc_id"), tc.alias("text"))
+        .coalesce(1)
+        .mapInPandas(kernel, schema)
+    )
+
+
+def _near_dups_local(ids, texts, threshold, k, n_hashes, band_size, max_bucket):
+    """The single-task near-dup pipeline over in-memory (id, text) lists;
+    returns the sorted (doc_a, doc_b, jaccard) frame."""
+    import hashlib
+    from itertools import combinations
+
+    import numpy as np
+    import pandas as pd
+
+    shingled: dict = {}
+    for doc_id, text in zip(ids, texts):
+        ws = text.split(" ")
+        if len(ws) >= k:
+            shingled.setdefault(doc_id, []).extend(
+                " ".join(ws[j:j + k]) for j in range(len(ws) - k + 1)
+            )
+    doc_ids = sorted(shingled)
+    counts = np.array([len(shingled[d]) for d in doc_ids], dtype=np.int64)
+    offsets = np.concatenate(([0], np.cumsum(counts)))
+    digests = b"".join(hashlib.md5(s.encode()).digest() for d in doc_ids for s in shingled[d])
+    halves = (np.frombuffer(digests, dtype=">u8").reshape(-1, 2) >> 4).astype(np.int64)
+    h1, h2 = halves[:, 0], halves[:, 1]
+
+    pairs: set = set()
+    if doc_ids:
+        p = MH_PRIME
+        a, b = h1 % p, h2 % p
+        mins = np.stack(
+            [np.minimum.reduceat((a + i * b) % p, offsets[:-1]) for i in range(n_hashes)],
+            axis=1,
+        ).tolist()
+        buckets: dict = {}
+        for d, sig in zip(doc_ids, mins):  # doc_ids ascending: members stay sorted
+            for lo in range(0, n_hashes, band_size):
+                buckets.setdefault((lo, tuple(sig[lo:lo + band_size])), []).append(d)
+        for ds in buckets.values():
+            if len(ds) > max_bucket:
+                pairs.update((ds[0], y) for y in ds[1:])
+            elif len(ds) > 1:
+                pairs.update(combinations(ds, 2))
+
+    row_of = {d: i for i, d in enumerate(doc_ids)}
+    sets: dict = {}
+
+    def hash_set(d):
+        if d not in sets:
+            lo, hi = offsets[row_of[d]], offsets[row_of[d] + 1]
+            sets[d] = set(zip(h1[lo:hi].tolist(), h2[lo:hi].tolist()))
+        return sets[d]
+
+    rows = []
+    for da, db in sorted(pairs):
+        sa, sb = hash_set(da), hash_set(db)
+        n_inter = len(sa & sb)
+        jac = float(n_inter) / float(len(sa) + len(sb) - n_inter)
+        if jac >= threshold:
+            rows.append((da, db, jac))
+    return pd.DataFrame(rows, columns=["doc_a", "doc_b", "jaccard"])
 
 
 # ---------------------------------------------------------------------------

@@ -80,7 +80,8 @@ ORDER BY doc_id
 """
 
 
-@register("doc_text_features", oracle=TEXT_FEATURES_ORACLE, headline=True, doc="token counts, quality ratios, fingerprint per doc")
+@register("doc_text_features", oracle=TEXT_FEATURES_ORACLE, headline=True, doc="token counts, quality ratios, fingerprint per doc",
+          session_conf=bytes_scaled_shuffle("documents", bytes_per_partition=1 << 20))
 def doc_text_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     t = F.col("text")
@@ -328,10 +329,25 @@ ORDER BY doc_a, doc_b
 """
 
 
+# Below this many bytes of documents parquet, near-dup detection runs as
+# ONE Python task (dedup.near_dup_pairs_single_task); at or above it, on the
+# distributed pipeline. From the crossover in NEAR_DUP_CROSSOVER_r12.json
+# (ARCHITECTURE.md §2, 4 cores): the single task won every round up to
+# 1.8 MB, the two paths' times overlapped at 2.4 MB and tied at 4.8 MB.
+NEAR_DUP_SINGLE_TASK_MAX_BYTES = 2 << 20
+
+
 @register("dedup_near_dups", oracle=NEAR_DUP_ORACLE, headline=True, doc="LSH candidates -> exact n-gram Jaccard >= 0.8")
 def dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import os
+
     docs = table(spark, sf_dir, "documents")
-    return dedup.near_dup_pairs(docs, threshold=0.8, max_bucket=None).orderBy("doc_a", "doc_b")
+    small = (
+        common.dataset_bytes(os.path.join(sf_dir, "documents.parquet"))
+        < NEAR_DUP_SINGLE_TASK_MAX_BYTES
+    )
+    near_dups = dedup.near_dup_pairs_single_task if small else dedup.near_dup_pairs
+    return near_dups(docs, threshold=0.8, max_bucket=None).orderBy("doc_a", "doc_b")
 
 
 CONTAINMENT_ORACLE = f"""

@@ -8,6 +8,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from duckdb_routing_spark.operators.common import dataset_bytes
+from duckdb_routing_spark.operators.common import literal_df  # noqa: F401  (re-export: query modules import it from here)
+
 
 @dataclass
 class QuerySpec:
@@ -416,14 +419,8 @@ def bytes_scaled_shuffle(*tables: str, bytes_per_partition: int = 64 << 20):
     benches on 1 task and scales to thousands of tasks at cluster volumes."""
 
     def conf(spark: SparkSession, sf_dir: str) -> dict:
-        total = 0
-        for t in tables:
-            p = os.path.join(sf_dir, f"{t}.parquet")
-            if os.path.isdir(p):
-                for root, _dirs, files in os.walk(p):
-                    total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-            elif os.path.exists(p):
-                total += os.path.getsize(p)
+        # a missing table walks nothing and counts 0 bytes
+        total = sum(dataset_bytes(os.path.join(sf_dir, f"{t}.parquet")) for t in tables)
         width = max(1, total // bytes_per_partition)
         return {"spark.sql.shuffle.partitions": str(width)}
 
@@ -455,9 +452,6 @@ def normalize_timestamps(df: DataFrame) -> DataFrame:
 import weakref
 
 _TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
-
-
-from duckdb_routing_spark.operators.common import literal_df  # noqa: F401  (re-export: query modules import it from here)
 
 
 def register_table_override(spark: SparkSession, sf_dir: str, name: str, df: DataFrame) -> None:
